@@ -98,8 +98,6 @@ def main() -> None:
         # <out_dir>/_lineage; rerunning after a kill recomputes only the
         # cells missing from the done-list (J5 anti-join) — the reference's
         # restart scenario (resolve_overlap_and_gap.sql:98-168)
-        import pandas as pd  # noqa: F401
-
         from resolve_overlap_and_gap_spark.lineage import (
             Lineage,
             run_stage_checkpointed,
@@ -110,13 +108,9 @@ def main() -> None:
         cells = with_cells(layer.selectExpr("cast(fid as long) fid", "geom"), res)
         lin = Lineage(spark, out_dir)
 
-        def compute(todo_rows):
-            def kernel(pdf):
-                return R._cell_kernel(pdf, cfg, res)
-
-            return todo_rows.groupBy("cell_id").applyInPandas(kernel, R.RESOLVE_SCHEMA)
-
-        out = run_stage_checkpointed(lin, "resolve", cells, compute, "resolved")
+        out = run_stage_checkpointed(lin, "resolve", cells,
+                                     lambda todo: R.resolve_cells(todo, cfg),
+                                     "resolved")
         n = out.count()
         done = lin.done_cells("resolve").count()
         print(json.dumps({"cmd": cmd, "rows": n, "cells_done": done,

@@ -15,7 +15,7 @@ one-to-one:
 | topology_snap_tolerance                     | snap_tolerance               |
 | simplify_tolerance / do_chaikins            | same (chaikins -> iterations)|
 | min_area_to_keep                            | same                         |
-| _max_rows_in_each_cell                      | same (content-balanced grid) |
+| _max_rows_in_each_cell                      | same: the polygon resolve runs on the content-balanced grid from base `res`, hot cells refined until they hold at most this many features |
 | _max_parallel_jobs                          | cluster-managed: Spark schedules cells across executors; n_buckets caps kernel group size |
 | result table + _other_intersect_id_list + _input_geo_is_valid | ResolveResult.layer (other_ids + is_valid columns) |
 | _no_cut_line_failed                         | ResolveResult.quarantined    |
@@ -56,7 +56,8 @@ class ResolveResult:
 
 
 def _cfg(snap_tolerance: float, clean: CleanInfo, utm: bool,
-         geodesic_measure: bool, max_rows_in_each_cell: int) -> EngineConfig:
+         geodesic_measure: bool, max_rows_in_each_cell: int,
+         res: int) -> EngineConfig:
     return EngineConfig(
         snap_tolerance=snap_tolerance,
         min_area_to_keep=clean.min_area_to_keep,
@@ -64,7 +65,8 @@ def _cfg(snap_tolerance: float, clean: CleanInfo, utm: bool,
         chaikins_iterations=2 if clean.do_chaikins else 0,
         utm=utm,
         geodesic_measure=geodesic_measure,
-        grid=GridConfig(max_rows_in_each_cell=max_rows_in_each_cell),
+        grid=GridConfig(base_resolution=res,
+                        max_rows_in_each_cell=max_rows_in_each_cell),
     )
 
 
@@ -97,10 +99,13 @@ def resolve_overlap_gap_run(
     compute_metrics: bool = False,
 ) -> ResolveResult:
     """The reference's main procedure, end to end: per-cell resolve (owner
-    rule, sliver merge, optional simplify+Chaikin), optional cross-cell
-    border heal, attribute layer with other_ids/is_valid, quarantine table,
-    optional before/after metrics.  With line_df, border lines join the
-    arrangement as cut lines and faces report border_line_ids (ar5)."""
+    rule, sliver merge, optional simplify+Chaikin) over the content-balanced
+    grid (base resolution `res`, cells refined until they hold at most
+    max_rows_in_each_cell features), optional cross-cell border heal,
+    attribute layer with other_ids/is_valid, quarantine table, optional
+    before/after metrics.  With line_df, border lines join the fixed-res
+    arrangement at `res` as cut lines and faces report border_line_ids
+    (ar5)."""
     clean = clean if clean is not None else CleanInfo()
     from resolve_overlap_and_gap_spark.operators.border import (
         border_gap_merge,
@@ -110,10 +115,11 @@ def resolve_overlap_gap_run(
     from resolve_overlap_and_gap_spark.operators.resolve import (
         QUARANTINE_OWNER,
         mark_valid,
-        resolve,
+        resolve_balanced,
     )
 
-    cfg = _cfg(snap_tolerance, clean, utm, geodesic_measure, max_rows_in_each_cell)
+    cfg = _cfg(snap_tolerance, clean, utm, geodesic_measure,
+               max_rows_in_each_cell, res)
     feats = polygon_df.select(F.col(pk_col).cast("long").alias("fid"),
                               F.col(geo_col).alias("geom"))
 
@@ -125,15 +131,18 @@ def resolve_overlap_gap_run(
         quarantined = pieces_all.where(F.col("owner") == QUARANTINE_OWNER)
         healed = None
     else:
-        both = resolve(feats, cfg, res=res,
-                       emit_border_gaps=heal).localCheckpoint()
+        both = resolve_balanced(feats, cfg,
+                                emit_border_gaps=heal).localCheckpoint()
         pieces = both.where(F.col("owner") >= 0)
         quarantined = both.where(F.col("owner") == QUARANTINE_OWNER)
         healed = None
         if heal:
             gaps = border_gaps_from_resolve(both)
+            # the balanced frontier may mix resolutions: piece_res=None
+            # derives them from the pieces
             healed = border_gap_merge(feats, pieces, cfg, res=res,
-                                      border_gaps=gaps, checkpoint=False)
+                                      border_gaps=gaps, checkpoint=False,
+                                      piece_res=None)
 
     per_owner = pieces.groupBy("owner").agg(
         F.sum("area").alias("area"),

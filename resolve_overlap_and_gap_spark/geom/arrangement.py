@@ -197,19 +197,13 @@ class NodingError(RuntimeError):
     Carries the pids of the still-interacting segments so callers can
     quarantine the offending features — the reference's _no_cut_line_failed
     path (function_resolve_overlap_gap_init.sql:221-232; long-line deferral
-    view_get_simplified_border_lines_function_v.sql:206-213)."""
+    view_get_simplified_border_lines_function_v.sql:206-213).  A cell-tagged
+    noding also carries their (cell_index, pid) pairs."""
 
-    def __init__(self, pids: list[int]):
+    def __init__(self, pids: list[int],
+                 pairs: list[tuple[int, int]] | None = None):
         super().__init__(f"noding did not converge; offending pids: {pids}")
         self.pids = pids
-
-
-class NodingErrorCells(RuntimeError):
-    """Cell-tagged variant of NodingError: carries (cell_index, pid) pairs
-    of the still-interacting segments of a batched multi-cell noding."""
-
-    def __init__(self, pairs: list[tuple[int, int]]):
-        super().__init__(f"noding did not converge; offending (cell, pid): {pairs}")
         self.pairs = pairs
 
 
@@ -352,11 +346,10 @@ def _node_segments_impl(S: np.ndarray, pid: np.ndarray, wt: np.ndarray,
         ey = np.concatenate(ev_y)
         if it == max_iter:
             bad = np.unique(seg)
-            if cell is not None:
-                raise NodingErrorCells(
-                    sorted({(int(c), int(p))
-                            for c, p in zip(cell[bad], pid[bad])}))
-            raise NodingError(sorted({int(p) for p in pid[bad]}))
+            raise NodingError(
+                sorted({int(p) for p in pid[bad]}),
+                None if cell is None else sorted(
+                    {(int(c), int(p)) for c, p in zip(cell[bad], pid[bad])}))
         # dedup events and order within each segment by L1 distance from
         # the segment start (ties by coordinate — deterministic)
         dist = np.abs(ex - S[seg, 0]) + np.abs(ey - S[seg, 1])
@@ -1184,76 +1177,32 @@ def overlay(polys: list[tuple[int, list[np.ndarray]]],
             cut_lines: list[tuple[int, np.ndarray]] | None = None,
             noding_max_iter: int = 8,
             quarantine: list[int] | None = None):
-    """Full overlay: snapped int rings in, labeled faces out.
+    """Full overlay of one cell: snapped int rings in, labeled faces out —
+    overlay_cells over a single item (see there for every option).
 
     with_adjacency=True additionally returns a dict
     (face_idx_a, face_idx_b) -> shared boundary length (grid units, a<b;
     -1 stands for the outside/unassigned region) — the input to sliver
     merging (ST_RemEdgeNewFace semantics).
 
-    simplify_tol_units > 0 simplifies shared border chains (frozen
-    endpoints, frozen near frozen_box) BEFORE face extraction, so output
-    faces still partition exactly (scenario-(b) simplify+Chaikin path).
-
-    quarantine: pass a list to enable the reference's failed-feature path
-    (_no_cut_line_failed, function_resolve_overlap_gap_init.sql:221-232):
-    when noding does not converge within noding_max_iter rounds the
-    offending feature pids are APPENDED to the list, their segments removed,
-    and the overlay retried on the rest — the cell completes, the caller
-    records the quarantined features.  Without it NodingError propagates."""
-    S, pid, wt = rings_to_segments(polys)
-    if cut_lines:
-        Sl, pl, wl = lines_to_segments(cut_lines)
-        S = np.vstack([S, Sl]) if len(S) else Sl
-        pid = np.concatenate([pid, pl])
-        wt = np.concatenate([wt, wl])
-    if len(S) == 0:
-        return ([], {}) if with_adjacency else []
-    if simplify_tol_units > 0:
-        S, pid, wt = simplify_segments(S, pid, wt, simplify_tol_units,
-                                       chaikin_iters, frozen_box)
-    while True:
-        try:
-            S, pid, wt = node_segments(S, pid, wt, max_iter=noding_max_iter)
-            break
-        except NodingError as e:
-            # UNIVERSE (-1) and cut-line pseudo-ids are never quarantined
-            bad = [p for p in e.pids if p >= 0]
-            if quarantine is None or not bad:
-                raise
-            quarantine.extend(b for b in bad if b not in quarantine)
-            keep = ~np.isin(pid, np.asarray(bad, dtype=np.int64))
-            S, pid, wt = S[keep], pid[keep], wt[keep]
-            if len(S) == 0:
-                return ([], {}) if with_adjacency else []
-    arr = Arrangement(S, pid, wt)
-    winding = label_walks(arr)
-    face_list, walk_face, adj = _assemble_faces(
-        arr, winding, range(len(arr.walks)), range(len(arr.edges)),
-        with_adjacency)
-    if cut_lines:
-        per_face_lines: dict[int, set[int]] = defaultdict(set)
-        for eid, net in enumerate(arr.net):
-            lids = [CUT_LINE_BASE - p for p in net if p <= CUT_LINE_BASE]
-            if not lids:
-                continue
-            for h in (2 * eid, 2 * eid + 1):
-                fidx = walk_face.get(arr.walk_of[h], -1)
-                if fidx >= 0:
-                    per_face_lines[fidx].update(lids)
-        for fidx, lids in per_face_lines.items():
-            face_list[fidx].lines = sorted(lids)
-    if not with_adjacency:
-        return face_list
-    return face_list, adj
+    quarantine: pass a list to receive the pids whose noding failed (the
+    reference's _no_cut_line_failed path); without it NodingError
+    propagates."""
+    q_of = None if quarantine is None else {}
+    out = overlay_cells([(0, polys, frozen_box, cut_lines)], with_adjacency,
+                        noding_max_iter, q_of, simplify_tol_units,
+                        chaikin_iters)
+    if quarantine is not None:
+        quarantine.extend(p for p in q_of.get(0, []) if p not in quarantine)
+    return out[0]
 
 
 def _assemble_faces(arr: Arrangement, winding, walk_ids, eids,
                     with_adjacency: bool):
     """Face assembly over a subset of walks/edges — the whole arrangement
-    (overlay) or one cell of a batched arrangement (overlay_cells).  Walk
-    and edge ids must come in ascending order; every float accumulation
-    and tie-break below matches the historical overlay() tail verbatim."""
+    (a lone cell) or one cell of a cell-tagged one (overlay_cells).  Walk
+    and edge ids must come in ascending order, so every float accumulation
+    and tie-break below is the same whichever way a cell was run."""
     pos = [i for i in walk_ids if arr.walk_area2[i] > 0]
     neg = [i for i in walk_ids if arr.walk_area2[i] < 0]
     faces = {i: Face(shell=arr.walk_coords(i), winding=winding[i],
@@ -1314,30 +1263,58 @@ def _assemble_faces(arr: Arrangement, winding, walk_ids, eids,
     return face_list, walk_face, adj
 
 
-def overlay_cells(items: list[tuple[int, list[tuple[int, list[np.ndarray]]]]],
-                  with_adjacency: bool = False,
+def overlay_cells(items: list[tuple], with_adjacency: bool = False,
                   noding_max_iter: int = 8,
-                  quarantine_of: dict | None = None) -> dict:
+                  quarantine_of: dict | None = None,
+                  simplify_tol_units: float = 0.0,
+                  chaikin_iters: int = 0) -> dict:
     """Batched overlay of INDEPENDENT cells: {key: faces} (or
     {key: (faces, adj)}) computed in ONE noding/DCEL/labeling pass over all
     cells of a kernel bucket instead of one full machinery invocation per
     cell — the multi_union_faces batching idea applied to the per-cell
-    resolve/detect overlays.
+    resolve/detect overlays.  The only arrangement driver: overlay() is
+    this function over one item.
+
+    items: (key, polys[, frozen_box[, cut_lines]]) per cell.
+      cut_lines: [(line_id, int coords)] attribute lines that split faces
+        without changing coverage; each face lists the ids of the lines on
+        its border in Face.lines (J7, lineage-carried).
+      frozen_box: border chains touching this box are never simplified.
+
+    simplify_tol_units > 0 simplifies each item's shared border chains
+    (frozen endpoints, frozen near frozen_box, chaikin_iters rounds of
+    acute-angle smoothing) BEFORE face extraction, so output faces still
+    partition exactly (scenario-(b) simplify+Chaikin path).
 
     EXACTNESS: coordinates are untouched (no translation); every phase is
     keyed by the cell tag (candidate pairs, edge and node identity, face
     walks, component ray-casts), so per-cell results are identical to
-    overlay(polys, ...) run cell by cell — including float accumulation
-    orders (pinned by tests/test_overlay_cells.py).
+    running each cell alone — including float accumulation orders (pinned
+    by tests/test_overlay_cells.py).
 
-    quarantine_of: dict to receive {key: [pids]} whose noding failed
-    (the reference's _no_cut_line_failed path), matching overlay()'s
-    per-cell quarantine semantics."""
-    empty = ([], {}) if with_adjacency else []
-    out = {key: empty for key, _ in items}
+    quarantine_of: pass a dict to enable the reference's failed-feature
+    path (_no_cut_line_failed, function_resolve_overlap_gap_init.sql:
+    221-232): when noding does not converge within noding_max_iter rounds
+    the offending feature pids are appended to quarantine_of[key], their
+    segments removed, and the noding retried on the rest — the cell
+    completes, the caller records the quarantined features.  Without it
+    NodingError propagates."""
+    out = {it[0]: ([], {}) if with_adjacency else [] for it in items}
     Ss, Ps, Ws, Cs = [], [], [], []
-    for ci, (key, polys) in enumerate(items):
+    has_lines = False
+    for ci, (key, polys, *opt) in enumerate(items):
+        frozen_box = opt[0] if opt else None
+        cut_lines = opt[1] if len(opt) > 1 else None
         S, P, W = rings_to_segments(polys)
+        if cut_lines:
+            has_lines = True
+            Sl, Pl, Wl = lines_to_segments(cut_lines)
+            S = np.vstack([S, Sl]) if len(S) else Sl
+            P = np.concatenate([P, Pl])
+            W = np.concatenate([W, Wl])
+        if len(S) and simplify_tol_units > 0:
+            S, P, W = simplify_segments(S, P, W, simplify_tol_units,
+                                        chaikin_iters, frozen_box)
         if len(S):
             Ss.append(S); Ps.append(P); Ws.append(W)
             Cs.append(np.full(len(S), ci, np.int64))
@@ -1351,8 +1328,8 @@ def overlay_cells(items: list[tuple[int, list[tuple[int, list[np.ndarray]]]]],
         try:
             S2, P2, W2, C2 = _node_segments_impl(S, P, W, C, noding_max_iter)
             break
-        except NodingErrorCells as e:
-            # UNIVERSE (-1) is never quarantined — same rule as overlay()
+        except NodingError as e:
+            # UNIVERSE (-1) and cut-line pseudo-ids are never quarantined
             bad = [(c, p) for c, p in e.pairs if p >= 0]
             if quarantine_of is None or not bad:
                 raise
@@ -1366,9 +1343,24 @@ def overlay_cells(items: list[tuple[int, list[tuple[int, list[np.ndarray]]]]],
             S, P, W, C = S[~drop], P[~drop], W[~drop], C[~drop]
             if not len(S):
                 return out
-    arr = Arrangement(S2, P2, W2, cell=C2)
+    # a lone cell needs no tag (and keeps label_walks' small-input path)
+    arr = Arrangement(S2, P2, W2, cell=C2 if len(items) > 1 else None)
     winding = label_walks(arr)
+    for ci, wids, eids in _cell_groups(arr):
+        faces, walk_face, adj = _assemble_faces(arr, winding, wids, eids,
+                                                with_adjacency)
+        if has_lines:
+            _attach_lines(arr, faces, walk_face, eids)
+        out[items[ci][0]] = (faces, adj) if with_adjacency else faces
+    return out
+
+
+def _cell_groups(arr: Arrangement):
+    """(cell index, ascending walk ids, ascending edge ids) per cell of a
+    cell-tagged arrangement; a single group 0 for an untagged one."""
     edge_cell = arr.edge_cell
+    if edge_cell is None:
+        return [(0, range(len(arr.walks)), range(len(arr.edges)))]
     walk_cell = np.asarray(
         [int(edge_cell[int(w[0]) // 2]) for w in arr.walks], np.int64)
     worder = np.argsort(walk_cell, kind="stable")
@@ -1377,12 +1369,25 @@ def overlay_cells(items: list[tuple[int, list[tuple[int, list[np.ndarray]]]]],
     wend = np.r_[wbrk[1:], len(wsorted)]
     eorder = np.argsort(edge_cell, kind="stable") if len(edge_cell) else edge_cell
     esorted = edge_cell[eorder] if len(edge_cell) else edge_cell
+    groups = []
     for s, e in zip(wbrk, wend):
         ci = int(wsorted[s])
-        wids = np.sort(worder[s:e])
         el, eh = np.searchsorted(esorted, ci), np.searchsorted(esorted, ci, "right")
-        eids = np.sort(eorder[el:eh])
-        faces, _, adj = _assemble_faces(arr, winding, wids.tolist(),
-                                        eids.tolist(), with_adjacency)
-        out[items[ci][0]] = (faces, adj) if with_adjacency else faces
-    return out
+        groups.append((ci, np.sort(worder[s:e]).tolist(),
+                       np.sort(eorder[el:eh]).tolist()))
+    return groups
+
+
+def _attach_lines(arr: Arrangement, faces: list[Face], walk_face: dict, eids):
+    """Face.lines = sorted ids of the cut lines on each face's border."""
+    per_face_lines: dict[int, set[int]] = defaultdict(set)
+    for eid in eids:
+        lids = [CUT_LINE_BASE - p for p in arr.net[eid] if p <= CUT_LINE_BASE]
+        if not lids:
+            continue
+        for h in (2 * eid, 2 * eid + 1):
+            fidx = walk_face.get(arr.walk_of[h], -1)
+            if fidx >= 0:
+                per_face_lines[fidx].update(lids)
+    for fidx, lids in per_face_lines.items():
+        faces[fidx].lines = sorted(lids)

@@ -137,12 +137,7 @@ def run_healed_checkpointed(lin: Lineage, features: DataFrame,
     cells = with_cells(feats, res)
 
     def compute(todo_rows: DataFrame) -> DataFrame:
-        import pandas as pd
-
-        def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            return R._cell_kernel(pdf, cfg, res, emit_border_gaps=True)
-
-        return todo_rows.groupBy("cell_id").applyInPandas(kernel, R.RESOLVE_SCHEMA)
+        return R.resolve_cells(todo_rows, cfg, emit_border_gaps=True)
 
     both = run_stage_checkpointed(lin, "resolve", cells, compute, "resolved")
     if not lin.has_stage("healed"):

@@ -511,99 +511,76 @@ RESOLVE_LINES_SCHEMA = T.StructType([
 
 
 def resolve_with_lines(polygons: DataFrame, lines: DataFrame, cfg, res: int = 8,
-                       n_buckets: int = 256) -> DataFrame:
+                       n_buckets: int | None = None) -> DataFrame:
     """The ar5 scenario (polygon layer + attribute-bearing border lines,
     resolve_overlap_and_gap.sql:202-222): lines participate in the per-cell
     arrangement as CUT LINES — they split faces without affecting coverage —
     and every output face reports the line ids on its border (J7,
     lineage-carried). One extra covering-cell join for the line layer."""
-    from pyspark.sql import functions as FF
-
-    from resolve_overlap_and_gap_spark import grid as G
+    from resolve_overlap_and_gap_spark.geom.arrangement import overlay_cells
     from resolve_overlap_and_gap_spark.operators.overlap_gap import (
-        UNIVERSE, _clip_to_cell, _snap_polys, with_cells,
+        UNIVERSE, _cell_prep, default_cell_buckets, with_cells,
     )
-    from resolve_overlap_and_gap_spark.geom.arrangement import overlay
-    from resolve_overlap_and_gap_spark.geom.core import clip_ring_to_box
+    from resolve_overlap_and_gap_spark.operators.resolve import (
+        QUARANTINE_OWNER, _quarantine_geoms,
+    )
 
     g = cfg.snap_tolerance
-    feats = polygons.select(
-        FF.col("fid").cast("long").alias("fid"), "geom"
-    )
+    if n_buckets is None:
+        n_buckets = default_cell_buckets(polygons)
+    feats = polygons.select(F.col("fid").cast("long").alias("fid"), "geom")
     pcells = with_cells(feats, res).select(
-        "cell_id", FF.col("fid"), FF.col("geom"), FF.lit("poly").alias("kind")
+        "cell_id", F.col("fid"), F.col("geom"), F.lit("poly").alias("kind")
     )
-    lfeats = lines.select(FF.col("lid").cast("long").alias("fid"), "geom")
+    lfeats = lines.select(F.col("lid").cast("long").alias("fid"), "geom")
     lcells = with_cells(lfeats, res).select(
-        "cell_id", FF.col("fid"), FF.col("geom"), FF.lit("line").alias("kind")
+        "cell_id", F.col("fid"), F.col("geom"), F.lit("line").alias("kind")
     )
     cells = pcells.unionByName(lcells).withColumn(
-        "bucket", FF.pmod(FF.hash("cell_id"), FF.lit(n_buckets))
+        "bucket", F.pmod(F.hash("cell_id"), F.lit(n_buckets))
     )
 
-    def one_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        cell = int(pdf["cell_id"].iloc[0])
-        xmin, ymin, xmax, ymax = G.cell_bounds_np(np.array([cell], dtype=np.int64))
-        cx0 = int(np.floor(xmin[0] / g + 0.5)); cy0 = int(np.floor(ymin[0] / g + 0.5))
-        cx1 = int(np.floor(xmax[0] / g + 0.5)); cy1 = int(np.floor(ymax[0] / g + 0.5))
-        polys, cut = [], []
-        for kind, fid, geom in zip(pdf["kind"], pdf["fid"], pdf["geom"]):
-            if kind == "poly":
-                for pid2, rings in _snap_polys(int(fid), geom, g):
-                    clipped = _clip_to_cell(rings, cx0, cy0, cx1, cy1)
-                    if clipped:
-                        polys.append((pid2, clipped))
-            else:
-                k2, coords = wkb.load(bytes(geom))
-                if k2 != "linestring":
-                    continue
-                c = np.floor(np.asarray(coords, np.float64) / g + 0.5)
-                # clamp into the cell box (cut lines need no exact clip —
-                # out-of-cell parts are re-cut in their own cells)
-                c[:, 0] = np.clip(c[:, 0], cx0, cx1)
-                c[:, 1] = np.clip(c[:, 1], cy0, cy1)
-                cut.append((int(fid), c.astype(np.int64)))
-        box = np.array([[cx0, cy0], [cx1, cy0], [cx1, cy1], [cx0, cy1]], np.int64)
-        polys.append((UNIVERSE, [box]))
+    def cut_lines(sub: pd.DataFrame, box: tuple) -> list[tuple[int, np.ndarray]]:
+        cx0, cy0, cx1, cy1 = box
+        cut = []
+        for fid, geom in zip(sub["fid"], sub["geom"]):
+            k2, coords = wkb.load(bytes(geom))
+            if k2 != "linestring":
+                continue
+            c = np.floor(np.asarray(coords, np.float64) / g + 0.5)
+            # clamp into the cell box (cut lines need no exact clip —
+            # out-of-cell parts are re-cut in their own cells)
+            c[:, 0] = np.clip(c[:, 0], cx0, cx1)
+            c[:, 1] = np.clip(c[:, 1], cy0, cy1)
+            cut.append((int(fid), c.astype(np.int64)))
+        return cut
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        items = []
+        for cell, sub in pdf.groupby("cell_id", sort=True):
+            is_poly = sub["kind"] == "poly"
+            box, polys = _cell_prep(int(cell), sub[is_poly], g)
+            items.append((int(cell), polys, None, cut_lines(sub[~is_poly], box)))
         # quarantine non-convergent features instead of failing the job —
         # the reference's line-scenario failure table (_no_cut_line_failed,
         # function_resolve_overlap_gap_init.sql:221-232) maps to
         # ResolveResult.quarantined via the QUARANTINE_OWNER rows below
-        quarantined: list[int] = []
-        faces = overlay(polys, cut_lines=cut,
-                        noding_max_iter=cfg.noding_max_iter,
-                        quarantine=quarantined)
+        q_of: dict = {}
+        faces_of = overlay_cells(items, noding_max_iter=cfg.noding_max_iter,
+                                 quarantine_of=q_of)
         rows = []
-        if quarantined:
-            from resolve_overlap_and_gap_spark.operators.resolve import (
-                QUARANTINE_OWNER,
-            )
-
-            by_fid: dict[int, list] = {}
-            for pid2, rings in polys:
-                if pid2 in quarantined:
-                    by_fid.setdefault(pid2, []).append(
-                        [r.astype(np.float64) * g for r in rings])
-            for fid in sorted(by_fid):
-                rows.append((cell, QUARANTINE_OWNER, [fid], [], 0.0,
-                             wkb.dump_multipolygon(by_fid[fid])))
-        for f in faces:
-            cover = sorted(p for p in f.cover if p != UNIVERSE)
-            if not cover:
-                continue
-            mp = [[f.shell.astype(np.float64) * g]
-                  + [h.astype(np.float64) * g for h in f.holes]]
-            rows.append((cell, cover[0], cover[1:], f.lines,
-                         f.area2 / 2.0 * g * g, wkb.dump_multipolygon(mp)))
-        return pd.DataFrame(rows, columns=[
-            "cell_id", "owner", "other_ids", "border_line_ids", "area", "geom"])
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = [one_cell(sub) for _, sub in pdf.groupby("cell_id", sort=True)]
-        parts = [p for p in parts if len(p)]  # pandas-3: no all-NA concat
-        if not parts:
-            return pd.DataFrame(columns=[f.name for f in RESOLVE_LINES_SCHEMA])
-        return pd.concat(parts, ignore_index=True)
+        for cell, polys, _, _ in items:
+            for fid, gq in _quarantine_geoms(polys, q_of.get(cell, []), g):
+                rows.append((cell, QUARANTINE_OWNER, [fid], [], 0.0, gq))
+            for f in faces_of[cell]:
+                cover = sorted(p for p in f.cover if p != UNIVERSE)
+                if not cover:
+                    continue
+                mp = [[f.shell.astype(np.float64) * g]
+                      + [h.astype(np.float64) * g for h in f.holes]]
+                rows.append((cell, cover[0], cover[1:], f.lines,
+                             f.area2 / 2.0 * g * g, wkb.dump_multipolygon(mp)))
+        return pd.DataFrame(rows, columns=[f.name for f in RESOLVE_LINES_SCHEMA])
 
     return cells.groupBy("bucket").applyInPandas(kernel, RESOLVE_LINES_SCHEMA)
 

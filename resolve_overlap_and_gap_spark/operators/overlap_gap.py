@@ -24,8 +24,6 @@ cells contributes per-cell pieces, like the reference's per-cell results).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,7 +33,7 @@ from pyspark.sql import types as T
 from resolve_overlap_and_gap_spark import grid
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay
+from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay_cells
 from resolve_overlap_and_gap_spark.geom.core import clip_ring_to_box, ring_area2
 
 UNIVERSE = -1  # poly id of the cell box in the overlay
@@ -112,11 +110,15 @@ def wkb_bounds(geoms: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
-def with_cells(features: DataFrame, res: int, geom_col: str = "geom") -> DataFrame:
-    """Feature -> covering cells (J1 key generation for real geometries)."""
+def _with_bounds(features: DataFrame, geom_col: str = "geom") -> DataFrame:
+    """+ (xmin, ymin, xmax, ymax) of each geometry."""
     b = features.withColumn("_b", wkb_bounds(F.col(geom_col)))
-    b = b.select("*", "_b.xmin", "_b.ymin", "_b.xmax", "_b.ymax").drop("_b")
-    return b.withColumn(
+    return b.select("*", "_b.xmin", "_b.ymin", "_b.xmax", "_b.ymax").drop("_b")
+
+
+def _cover_at(bounded: DataFrame, res: int) -> DataFrame:
+    """Bounded rows -> one row per covering cell at `res` (cell_id)."""
+    return bounded.withColumn(
         "cell_id",
         F.explode(
             grid.covering_cells_col(
@@ -124,6 +126,11 @@ def with_cells(features: DataFrame, res: int, geom_col: str = "geom") -> DataFra
             )
         ),
     )
+
+
+def with_cells(features: DataFrame, res: int, geom_col: str = "geom") -> DataFrame:
+    """Feature -> covering cells (J1 key generation for real geometries)."""
+    return _cover_at(_with_bounds(features, geom_col), res)
 
 
 # ------------------------------------------------------------ per-cell kernel
@@ -160,10 +167,10 @@ def _clip_to_cell(rings: list[np.ndarray], cxmin, cymin, cxmax, cymax) -> list[n
     return out
 
 
-def _cell_prep(pdf: pd.DataFrame, g: float):
-    """Snap + clip one cell's features and add the UNIVERSE cell box —
-    the shared front half of the per-cell and batched overlay kernels."""
-    cell = int(pdf["cell_id"].iloc[0])
+def _cell_prep(cell: int, pdf: pd.DataFrame, g: float):
+    """Snap + clip pdf's (fid, geom) features to `cell` and add the
+    UNIVERSE cell box — the front half of every per-cell overlay kernel.
+    -> (cell box in grid units, polys)"""
     xmin, ymin, xmax, ymax = grid.cell_bounds_np(np.array([cell], dtype=np.int64))
     cxmin = int(np.floor(xmin[0] / g + 0.5)); cymin = int(np.floor(ymin[0] / g + 0.5))
     cxmax = int(np.floor(xmax[0] / g + 0.5)); cymax = int(np.floor(ymax[0] / g + 0.5))
@@ -176,35 +183,7 @@ def _cell_prep(pdf: pd.DataFrame, g: float):
     box = np.array([[cxmin, cymin], [cxmax, cymin], [cxmax, cymax], [cxmin, cymax]],
                    dtype=np.int64)
     polys.append((UNIVERSE, [box]))
-    return cell, (cxmin, cymin, cxmax, cymax), polys
-
-
-def _cell_faces(pdf: pd.DataFrame, cfg: EngineConfig, res: int,
-                quarantine: list[int] | None = None) -> tuple[int, list[Face]] | None:
-    """Shared kernel: snap + clip all features of one cell, overlay with the
-    cell box as UNIVERSE. Returns (cell_id, faces).  quarantine: list to
-    receive pids whose noding failed to converge (the overlay retries
-    without them — reference _no_cut_line_failed semantics)."""
-    g = cfg.snap_tolerance
-    cell = int(pdf["cell_id"].iloc[0])
-    xmin, ymin, xmax, ymax = grid.cell_bounds_np(np.array([cell], dtype=np.int64))
-    # cell box in grid units (floor/ceil to int; borders grid-aligned)
-    cxmin = int(np.floor(xmin[0] / g + 0.5))
-    cymin = int(np.floor(ymin[0] / g + 0.5))
-    cxmax = int(np.floor(xmax[0] / g + 0.5))
-    cymax = int(np.floor(ymax[0] / g + 0.5))
-    polys: list[tuple[int, list[np.ndarray]]] = []
-    for fid, geom in zip(pdf["fid"], pdf["geom"]):
-        for pid, rings in _snap_polys(int(fid), geom, g):
-            clipped = _clip_to_cell(rings, cxmin, cymin, cxmax, cymax)
-            if clipped:
-                polys.append((pid, clipped))
-    box = np.array(
-        [[cxmin, cymin], [cxmax, cymin], [cxmax, cymax], [cxmin, cymax]], dtype=np.int64
-    )
-    polys.append((UNIVERSE, [box]))
-    return cell, overlay(polys, noding_max_iter=cfg.noding_max_iter,
-                         quarantine=quarantine)
+    return (cxmin, cymin, cxmax, cymax), polys
 
 
 DETECT_SCHEMA = T.StructType([
@@ -218,6 +197,28 @@ DETECT_SCHEMA = T.StructType([
 ])
 
 
+def detect_cells(cells: DataFrame, cfg: EngineConfig, with_geom: bool = True,
+                 n_buckets: int | None = None) -> DataFrame:
+    """The detect kernel stage over an ASSIGNED cell frame (cell_id, fid,
+    geom) — fixed-res (with_cells) or content-balanced
+    (assign_balanced_cells): the kernel is resolution-agnostic (cell
+    bounds derive from the Morton id).
+
+    Cells are processed in hashed BUCKETS of n_buckets groups: one Arrow
+    round-trip covers many cells (per-cell groups would pay the
+    applyInPandas overhead thousands of times); AQE still splits skewed
+    buckets."""
+    if n_buckets is None:
+        n_buckets = default_cell_buckets(cells)
+    bucketed = cells.select("cell_id", "fid", "geom").withColumn(
+        "bucket", F.pmod(F.hash("cell_id"), F.lit(n_buckets)))
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _detect_bucket(pdf, cfg, with_geom)
+
+    return bucketed.groupBy("bucket").applyInPandas(kernel, DETECT_SCHEMA)
+
+
 def detect_all(features: DataFrame, cfg: EngineConfig, res: int = 6,
                geom_col: str = "geom", id_col: str = "fid",
                n_buckets: int | None = None,
@@ -225,47 +226,28 @@ def detect_all(features: DataFrame, cfg: EngineConfig, res: int = 6,
     """One-pass detection: per cell, ONE overlay yields both overlap rows
     (per feature pair, J2 semantics) and gap rows (uncovered faces,
     ST_Difference(cell, union) semantics). The reference needs three scans
-    per cell for the same outputs (clip, self-join, difference).
-
-    Cells are processed in hashed BUCKETS of n_buckets groups: one Arrow
-    round-trip covers many cells (per-cell groups would pay the
-    applyInPandas overhead thousands of times); AQE still splits skewed
-    buckets. The kernel loops cells inside the batch."""
-    g = cfg.snap_tolerance
-    if n_buckets is None:
-        n_buckets = default_cell_buckets(features)
+    per cell for the same outputs (clip, self-join, difference)."""
     feats = features.select(
         F.col(id_col).cast("long").alias("fid"), F.col(geom_col).alias("geom")
     )
-    cells = with_cells(feats, res).withColumn(
-        "bucket", F.pmod(F.hash("cell_id"), F.lit(n_buckets))
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _detect_bucket(pdf, cfg, g, with_geom)
-
-    return cells.groupBy("bucket").applyInPandas(kernel, DETECT_SCHEMA)
+    return detect_cells(with_cells(feats, res), cfg, with_geom, n_buckets)
 
 
-def _detect_bucket(pdf: pd.DataFrame, cfg: EngineConfig, g: float,
+def _detect_bucket(pdf: pd.DataFrame, cfg: EngineConfig,
                    with_geom: bool = True) -> pd.DataFrame:
-    """Batched detect kernel: ONE noding/DCEL/labeling pass over every cell
-    of the bucket (overlay_cells) — exactly equal to per-cell overlays."""
-    from resolve_overlap_and_gap_spark.geom.arrangement import overlay_cells
-
-    preps = []
-    subs = []
-    for _, sub in pdf.groupby("cell_id", sort=True):
-        cell, box, polys = _cell_prep(sub, g)
-        preps.append((cell, polys))
-        subs.append((cell, box, sub))
+    """The detect kernel: ONE noding/DCEL/labeling pass over every cell of
+    the bucket (overlay_cells) — exactly equal to per-cell overlays."""
+    g = cfg.snap_tolerance
+    subs = [(int(cell), sub, *_cell_prep(int(cell), sub, g))
+            for cell, sub in pdf.groupby("cell_id", sort=True)]
     q_of: dict = {}
-    faces_of = overlay_cells(preps, noding_max_iter=cfg.noding_max_iter,
+    faces_of = overlay_cells([(cell, polys) for cell, _, _, polys in subs],
+                             noding_max_iter=cfg.noding_max_iter,
                              quarantine_of=q_of)
     parts = [
         _detect_rows(cell, box, faces_of[cell],
                      sorted(q_of.get(cell, [])), sub, g, with_geom)
-        for cell, box, sub in subs
+        for cell, sub, box, _ in subs
     ]
     parts = [p for p in parts if len(p)]  # pandas-3: no all-NA concat
     if not parts:
@@ -273,17 +255,6 @@ def _detect_bucket(pdf: pd.DataFrame, cfg: EngineConfig, g: float,
             columns=["cell_id", "kind", "id_a", "id_b", "area",
                      "touches_border", "geom"])
     return pd.concat(parts, ignore_index=True)
-
-
-def _detect_one_cell(pdf: pd.DataFrame, cfg: EngineConfig, res: int, g: float,
-                     with_geom: bool = True) -> pd.DataFrame:
-    quarantined: list[int] = []
-    cell, faces = _cell_faces(pdf, cfg, res, quarantine=quarantined)
-    xmin, ymin, xmax, ymax = grid.cell_bounds_np(np.array([cell], dtype=np.int64))
-    cxmin = int(np.floor(xmin[0] / g + 0.5)); cymin = int(np.floor(ymin[0] / g + 0.5))
-    cxmax = int(np.floor(xmax[0] / g + 0.5)); cymax = int(np.floor(ymax[0] / g + 0.5))
-    return _detect_rows(cell, (cxmin, cymin, cxmax, cymax), faces,
-                        quarantined, pdf, g, with_geom)
 
 
 def _detect_rows(cell: int, box: tuple, faces, quarantined, pdf: pd.DataFrame,
@@ -333,8 +304,6 @@ def _detect_rows(cell: int, box: tuple, faces, quarantined, pdf: pd.DataFrame,
     )
 
 
-
-
 def assign_balanced_cells(features: DataFrame, cfg: EngineConfig,
                           geom_col: str = "geom", id_col: str = "fid") -> DataFrame:
     """Assign features to the content-balanced (mixed-resolution) cell
@@ -362,8 +331,7 @@ def assign_balanced_cells(features: DataFrame, cfg: EngineConfig,
     feats = features.select(
         F.col(id_col).cast("long").alias("fid"), F.col(geom_col).alias("geom")
     )
-    b = feats.withColumn("_b", wkb_bounds(F.col("geom")))
-    b = b.select("*", "_b.xmin", "_b.ymin", "_b.xmax", "_b.ymax").drop("_b")
+    b = _with_bounds(feats)
     b = b.withColumn("cx", (F.col("xmin") + F.col("xmax")) / 2).withColumn(
         "cy", (F.col("ymin") + F.col("ymax")) / 2
     )
@@ -373,20 +341,10 @@ def assign_balanced_cells(features: DataFrame, cfg: EngineConfig,
         cfg.grid.max_rows_in_each_cell, lon="cx", lat="cy", with_hot=True,
     )
 
-    def cover_at(df: DataFrame, r: int) -> DataFrame:
-        return df.withColumn(
-            "cell_id",
-            F.explode(
-                grid.covering_cells_col(
-                    F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"), r
-                )
-            ),
-        )
-
     zmask = (1 << grid.RES_SHIFT) - 1
     parts: list[DataFrame] = []
     r = cfg.grid.base_resolution
-    cover = cover_at(b, r)
+    cover = _cover_at(b, r)
     while True:
         hot = hot_by_res.get(r)
         if hot is None:
@@ -395,7 +353,7 @@ def assign_balanced_cells(features: DataFrame, cfg: EngineConfig,
         parts.append(cover.join(hot, "cell_id", "left_anti"))
         desc = (cover.join(hot, "cell_id", "left_semi")
                 .dropDuplicates(["fid"]).drop("cell_id"))
-        child_cover = cover_at(desc, r + 1)
+        child_cover = _cover_at(desc, r + 1)
         parent_id = F.lit(r << grid.RES_SHIFT).cast("long").bitwiseOR(
             F.shiftright(F.col("cell_id").bitwiseAND(F.lit(zmask)), 2)
         )
@@ -433,30 +391,6 @@ def detect_all_balanced(features: DataFrame, cfg: EngineConfig,
     before any cell job, so a pipeline running detect + resolve on the
     same layer should pass the same (ideally checkpointed) assignment to
     both instead of re-deriving the frontier twice."""
-    g = cfg.snap_tolerance
-    if n_buckets is None:
-        n_buckets = default_cell_buckets(features)
     if assigned is None:
         assigned = assign_balanced_cells(features, cfg, geom_col, id_col)
-    cells = assigned.withColumn("bucket", F.pmod(F.hash("cell_id"), F.lit(n_buckets)))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # the kernel is resolution-agnostic (cell bounds derive from the
-        # Morton id), so mixed-resolution balanced cells batch the same way
-        return _detect_bucket(pdf, cfg, g, with_geom)
-
-    return cells.groupBy("bucket").applyInPandas(kernel, DETECT_SCHEMA)
-
-
-def detect(features: DataFrame, cfg: EngineConfig, res: int = 6,
-           geom_col: str = "geom", id_col: str = "fid") -> tuple[DataFrame, DataFrame]:
-    """-> (overlaps, gaps) as separate DataFrames (cache detect_all() first
-    if you consume both)."""
-    allr = detect_all(features, cfg, res, geom_col, id_col)
-    overlaps = allr.where(F.col("kind") == "overlap").select(
-        "cell_id", "id_a", "id_b", "area", "geom"
-    )
-    gaps = allr.where(F.col("kind") == "gap").select(
-        "cell_id", "area", "touches_border", "geom"
-    )
-    return overlaps, gaps
+    return detect_cells(assigned, cfg, with_geom, n_buckets)

@@ -17,9 +17,9 @@ phase-structured instead of lock-negotiated (SURVEY.md §3.1):
   5. output            — one row per (cell, owner): multipolygon, area,
      _other_intersect_id_list
 
-Cross-cell heal (merging owner pieces across grid borders — job types 4/5)
-is a planned phase; v1 emits per-cell pieces that tile exactly (cell borders
-are snap-grid aligned).
+Per-cell pieces tile exactly (cell borders are snap-grid aligned); the
+cross-cell heal that merges them across grid borders (job types 4/5) is
+border.border_gap_merge.
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ from pyspark.sql import types as T
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import (
-    overlay,
     overlay_cells,
     ring_is_valid,
 )
@@ -45,11 +44,9 @@ from resolve_overlap_and_gap_spark.operators.border import (
 from resolve_overlap_and_gap_spark.operators.overlap_gap import (
     UNIVERSE,
     _cell_prep,
-    _clip_to_cell,
-    _snap_polys,
+    default_cell_buckets,
     with_cells,
 )
-from resolve_overlap_and_gap_spark import grid
 
 
 @F.pandas_udf(T.BooleanType())
@@ -194,36 +191,11 @@ def face_measure_areas(faces, g: float, cfg: EngineConfig) -> tuple[list[float],
     return [float(f.area2) for f in faces], 2.0 * cfg.min_area_to_keep / (g * g)
 
 
-def _cell_kernel(pdf: pd.DataFrame, cfg: EngineConfig, res: int,
-                 emit_border_gaps: bool = False,
-                 with_geom: bool = True) -> pd.DataFrame:
-    """Per-cell resolve kernel (module-level so checkpointed runs reuse it).
-
-    emit_border_gaps additionally emits rows (owner=GAP_OWNER) for
-    border-touching sub-min-area gap groups — the exact inputs of the
-    boundary-exchange pass (border_gap_merge), produced from the SAME
-    overlay instead of a second full detection pass."""
-    g = cfg.snap_tolerance
-    cell, (cxmin, cymin, cxmax, cymax), polys = _cell_prep(pdf, g)
-    quarantined: list[int] = []
-    faces, adj = overlay(
-        polys,
-        with_adjacency=True,
-        simplify_tol_units=cfg.simplify_tolerance / g,
-        chaikin_iters=cfg.chaikins_iterations,
-        frozen_box=(cxmin, cymin, cxmax, cymax),
-        noding_max_iter=cfg.noding_max_iter,
-        quarantine=quarantined,
-    )
-    return _cell_rows(cell, (cxmin, cymin, cxmax, cymax), polys, faces, adj,
-                      quarantined, pdf, cfg, emit_border_gaps, with_geom)
-
-
 def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
                quarantined: list[int], pdf: pd.DataFrame, cfg: EngineConfig,
                emit_border_gaps: bool, with_geom: bool) -> pd.DataFrame:
-    """Post-overlay half of the resolve kernel: sliver merge, owner
-    assignment, row emission (shared by the per-cell and batched paths)."""
+    """Post-overlay half of the resolve kernel for one cell: sliver merge,
+    owner assignment, row emission."""
     g = cfg.snap_tolerance
     cxmin, cymin, cxmax, cymax = box
     # payload pass-through (reference column_data_as_json,
@@ -244,18 +216,11 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
     cols = ["cell_id", "owner", "other_ids", "area", "geom"] + (
         ["payload"] if payload_of is not None else [])
     qrows = []
-    if quarantined:
-        by_fid: dict[int, list] = {}
-        for pid, rings in polys:
-            if pid in quarantined:
-                by_fid.setdefault(pid, []).append(
-                    [r.astype(np.float64) * g for r in rings])
-        for fid in sorted(by_fid):
-            q = (cell, QUARANTINE_OWNER, [fid], 0.0,
-                 wkb.dump_multipolygon(by_fid[fid]))
-            if payload_of is not None:  # the quarantined feature's record
-                q += (payload_of.get(fid),)
-            qrows.append(q)
+    for fid, gq in _quarantine_geoms(polys, quarantined, g):
+        q = (cell, QUARANTINE_OWNER, [fid], 0.0, gq)
+        if payload_of is not None:  # the quarantined feature's record
+            q += (payload_of.get(fid),)
+        qrows.append(q)
     if not faces:
         return pd.DataFrame(qrows, columns=cols)
     border_faces = set()
@@ -320,40 +285,45 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
     return pd.DataFrame(rows + qrows, columns=cols)
 
 
-def _bucket_kernel(pdf: pd.DataFrame, cfg: EngineConfig, res: int,
+def _quarantine_geoms(polys: list, quarantined, g: float) -> list[tuple[int, bytes]]:
+    """(fid, clipped input as WKB) per noding-quarantined feature of a
+    cell, fid-sorted — the geometry of every QUARANTINE_OWNER row."""
+    by_fid: dict[int, list] = {}
+    for pid, rings in polys:
+        if pid in quarantined:
+            by_fid.setdefault(pid, []).append(
+                [r.astype(np.float64) * g for r in rings])
+    return [(fid, wkb.dump_multipolygon(by_fid[fid])) for fid in sorted(by_fid)]
+
+
+def _bucket_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
                    emit_border_gaps: bool = False,
                    with_geom: bool = True) -> pd.DataFrame:
-    if cfg.simplify_tolerance > 0 or cfg.chaikins_iterations > 0:
-        # simplify/Chaikin operate on per-cell chains — per-cell overlays
-        parts = [
-            _cell_kernel(sub, cfg, res, emit_border_gaps, with_geom)
-            for _, sub in pdf.groupby("cell_id", sort=True)
-        ]
-        return _concat_parts(parts, pdf)
-    # batched path: ONE noding/DCEL/labeling pass over every cell of the
-    # bucket (overlay_cells), exactly equal to per-cell overlays — the
-    # fixed numpy cost per phase amortizes over all cells in the batch
+    """The resolve kernel: ONE noding/DCEL/labeling pass over every cell
+    of the bucket (overlay_cells, exactly equal to per-cell overlays — the
+    fixed numpy cost per phase amortizes over the batch), then per-cell
+    sliver merge and owner rows.
+
+    emit_border_gaps additionally emits rows (owner=GAP_OWNER) for
+    border-touching sub-min-area gap groups — the exact inputs of the
+    boundary-exchange pass (border_gap_merge), produced from the SAME
+    overlay instead of a second full detection pass."""
     g = cfg.snap_tolerance
-    preps = []
-    subs = []
-    for _, sub in pdf.groupby("cell_id", sort=True):
-        cell, box, polys = _cell_prep(sub, g)
-        preps.append((cell, polys))
-        subs.append((cell, box, polys, sub))
+    subs = [(int(cell), sub, *_cell_prep(int(cell), sub, g))
+            for cell, sub in pdf.groupby("cell_id", sort=True)]
     q_of: dict = {}
-    faces_of = overlay_cells(preps, with_adjacency=True,
+    faces_of = overlay_cells([(cell, polys, box) for cell, _, box, polys in subs],
+                             with_adjacency=True,
                              noding_max_iter=cfg.noding_max_iter,
-                             quarantine_of=q_of)
+                             quarantine_of=q_of,
+                             simplify_tol_units=cfg.simplify_tolerance / g,
+                             chaikin_iters=cfg.chaikins_iterations)
     parts = [
         _cell_rows(cell, box, polys, *faces_of[cell],
                    sorted(q_of.get(cell, [])), sub, cfg,
                    emit_border_gaps, with_geom)
-        for cell, box, polys, sub in subs
+        for cell, sub, box, polys in subs
     ]
-    return _concat_parts(parts, pdf)
-
-
-def _concat_parts(parts: list[pd.DataFrame], pdf: pd.DataFrame) -> pd.DataFrame:
     # empty frames out of concat: all-NA columns poison dtypes under
     # pandas >= 2.1 (FutureWarning, dtype change in 3.x)
     parts = [p for p in parts if len(p)]
@@ -365,15 +335,44 @@ def _concat_parts(parts: list[pd.DataFrame], pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.concat(parts, ignore_index=True)
 
 
+def resolve_cells(cells: DataFrame, cfg: EngineConfig,
+                  emit_border_gaps: bool = False, with_geom: bool = True,
+                  n_buckets: int | None = None) -> DataFrame:
+    """The resolve kernel stage over an ASSIGNED cell frame (cell_id, fid,
+    geom[, payload]) — fixed-res (with_cells), content-balanced
+    (assign_balanced_cells) or a resumed subset of either: the kernel is
+    resolution-agnostic (cell bounds derive from the Morton id).
+    -> (cell_id, owner, other_ids, area, geom[, payload]) — clean coverage
+    pieces; with emit_border_gaps, extra GAP_OWNER/KILL_OWNER rows carry
+    the border gaps for the boundary-exchange pass.
+
+    Cells are processed in hashed buckets (one Arrow round-trip covers many
+    cells; per-cell groups would pay applyInPandas overhead per cell)."""
+    if n_buckets is None:
+        n_buckets = default_cell_buckets(cells)
+    cols = ["cell_id", "fid", "geom"]
+    schema = RESOLVE_SCHEMA
+    if "payload" in cells.columns:
+        cols.append("payload")
+        schema = T.StructType(
+            RESOLVE_SCHEMA.fields
+            + [T.StructField("payload", cells.schema["payload"].dataType)]
+        )
+    bucketed = cells.select(*cols).withColumn(
+        "bucket", F.pmod(F.hash("cell_id"), F.lit(n_buckets)))
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _bucket_kernel(pdf, cfg, emit_border_gaps, with_geom)
+
+    return bucketed.groupBy("bucket").applyInPandas(kernel, schema)
+
+
 def resolve(features: DataFrame, cfg: EngineConfig, res: int = 8,
             geom_col: str = "geom", id_col: str = "fid",
             n_buckets: int | None = None, emit_border_gaps: bool = False,
             payload_col: str | None = None,
             with_geom: bool = True) -> DataFrame:
-    """-> (cell_id, owner, other_ids, area, geom[, payload]) — clean
-    coverage pieces.  With emit_border_gaps, extra rows (owner = GAP_OWNER
-    = -1) carry the border-touching sub-min gap faces for the
-    boundary-exchange pass.
+    """resolve_cells over the fixed-resolution grid at `res`.
 
     payload_col: carry the named column THROUGH the kernel and attach the
     owner's value to every output piece (quarantine rows carry the
@@ -382,33 +381,12 @@ def resolve(features: DataFrame, cfg: EngineConfig, res: int = 8,
     post-resolve re-join (resolve_layer): the payload bytes ship through
     the covering-cell shuffle once per covering cell, but the input is
     scanned exactly once — prefer it when the payload is small relative to
-    the geometry or the input scan is the expensive part.
-
-    Cells are processed in hashed buckets (one Arrow round-trip covers many
-    cells; per-cell groups would pay applyInPandas overhead per cell)."""
-    from resolve_overlap_and_gap_spark.operators.overlap_gap import (
-        default_cell_buckets,
-    )
-
-    if n_buckets is None:
-        n_buckets = default_cell_buckets(features)
+    the geometry or the input scan is the expensive part."""
     sel = [F.col(id_col).cast("long").alias("fid"), F.col(geom_col).alias("geom")]
-    schema = RESOLVE_SCHEMA
     if payload_col is not None:
         sel.append(F.col(payload_col).alias("payload"))
-        schema = T.StructType(
-            RESOLVE_SCHEMA.fields
-            + [T.StructField("payload", features.schema[payload_col].dataType)]
-        )
-    feats = features.select(*sel)
-    cells = with_cells(feats, res).withColumn(
-        "bucket", F.pmod(F.hash("cell_id"), F.lit(n_buckets))
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _bucket_kernel(pdf, cfg, res, emit_border_gaps, with_geom)
-
-    return cells.groupBy("bucket").applyInPandas(kernel, schema)
+    cells = with_cells(features.select(*sel), res)
+    return resolve_cells(cells, cfg, emit_border_gaps, with_geom, n_buckets)
 
 
 def resolve_balanced(features: DataFrame, cfg: EngineConfig,
@@ -422,34 +400,23 @@ def resolve_balanced(features: DataFrame, cfg: EngineConfig,
     before any cell job, function_resolve_overlap_gap_init.sql:76-90). Hot
     cells refine to children until <= max_rows_in_each_cell, so kernel work
     per task is bounded regardless of data skew — the property that keeps
-    the 100TB run's stragglers bounded. The per-cell kernel is
-    resolution-agnostic (cell bounds derive from the Morton id)."""
+    the 100TB run's stragglers bounded."""
     from resolve_overlap_and_gap_spark.operators.overlap_gap import (
         assign_balanced_cells,
-        default_cell_buckets,
     )
 
-    if n_buckets is None:
-        n_buckets = default_cell_buckets(features)
     if assigned is None:
         # like the reference, a combined detect+resolve pipeline should
         # build the grid once (resolve_overlap_gap_init) and pass it in
         assigned = assign_balanced_cells(features, cfg, geom_col, id_col)
-    cells = assigned.withColumn("bucket", F.pmod(F.hash("cell_id"), F.lit(n_buckets)))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # res arg unused by the kernel: cell bounds derive from the id
-        return _bucket_kernel(pdf, cfg, 0, emit_border_gaps, with_geom)
-
-    return cells.select("cell_id", "bucket", "fid", "geom").groupBy(
-        "bucket"
-    ).applyInPandas(kernel, RESOLVE_SCHEMA)
+    return resolve_cells(assigned, cfg, emit_border_gaps, with_geom, n_buckets)
 
 
 def resolve_layer(features: DataFrame, cfg: EngineConfig, res: int = 8,
                   geom_col: str = "geom", id_col: str = "fid") -> DataFrame:
     """Final layer: one row per owner with attributes re-attached (J3) and
-    per-owner area; pieces stay per-cell multipolygons (heal pass pending)."""
+    per-owner area; pieces stay per-cell multipolygons (the healed
+    geometry is border.border_gap_merge)."""
     pieces = resolve(features, cfg, res, geom_col, id_col)
     per_owner = pieces.groupBy("owner").agg(
         F.sum("area").alias("area"),

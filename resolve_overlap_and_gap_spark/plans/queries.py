@@ -1026,6 +1026,11 @@ _ASSIGN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _balanced_cfg(spark: SparkSession, sf_dir: str):
+    """The one config of the balanced queries and their shared assignment.
+    base = the density-derived sweet spot (~40 rows/cell): refinement then
+    triggers ONLY on genuine hot spots, so the balanced path costs the same
+    as fixed-res on uniform data (measured at sf0.1: 15.8 s vs 17.5 s
+    fixed) instead of paying multi-level assignment for nothing."""
     from resolve_overlap_and_gap_spark.config import EngineConfig, GridConfig
 
     return EngineConfig(
@@ -1135,21 +1140,11 @@ def q_detect_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Detection over the content-balanced (adaptive-resolution) grid —
     the cbg_content_based_balanced_grid semantics. Rows-only driver check;
     equivalence with fixed-res detection in tests/test_balanced_detect.py."""
-    from resolve_overlap_and_gap_spark.config import EngineConfig, GridConfig
     from resolve_overlap_and_gap_spark.operators.overlap_gap import detect_all_balanced
 
     layer = derived_polygon_layer(spark, sf_dir)
-    # base = the density-derived sweet spot (~40 rows/cell): refinement
-    # then triggers ONLY on genuine hot spots, so the balanced path costs
-    # the same as fixed-res on uniform data (measured at sf0.1: 15.8 s vs
-    # 17.5 s fixed) instead of paying multi-level assignment for nothing
-    cfg = EngineConfig(
-        snap_tolerance=DETECT_CFG_SNAP,
-        grid=GridConfig(base_resolution=_density_res(spark, sf_dir),
-                        max_resolution=12, max_rows_in_each_cell=160),
-    )
     return detect_all_balanced(
-        layer, cfg, assigned=_balanced_assignment(spark, sf_dir),
+        layer, _balanced_cfg(spark, sf_dir), assigned=_balanced_assignment(spark, sf_dir),
         with_geom=False,  # the declared output drops geom — skip the dumps
     ).select(
         "cell_id", "kind", "id_a", "id_b",
@@ -1163,17 +1158,11 @@ def q_resolve_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's main-pipeline grid. Rows-only driver check; equivalence with
     the fixed-res resolve (owner set exact, areas within snap wobble) in
     tests/test_resolve_balanced.py."""
-    from resolve_overlap_and_gap_spark.config import EngineConfig, GridConfig
     from resolve_overlap_and_gap_spark.operators.resolve import resolve_balanced
 
     layer = derived_polygon_layer(spark, sf_dir)
-    cfg = EngineConfig(
-        snap_tolerance=DETECT_CFG_SNAP, min_area_to_keep=1e-4,
-        grid=GridConfig(base_resolution=_density_res(spark, sf_dir),
-                        max_resolution=12, max_rows_in_each_cell=160),
-    )
     return resolve_balanced(
-        layer, cfg, assigned=_balanced_assignment(spark, sf_dir),
+        layer, _balanced_cfg(spark, sf_dir), assigned=_balanced_assignment(spark, sf_dir),
         with_geom=False,  # the declared output drops geom — skip the dumps
     ).select(
         "cell_id", "owner",

@@ -78,3 +78,35 @@ def test_run_with_lines(spark, layer):
     # and faces adjacent to the line carry its id
     assert sum(1 for r in pieces if r.owner == 1) >= 2
     assert any(9 in (r.border_line_ids or []) for r in pieces)
+
+
+@pytest.mark.spark
+def test_run_max_rows_in_each_cell_takes_effect(spark):
+    """max_rows_in_each_cell drives the resolve grid: a base cell holding
+    more features than the limit refines, so pieces span several
+    resolutions, while the healed owners match a run that never refines
+    (areas within the snap wobble of different cell cuts)."""
+    from resolve_overlap_and_gap_spark import grid
+
+    # 16 overlapping squares inside ONE res-6 cell, plus a far feature
+    rows = [(10 * i + j, _sq(0.1 + 0.25 * i, 0.1 + 0.25 * j, 0.3))
+            for i in range(4) for j in range(4)]
+    rows.append((999, _sq(20.0, 20.0, 1.0)))
+    df = spark.createDataFrame(rows, "fid long, geom binary")
+    kw = dict(snap_tolerance=G, clean=CleanInfo(min_area_to_keep=1e-4), res=6)
+    fine = resolve_overlap_gap_run(spark, df, max_rows_in_each_cell=3, **kw)
+    whole = resolve_overlap_gap_run(spark, df, max_rows_in_each_cell=5000, **kw)
+
+    def cell_res(out):
+        cells = [r.cell_id for r in out.pieces.select("cell_id").distinct().collect()]
+        return set(grid.cell_res_np(np.array(cells, dtype=np.int64)).tolist())
+
+    assert len(cell_res(fine)) >= 2
+    assert cell_res(whole) == {6}
+    a_fine = {r.owner: r.area for r in fine.healed.collect()}
+    a_whole = {r.owner: r.area for r in whole.healed.collect()}
+    assert set(a_fine) == set(a_whole) == {r[0] for r in rows}
+    tol = 5e-4  # the tests/test_resolve_balanced.py bound
+    mism = {o: (a_fine[o], a_whole[o]) for o in a_fine
+            if abs(a_fine[o] - a_whole[o]) > tol}
+    assert not mism, mism

@@ -11,27 +11,16 @@ from pyspark.sql import functions as F
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.lineage import Lineage, run_stage_checkpointed
 from resolve_overlap_and_gap_spark.operators.overlap_gap import with_cells
-from resolve_overlap_and_gap_spark.operators.resolve import RESOLVE_SCHEMA, resolve
+from resolve_overlap_and_gap_spark.operators.resolve import resolve, resolve_cells
 from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
 
 CFG = EngineConfig(snap_tolerance=1e-5, min_area_to_keep=5e-4)
 RES = 8
 
 
-def _compute(cfg, res, emit_border_gaps=False):
-    """The resolve kernel as a cells->result mapper (reuses resolve()'s
-    kernel via a tiny shim: run resolve on the distinct features present)."""
-    from resolve_overlap_and_gap_spark.operators import resolve as R
-
-    def fn(todo_rows):
-        import pandas as pd
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return R._cell_kernel(pdf, cfg, res, emit_border_gaps)
-
-        return todo_rows.groupBy("cell_id").applyInPandas(kernel, RESOLVE_SCHEMA)
-
-    return fn
+def _compute(cfg, emit_border_gaps=False):
+    """The resolve kernel stage as a cells->result mapper."""
+    return lambda todo_rows: resolve_cells(todo_rows, cfg, emit_border_gaps)
 
 
 @pytest.mark.spark
@@ -52,12 +41,12 @@ def test_resume_equivalence(spark, tmp_path):
     all_cells = [r.cell_id for r in cells.select("cell_id").distinct().collect()]
     half = set(sorted(all_cells)[: len(all_cells) // 2])
     partial_cells = cells.where(F.col("cell_id").isin(list(half)))
-    run_stage_checkpointed(lin, "resolve", partial_cells, _compute(CFG, RES), "resolved")
+    run_stage_checkpointed(lin, "resolve", partial_cells, _compute(CFG), "resolved")
     done_after_partial = lin.done_cells("resolve").count()
     assert done_after_partial == len(half)
 
     # ---- resume with the FULL cell set: only remaining cells recompute
-    result = run_stage_checkpointed(lin, "resolve", cells, _compute(CFG, RES), "resolved")
+    result = run_stage_checkpointed(lin, "resolve", cells, _compute(CFG), "resolved")
     got = sorted(
         (r.cell_id, r.owner, tuple(r.other_ids), round(r.area, 15))
         for r in result.collect()
@@ -67,7 +56,7 @@ def test_resume_equivalence(spark, tmp_path):
 
     # ---- idempotence: a third run recomputes nothing and changes nothing
     before = lin._read_lineage().count()
-    result2 = run_stage_checkpointed(lin, "resolve", cells, _compute(CFG, RES), "resolved")
+    result2 = run_stage_checkpointed(lin, "resolve", cells, _compute(CFG), "resolved")
     assert lin._read_lineage().count() == before
     got2 = sorted(
         (r.cell_id, r.owner, tuple(r.other_ids), round(r.area, 15))
@@ -108,7 +97,7 @@ def test_resume_healed_equivalence(spark, tmp_path):
     # simulated kill: stage 1 runs on half the cells only, heal never runs
     partial = cells.where(F.col("cell_id").isin(list(half)))
     run_stage_checkpointed(lin, "resolve", partial,
-                           _compute(CFG, RES, emit_border_gaps=True),
+                           _compute(CFG, emit_border_gaps=True),
                            "resolved")
     assert not lin.has_stage("healed")
 

@@ -71,19 +71,24 @@ def test_cell_partition_is_exact(spark, fixture_df):
     sum of all face areas (covered + gaps, incl. holes) equals the cell area
     exactly in integer grid units (the ValidateTopology analog)."""
     from resolve_overlap_and_gap_spark import grid as G
+    from resolve_overlap_and_gap_spark.geom.arrangement import overlay
     from resolve_overlap_and_gap_spark.operators.overlap_gap import (
-        UNIVERSE, _cell_faces, with_cells,
+        UNIVERSE, _cell_prep, with_cells,
     )
 
     feats = fixture_df.selectExpr("cast(fid as long) fid", "geom")
     cells = with_cells(feats, 8)
     pdfs = cells.toPandas()
     for cell_id, pdf in pdfs.groupby("cell_id"):
-        cell, faces = _cell_faces(pdf, CFG, 8)
         g = CFG.snap_tolerance
-        xmin, ymin, xmax, ymax = G.cell_bounds_np(np.array([cell]))
-        cx0 = int(np.floor(xmin[0] / g + 0.5)); cy0 = int(np.floor(ymin[0] / g + 0.5))
-        cx1 = int(np.floor(xmax[0] / g + 0.5)); cy1 = int(np.floor(ymax[0] / g + 0.5))
+        (cx0, cy0, cx1, cy1), polys = _cell_prep(int(cell_id), pdf, g)
+        faces = overlay(polys, noding_max_iter=CFG.noding_max_iter)
+        # the box _cell_prep derived is the cell's own bounds
+        xmin, ymin, xmax, ymax = G.cell_bounds_np(np.array([cell_id]))
+        assert (cx0, cy0) == (int(np.floor(xmin[0] / g + 0.5)),
+                              int(np.floor(ymin[0] / g + 0.5)))
+        assert (cx1, cy1) == (int(np.floor(xmax[0] / g + 0.5)),
+                              int(np.floor(ymax[0] / g + 0.5)))
         want2 = 2 * (cx1 - cx0) * (cy1 - cy0)
         got2 = sum(f.area2 for f in faces if UNIVERSE in f.winding and f.winding[UNIVERSE] > 0)
         assert got2 == want2, cell_id

@@ -38,11 +38,23 @@ def _face_sig(f):
         sorted(h.tolist() for h in f.holes),
         tuple(sorted(f.winding.items())),
         int(f.area2),
+        list(f.lines),
     )
 
 
-@pytest.mark.parametrize("seed", range(12))
-def test_overlay_cells_equals_per_cell(seed):
+SIMPLIFY = dict(simplify_tol_units=2.5, chaikin_iters=2)
+CASES = ([(seed, "plain") for seed in range(12)]
+         + [(seed, option) for option in ("simplify_chaikin_frozen", "cut_lines")
+            for seed in range(6)])
+
+
+@pytest.mark.parametrize(
+    "seed, option", CASES,
+    ids=[str(s) if o == "plain" else f"{o}-{s}" for s, o in CASES])
+def test_overlay_cells_equals_per_cell(seed, option):
+    """Every cell of a multi-cell batch gets exactly what it gets run
+    alone — plain, with simplify + Chaikin frozen at the cell box, and
+    with attribute cut lines (per-face line ids)."""
     rng = np.random.default_rng(seed)
     n_cells = int(rng.integers(2, 7))
     items = []
@@ -51,16 +63,28 @@ def test_overlay_cells_equals_per_cell(seed):
         size = 24
         gx = int(rng.integers(0, 3)) * size
         gy = ci * size  # distinct y-band per cell is NOT required; vary x too
-        items.append((1000 + ci, _rand_cell_polys(rng, gx, gy, size,
-                                                  int(rng.integers(2, 9)))))
+        polys = _rand_cell_polys(rng, gx, gy, size, int(rng.integers(2, 9)))
+        if option == "cut_lines":
+            cut = [(lid, rng.integers(0, size, size=(int(rng.integers(2, 5)), 2))
+                    + [gx, gy]) for lid in range(int(rng.integers(1, 4)))]
+            items.append((1000 + ci, polys, None, cut))
+        elif option == "simplify_chaikin_frozen":
+            items.append((1000 + ci, polys, (gx, gy, gx + size, gy + size)))
+        else:
+            items.append((1000 + ci, polys))
+    kw = SIMPLIFY if option == "simplify_chaikin_frozen" else {}
 
-    got = overlay_cells(items, with_adjacency=True, noding_max_iter=8)
-    for key, polys in items:
-        exp_faces, exp_adj = overlay(polys, with_adjacency=True)
+    got = overlay_cells(items, with_adjacency=True, noding_max_iter=8, **kw)
+    for key, polys, *opt in items:
+        exp_faces, exp_adj = overlay(
+            polys, with_adjacency=True, frozen_box=opt[0] if opt else None,
+            cut_lines=opt[1] if len(opt) > 1 else None, **kw)
         got_faces, got_adj = got[key]
         assert [_face_sig(f) for f in got_faces] == \
             [_face_sig(f) for f in exp_faces], key
         assert got_adj == exp_adj, key
+    if option == "cut_lines":
+        assert any(f.lines for faces, _ in got.values() for f in faces)
 
 
 def test_overlay_cells_adjacent_cells_share_borders():
@@ -106,3 +130,17 @@ def test_overlay_cells_quarantine_matches():
     ok_ref = overlay(ok_cell, with_adjacency=True, noding_max_iter=0)
     assert [_face_sig(f) for f in got["ok"][0]] == \
         [_face_sig(f) for f in ok_ref[0]]
+
+
+@pytest.mark.parametrize("with_adjacency", [False, True])
+def test_overlay_cells_empty_cells_do_not_alias(with_adjacency):
+    """Every empty cell gets its own result object: mutating one must not
+    leak into another."""
+    got = overlay_cells([("a", []), ("b", [])], with_adjacency=with_adjacency)
+    if with_adjacency:
+        faces, adj = got["a"]
+        adj[(0, 1)] = 1.0
+    else:
+        faces = got["a"]
+    faces.append("mutated")
+    assert got["b"] == (([], {}) if with_adjacency else [])

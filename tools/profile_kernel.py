@@ -55,7 +55,7 @@ def main() -> None:
     t0 = time.time()
     prof = cProfile.Profile()
     prof.enable()
-    out = _bucket_kernel(sample, cfg, res, emit_border_gaps=True, with_geom=True)
+    out = _bucket_kernel(sample, cfg, emit_border_gaps=True, with_geom=True)
     prof.disable()
     print(f"kernel wall: {time.time()-t0:.2f}s, out rows: {len(out)}")
     st = pstats.Stats(prof)
