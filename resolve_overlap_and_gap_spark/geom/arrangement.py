@@ -618,9 +618,9 @@ def label_walks(arr: Arrangement) -> list[dict[int, int]]:
     if n_edges == 0:
         return []
     if n_edges <= 192 and getattr(arr, "node_cell", None) is None:
-        # tiny arrangements (per-component unions inside the generic
-        # dissolve run thousands of them): the whole-array machinery's
-        # fixed cost exceeds the scalar loop here — identical results
+        # tiny arrangements (lone unions and overlays run thousands of
+        # them): the whole-array machinery's fixed cost exceeds the scalar
+        # loop here — identical results
         return _label_walks_small(arr)
     # connected components over node ids: vectorized min-label propagation
     # with pointer halving — O(log diameter) rounds of whole-array ops
@@ -659,8 +659,8 @@ def label_walks(arr: Arrangement) -> list[dict[int, int]]:
     winding: list[dict[int, int] | None] = [None] * len(arr.walks)
     # --- batched anchor ray-casts: ONE chunked vectorized crossing pass for
     # all components instead of a full-edge scan per component (the per-call
-    # _ray_winding scan made dissolve buckets with thousands of disjoint
-    # owner networks O(components x edges))
+    # _ray_winding scan made arrangements with thousands of components
+    # O(components x edges))
     E = arr.edges
     ex1, ey1, ex2, ey2 = E[:, 0], E[:, 1], E[:, 2], E[:, 3]
     elo = np.minimum(ey1, ey2)
@@ -964,168 +964,60 @@ def simplify_segments(S, pid, wt, tol_units: float, chaikin_iters: int = 0,
 
 
 def union_faces(polys: list[tuple[int, list[np.ndarray]]]) -> list[Face]:
-    """Dissolved union of all inputs (any winding > 0): keep only the edges
-    where coverage changes (the union boundary), re-polygonize them.
-    Interior edges — shared borders and overlap boundaries — disappear,
-    which is the ST_Union dissolve semantic (SURVEY §2.4 A2) and the heal
-    of ST_ModEdgeHeal across grid borders (§2.9)."""
-    S, pid, wt = rings_to_segments(polys)
-    if len(S) == 0:
-        return []
-    S, pid, wt = node_segments(S, pid, wt)
-    arr = Arrangement(S, pid, wt)
-    winding = label_walks(arr)
-
-    cov = np.fromiter(
-        (any(v > 0 for v in w.values()) for w in winding), dtype=bool, count=len(winding)
-    )
-    inl = cov[arr.walk_of[0::2]]
-    inr = cov[arr.walk_of[1::2]]
-    keep = inl != inr
-    if not keep.any():
-        return []
-    E = arr.edges[keep]
-    fl = inl[keep]
-    # orient with interior on the left
-    S2 = np.where(fl[:, None], E, E[:, [2, 3, 0, 1]]).astype(np.int64)
-    arr2 = Arrangement(S2, np.zeros(len(S2), np.int64), np.ones(len(S2), np.int64))
-    w2 = label_walks(arr2)
-    # positive-area walks with winding > 0 are union faces; a hole's
-    # INTERIOR-side walk is also positive-area but has winding 0 (crossing
-    # the hole ring leaves coverage) — emitting it would fill every hole
-    # with a spurious face (double-covering any island inside, which the
-    # after-resolve detection then reports as an overlap)
-    pos = [i for i, a in enumerate(arr2.walk_area2)
-           if a > 0 and w2[i].get(0, 0) > 0]
-    # a negative walk is a real hole boundary only if the face it bounds is
-    # covered (winding > 0); the CW walk around an island nested inside an
-    # uncovered hole bounds the hole region (winding 0) and must not attach
-    neg = [i for i, a in enumerate(arr2.walk_area2)
-           if a < 0 and w2[i].get(0, 0) > 0]
-    faces = {i: Face(shell=arr2.walk_coords(i), winding=w2[i], area2=arr2.walk_area2[i])
-             for i in pos}
-    pos_sorted = sorted(pos, key=lambda i: arr2.walk_area2[i])
-    pos_coords = {i: arr2.walk_coords(i) for i in pos}
-    pos_bbox = {i: (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-                for i, c in pos_coords.items()}
-    for h in neg:
-        hc = arr2.walk_coords(h)
-        px = int(hc[:, 0].min())
-        py = int(hc[hc[:, 0] == px][:, 1].min())
-        hb = (hc[:, 0].min(), hc[:, 1].min(), hc[:, 0].max(), hc[:, 1].max())
-        for i in pos_sorted:
-            if -arr2.walk_area2[h] >= arr2.walk_area2[i]:
-                continue
-            bb = pos_bbox[i]
-            if not (bb[0] <= hb[0] and bb[1] <= hb[1] and bb[2] >= hb[2] and bb[3] >= hb[3]):
-                continue
-            if _point_in_walk(px, py, pos_coords[i]):
-                faces[i].holes.append(hc)
-                faces[i].area2 += arr2.walk_area2[h]
-                break
-    return list(faces.values())
+    """Dissolved union of all inputs (any winding > 0) — union_cells over
+    a single item (see there)."""
+    return union_cells([(0, polys)])[0]
 
 
-def multi_union_faces(polys: list[tuple[int, list[np.ndarray]]]) -> dict[int, list[Face]]:
-    """Per-pid dissolved union computed in ONE arrangement pass over all
-    inputs: {pid: union_faces(that pid's polys)} — but with a single
-    noding + DCEL + labeling instead of one full machinery invocation per
-    pid, which is what makes the heal's final owner dissolve affordable
-    (142k owners x ~1 ms of fixed numpy overhead otherwise).
+def union_cells(items: list[tuple]) -> dict:
+    """Batched dissolve of INDEPENDENT items: {key: [Face]}, the union of
+    each item's polys (any winding > 0), computed in ONE noding/DCEL/
+    labeling pass over all items.  The only union entry point: union_faces()
+    is this function over one item.
 
-    EXACT-EQUIVALENCE PRECONDITION: different pids' interiors must be
-    DISJOINT (sharing boundary edges is fine — the per-cell resolve
-    output partitions the plane, so the heal qualifies).  If pid j's
-    boundary crossed pid k's interior, k's face would be subdivided and
-    its face count would differ from the per-pid union.  Face areas
-    (exact int area2) and face counts match the per-pid result; vertex
-    chains may carry extra collinear subdivision points where another
-    pid's boundary nodes a shared edge."""
-    S, pid, wt = rings_to_segments(polys)
-    if len(S) == 0:
-        return {}
-    S, pid, wt = node_segments(S, pid, wt)
-    arr = Arrangement(S, pid, wt)
-    winding = label_walks(arr)
-    all_pids = sorted({p for w in winding for p in w})
-    wl = arr.walk_of[0::2]
-    wr = arr.walk_of[1::2]
-    E = arr.edges
-    # boundary edges per pid via the symmetric difference of the two
-    # incident walks' cover sets — O(edges x boundary pids) instead of one
-    # full-edge coverage scan per pid (which was O(pids x edges): the heal
-    # buckets carry thousands of owners over tens of thousands of edges)
-    covset = [frozenset(p for p, v in w.items() if v > 0) for w in winding]
-    can_e: list[int] = []; can_p: list[int] = []
-    flip_e: list[int] = []; flip_p: list[int] = []
-    for e in range(len(E)):
-        sl = covset[int(wl[e])]
-        sr = covset[int(wr[e])]
-        if sl == sr:
-            continue
-        for k in sl - sr:   # k's interior on the left: canonical direction
-            can_e.append(e); can_p.append(k)
-        for k in sr - sl:   # interior on the right: flip
-            flip_e.append(e); flip_p.append(k)
-    out: dict[int, list[Face]] = {k: [] for k in all_pids}
-    if not can_e and not flip_e:
+    Per item: keep only the edges where coverage changes (the union
+    boundary) and re-polygonize them.  Interior edges — shared borders and
+    overlap boundaries — disappear, which is the ST_Union dissolve semantic
+    (SURVEY §2.4 A2) and the heal of ST_ModEdgeHeal across grid borders
+    (§2.9).
+
+    items: (key, polys) per item.  Items are cell-tagged exactly like
+    overlay_cells' cells, so they may overlap each other spatially and
+    each still gets what it would get alone (pinned by
+    tests/test_union_cells.py); an item with no union gets a fresh []."""
+    out = {key: [] for key, _ in items}
+    Ss, Ps, Ws, Cs = [], [], [], []
+    for ci, (_, polys) in enumerate(items):
+        S, P, W = rings_to_segments(polys)
+        if len(S):
+            Ss.append(S); Ps.append(P); Ws.append(W)
+            Cs.append(np.full(len(S), ci, np.int64))
+    if not Ss:
         return out
-    S2 = np.concatenate([
-        E[can_e].reshape(-1, 4),
-        E[flip_e].reshape(-1, 4)[:, [2, 3, 0, 1]],
-    ]).astype(np.int64)
-    P2 = np.asarray(can_p + flip_p, np.int64)
-    arr2 = Arrangement(S2, P2, np.ones(len(S2), np.int64))
+    # a lone item needs no tag (and keeps label_walks' small-input path)
+    S, P, W, C = _node_segments_impl(
+        np.vstack(Ss), np.concatenate(Ps), np.concatenate(Ws),
+        np.concatenate(Cs) if len(items) > 1 else None)
+    arr = Arrangement(S, P, W, cell=C)
+    cov = np.fromiter((any(v > 0 for v in w.values()) for w in label_walks(arr)),
+                      dtype=bool, count=len(arr.walks))
+    inl = cov[arr.walk_of[0::2]]
+    keep = inl != cov[arr.walk_of[1::2]]
+    if not keep.any():
+        return out
+    # orient with interior on the left
+    E = arr.edges[keep]
+    S2 = np.where(inl[keep][:, None], E, E[:, [2, 3, 0, 1]])
+    arr2 = Arrangement(S2, np.zeros(len(S2), np.int64), np.ones(len(S2), np.int64),
+                       cell=None if C is None else arr.edge_cell[keep])
     w2 = label_walks(arr2)
-    area2 = arr2.walk_area2
-    # per-pid positive faces and negative (hole) walks, with the same
-    # smallest-containing-face hole attachment as union_faces
-    pos_by_pid: dict[int, list[int]] = {k: [] for k in all_pids}
-    neg_by_pid: dict[int, list[int]] = {k: [] for k in all_pids}
-    for i, w in enumerate(w2):
-        a = int(area2[i])
-        if a == 0:
-            continue
-        for k, v in w.items():
-            if v > 0:
-                (pos_by_pid if a > 0 else neg_by_pid)[k].append(i)
-    coords_cache: dict[int, np.ndarray] = {}
-
-    def coords(i: int) -> np.ndarray:
-        c = coords_cache.get(i)
-        if c is None:
-            c = arr2.walk_coords(i)
-            coords_cache[i] = c
-        return c
-
-    for k in all_pids:
-        pos = pos_by_pid[k]
-        faces = {i: Face(shell=coords(i), winding=w2[i], area2=int(area2[i]))
-                 for i in pos}
-        if neg_by_pid[k]:
-            pos_sorted = sorted(pos, key=lambda i: area2[i])
-            pos_bbox = {
-                i: (coords(i)[:, 0].min(), coords(i)[:, 1].min(),
-                    coords(i)[:, 0].max(), coords(i)[:, 1].max())
-                for i in pos
-            }
-            for h in neg_by_pid[k]:
-                hc = coords(h)
-                px = int(hc[:, 0].min())
-                py = int(hc[hc[:, 0] == px][:, 1].min())
-                hb = (hc[:, 0].min(), hc[:, 1].min(), hc[:, 0].max(), hc[:, 1].max())
-                for i in pos_sorted:
-                    if -area2[h] >= area2[i]:
-                        continue
-                    bb = pos_bbox[i]
-                    if not (bb[0] <= hb[0] and bb[1] <= hb[1]
-                            and bb[2] >= hb[2] and bb[3] >= hb[3]):
-                        continue
-                    if _point_in_walk(px, py, coords(i)):
-                        faces[i].holes.append(hc)
-                        faces[i].area2 += int(area2[h])
-                        break
-        out[k] = list(faces.values())
+    # only covered walks: positive ones are union faces; a hole's INTERIOR
+    # walk is also positive-area but has winding 0 (emitting it would fill
+    # every hole), and the CW walk around an island nested inside an
+    # uncovered hole bounds the hole region and must not attach as a hole
+    for ci, wids, eids in _cell_groups(arr2):
+        out[items[ci][0]] = _assemble_faces(
+            arr2, w2, [i for i in wids if w2[i].get(0, 0) > 0], eids, False)[0]
     return out
 
 
@@ -1200,7 +1092,8 @@ def overlay(polys: list[tuple[int, list[np.ndarray]]],
 def _assemble_faces(arr: Arrangement, winding, walk_ids, eids,
                     with_adjacency: bool):
     """Face assembly over a subset of walks/edges — the whole arrangement
-    (a lone cell) or one cell of a cell-tagged one (overlay_cells).  Walk
+    (a lone cell) or one cell of a cell-tagged one (overlay_cells; the
+    covered walks of one item for union_cells).  Walk
     and edge ids must come in ascending order, so every float accumulation
     and tie-break below is the same whichever way a cell was run."""
     pos = [i for i in walk_ids if arr.walk_area2[i] > 0]
@@ -1271,9 +1164,8 @@ def overlay_cells(items: list[tuple], with_adjacency: bool = False,
     """Batched overlay of INDEPENDENT cells: {key: faces} (or
     {key: (faces, adj)}) computed in ONE noding/DCEL/labeling pass over all
     cells of a kernel bucket instead of one full machinery invocation per
-    cell — the multi_union_faces batching idea applied to the per-cell
-    resolve/detect overlays.  The only arrangement driver: overlay() is
-    this function over one item.
+    cell.  The only overlay entry point: overlay() is this function over one
+    item (union_cells is its dissolve counterpart).
 
     items: (key, polys[, frozen_box[, cut_lines]]) per cell.
       cut_lines: [(line_id, int coords)] attribute lines that split faces

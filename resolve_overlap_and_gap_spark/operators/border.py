@@ -8,7 +8,7 @@ unmerged there). This pass:
 
   1. takes gap faces that touch cell borders (from detection),
   2. reassembles them ACROSS cells with an ITERATED PARENT-CELL DISSOLVE —
-     group pieces by their parent cell, union per group (union_faces heals
+     group pieces by their parent cell, union per group (union_parts heals
      the grid-border edges), finalize faces that no longer touch the parent
      border, escalate the rest one level coarser, repeat.  Fully
      distributed: each level is one shuffle on the parent key + an
@@ -59,8 +59,8 @@ from pyspark.sql import types as T
 from resolve_overlap_and_gap_spark import grid
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay, union_faces
-from resolve_overlap_and_gap_spark.geom.core import ring_area2
+from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay
+from resolve_overlap_and_gap_spark.operators.dissolve import union_parts
 from resolve_overlap_and_gap_spark.operators.overlap_gap import detect_all, with_cells
 
 ASSIGN_SCHEMA = T.StructType([
@@ -192,26 +192,6 @@ def _load_int_polys(b: bytes, g: float) -> list[list[np.ndarray]]:
     return out
 
 
-def _union_components(polys: list[tuple[int, list[np.ndarray]]]) -> list[Face]:
-    """Union with bbox-component decomposition (same trick as dissolve.py):
-    only parts whose boxes touch can interact, so each component unions
-    independently; singletons skip the arrangement entirely."""
-    from resolve_overlap_and_gap_spark.operators.dissolve import _bbox_components
-
-    faces: list[Face] = []
-    for members in _bbox_components(polys):
-        if len(members) == 1:
-            rings = polys[members[0]][1]
-            a2 = abs(ring_area2(rings[0].astype(np.float64)))
-            for h in rings[1:]:
-                a2 -= abs(ring_area2(h.astype(np.float64)))
-            faces.append(Face(shell=rings[0], holes=list(rings[1:]),
-                              winding={0: 1}, area2=int(a2)))
-        else:
-            faces.extend(union_faces([polys[i] for i in members]))
-    return faces
-
-
 def _face_area(f: Face, g: float, cfg: EngineConfig) -> float:
     """Decision area of one face in the configured measure (planar units^2,
     or geodesic m^2 — WGS84 spheroid by default — when cfg.geodesic_measure
@@ -232,7 +212,8 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
                             is_root: bool) -> pd.DataFrame:
     """One level of the iterated dissolve: pdf holds live gap pieces and
     kill-interval rows keyed by PARENT cell (possibly many parents per
-    hashed bucket). Union live pieces per parent, then per out-face:
+    hashed bucket). Union live pieces per parent (one union_parts call for
+    the whole bucket), then per out-face:
 
       - killed (touches a kill interval, or area >= min_area): its true gap
         is >= min_area — never a sliver; if it still touches the parent
@@ -246,23 +227,29 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
     g = cfg.snap_tolerance
     min_area = cfg.min_area_to_keep
     rows = []
-    for cell, sub in pdf.groupby("cell_id", sort=True):
-        xmin, ymin, xmax, ymax = grid.cell_bounds_np(np.array([cell], dtype=np.int64))
-        cx0 = int(np.floor(xmin[0] / g + 0.5)); cy0 = int(np.floor(ymin[0] / g + 0.5))
-        cx1 = int(np.floor(xmax[0] / g + 0.5)); cy1 = int(np.floor(ymax[0] / g + 0.5))
-        polys: list[tuple[int, list[np.ndarray]]] = []
+    cells: list[tuple[int, np.ndarray]] = []      # (parent cell, kill intervals)
+    parts: list[list[np.ndarray]] = []
+    part_cell: list[int] = []
+    for ci, (cell, sub) in enumerate(pdf.groupby("cell_id", sort=True)):
         kiv_parts: list[np.ndarray] = []
         kinds = sub["kind"] if "kind" in sub.columns else ["live"] * len(sub)
         for kind, b in zip(kinds, sub["geom"]):
             if kind == "kill":
                 kiv_parts.append(unpack_intervals(b))
             else:
-                polys.extend((0, rings) for rings in _load_int_polys(b, g))
-        kiv = (np.vstack(kiv_parts) if kiv_parts
-               else np.empty((0, 4), dtype=np.int64))
+                for rings in _load_int_polys(b, g):
+                    parts.append(rings)
+                    part_cell.append(ci)
+        cells.append((cell, np.vstack(kiv_parts) if kiv_parts
+                      else np.empty((0, 4), dtype=np.int64)))
+    faces_of = union_parts(parts, np.asarray(part_cell, np.int64))
+    for ci, (cell, kiv) in enumerate(cells):
+        xmin, ymin, xmax, ymax = grid.cell_bounds_np(np.array([cell], dtype=np.int64))
+        cx0 = int(np.floor(xmin[0] / g + 0.5)); cy0 = int(np.floor(ymin[0] / g + 0.5))
+        cx1 = int(np.floor(xmax[0] / g + 0.5)); cy1 = int(np.floor(ymax[0] / g + 0.5))
         idx = _kills_index(kiv)
         out_kill: list[tuple[int, int, int, int]] = []
-        for f in _union_components(polys):
+        for f in faces_of.get(ci, []):
             if f.area2 <= 0:
                 continue
             area = _face_area(f, g, cfg)
@@ -437,7 +424,6 @@ def _geodesic_area_udf(cfg: EngineConfig):
 def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
                      res: int = 8, border_gaps: DataFrame | None = None,
                      checkpoint: bool = True,
-                     dissolve_disjoint: bool = False,
                      dissolve_geom: bool = True,
                      piece_res: list[int] | None = None) -> DataFrame:
     """-> (owner, area, geom) — the final healed layer.
@@ -456,11 +442,9 @@ def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
     cell).
     checkpoint: set False when the caller already materialized pieces
     (avoids a redundant eager localCheckpoint).
-    dissolve_disjoint / dissolve_geom: forwarded to the final owner
-    dissolve — resolve pieces partition the plane, so callers that do not
-    re-emit the healed geometry (the benched resolve_healed emits
-    owner/area/n_parts only) can run the bucket-batched union and skip
-    the WKB dumps; defaults keep the exact per-key path with geometry.
+    dissolve_geom: forwarded to the final owner dissolve as with_geom —
+    callers that do not re-emit the healed geometry (resolve_healed emits
+    owner/area/n_parts only) pass False to skip the WKB dumps (geom null).
     piece_res: the distinct cell resolutions present in `pieces` when the
     caller knows them (fixed-res resolve: [res]) — skips a distinct+collect
     over the pieces table; None derives them from the data (balanced
@@ -519,11 +503,10 @@ def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
 
         # n_salts='auto': one count agg decides whether any owner is hot
         # enough to need the two-level salted union (a single giant owner
-        # must never serialize the heal's final dissolve);
-        # auto_checkpoint=False — pieces is already materialized above
+        # must never serialize the heal's final dissolve); pieces is
+        # already materialized above, so the count re-reads it
         return dissolve(pieces.select("owner", "geom"), "owner", g,
-                        n_salts="auto", auto_checkpoint=False,
-                        disjoint=dissolve_disjoint,
+                        n_salts="auto",
                         with_geom=dissolve_geom).withColumnRenamed("key", "owner")
 
     # 3. slivers join candidate pieces sharing a covering cell with the
@@ -606,7 +589,7 @@ def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
     )
 
     # 4. final healed layer: dissolve pieces + absorbed slivers per owner
-    #    (union_faces removes internal cell-border edges AND welds the
+    #    (the union removes internal cell-border edges AND welds the
     #    absorbed gap slivers into their new owner's geometry).
     #    assigned is tiny (one row per sliver) — materialize it so the
     #    auto-salt count agg below doesn't recompute the sliver kernel;
@@ -616,10 +599,8 @@ def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
     combined = pieces.select("owner", "geom").unionByName(
         assigned.select("owner", "geom").localCheckpoint()
     )
-    # auto_checkpoint=False: both union branches are materialized already
-    # (pieces by the caller/checkpoint above, assigned just now) — the
-    # auto-salt sizing count re-reads cached partitions instead of
-    # re-materializing ~150 MB of geometry
+    # both union branches are materialized already (pieces by the
+    # caller/checkpoint above, assigned just now): the auto-salt sizing
+    # count re-reads cached partitions instead of recomputing geometry
     return dissolve(combined, "owner", g, n_salts="auto",
-                    auto_checkpoint=False, disjoint=dissolve_disjoint,
                     with_geom=dissolve_geom).withColumnRenamed("key", "owner")

@@ -2,7 +2,11 @@
 `ST_Union(geo) GROUP BY key` (find_overlap_and_gap-pre.sql:597-615, line
 merge pipelines …single_cell.sql:360-369).
 
-Spark-native: groupBy(key) -> Arrow-batched arrangement union per group.
+Spark-native: groupBy(hashed key bucket) -> one Arrow-batched kernel per
+bucket: batch WKB parse, bbox components per key (only parts whose boxes
+touch can interact), lone parts emitted as they are, and ONE cell-tagged
+union_cells call over every multi-part component of the bucket — tags keep
+keys and components independent, so keys may overlap each other freely.
 Because resolve() pieces tile exactly on snap-grid-aligned cell borders,
 dissolving an owner's per-cell pieces drops the internal border edges —
 this IS the cross-cell heal for owner geometry (reference job type 4,
@@ -10,8 +14,8 @@ ST_ModEdgeHeal semantics): two pieces meeting at a grid border merge into
 one face with the border edge gone.
 
 Scale note: one shuffle on the dissolve key; a single group holds one key's
-geometry (bounded for real layers — a municipality's pieces, not the world).
-Global all-rows union would instead tree-reduce per partition first.
+geometry (bounded for real layers — a municipality's pieces, not the world;
+n_salts spreads a hot key).
 """
 
 from __future__ import annotations
@@ -23,7 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.geom.arrangement import union_faces
+from resolve_overlap_and_gap_spark.geom.arrangement import Face, union_cells
+from resolve_overlap_and_gap_spark.geom.core import ring_area2
 
 DISSOLVE_SCHEMA = T.StructType([
     T.StructField("key", T.LongType()),
@@ -33,76 +38,83 @@ DISSOLVE_SCHEMA = T.StructType([
 ])
 
 
-def _bbox_components(polys: list) -> list[list[int]]:
-    """Connected components of the bbox-overlap graph via an x-sweep with an
-    active max-heap — only parts whose boxes touch can interact in a union,
-    so each component unions independently (tree-union semantics). Worst
-    case (everything overlapping in x) degrades to the single-arrangement
-    cost the decomposition replaces."""
-    import heapq
+def _bbox_components(group: np.ndarray, bb: np.ndarray,
+                     chunk: int = 1 << 16) -> np.ndarray:
+    """Connected components of the closed-bbox overlap graph within each
+    group: a label per box, the min box index of its component.  Sort-based
+    sweep over (group, xmin): a box's x-overlapping successors are one
+    contiguous run of that order, so candidate pairs are generated in
+    chunks of about `chunk` (memory never grows with pairs per group) and
+    merged by a vectorized hook-to-smaller-root union-find."""
+    n = len(group)
+    parent = np.arange(n, dtype=np.int64)
+    if n < 2:
+        return parent
+    # (group, x) packed into one int64 via dense ranks of group and x
+    xs, xr = np.unique(np.concatenate([bb[:, 0], bb[:, 2]]), return_inverse=True)
+    g = np.unique(group, return_inverse=True)[1] * len(xs)
+    lo, hi = g + xr[:n], g + xr[n:]
+    order = np.argsort(lo, kind="stable")
+    cnt = np.searchsorted(lo[order], hi[order], "right") - np.arange(n) - 1
+    cum = np.concatenate(([0], np.cumsum(cnt)))
 
-    n = len(polys)
-    bb = np.empty((n, 4), dtype=np.int64)
-    for i, (_, rings) in enumerate(polys):
-        bb[i] = (min(r[:, 0].min() for r in rings), min(r[:, 1].min() for r in rings),
-                 max(r[:, 0].max() for r in rings), max(r[:, 1].max() for r in rings))
-    parent = np.arange(n)
+    def roots(x):
+        while True:  # pointer jumping: O(log depth) whole-array rounds
+            pp = parent[parent]
+            if np.array_equal(pp, parent):
+                return parent[x]
+            parent[:] = pp
 
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    active: list[tuple[int, int]] = []
-    for i in np.argsort(bb[:, 0], kind="stable"):
-        x0 = bb[i, 0]
-        while active and active[0][0] < x0:
-            heapq.heappop(active)
-        for _, j in active:
-            if bb[i, 1] <= bb[j, 3] and bb[j, 1] <= bb[i, 3]:
-                parent[find(i)] = find(j)
-        heapq.heappush(active, (int(bb[i, 2]), int(i)))
-    comps: dict[int, list[int]] = {}
-    for i in range(n):
-        comps.setdefault(find(i), []).append(i)
-    return list(comps.values())
+    p0 = 0
+    while p0 < n:
+        p1 = max(p0 + 1, int(np.searchsorted(cum, cum[p0] + chunk, "right")) - 1)
+        c = cnt[p0:p1]
+        tot = int(cum[p1] - cum[p0])
+        a = np.repeat(np.arange(p0, p1), c)
+        i = order[a]
+        j = order[a + 1 + np.arange(tot) - np.repeat(cum[p0:p1] - cum[p0], c)]
+        ov = (bb[i, 1] <= bb[j, 3]) & (bb[j, 1] <= bb[i, 3])
+        ri, rj = roots(i[ov]), roots(j[ov])
+        while len(ri):
+            np.minimum.at(parent, np.maximum(ri, rj), np.minimum(ri, rj))
+            ri, rj = roots(ri), roots(rj)
+            d = ri != rj
+            ri, rj = ri[d], rj[d]
+        p0 = p1
+    return roots(slice(None))
 
 
-def _union_one_group(key: int, geoms: list[bytes], grid_size: float) -> tuple:
-    from resolve_overlap_and_gap_spark.geom.core import ring_area2
-
-    polys = []
-    for b in geoms:
-        for rings in wkb.load_polygons(bytes(b)):
-            ir = [np.floor(np.asarray(r, np.float64) / grid_size + 0.5).astype(np.int64)
-                  for r in rings]
-            polys.append((0, ir))
-
-    def single_part(rings) -> tuple[float, list]:
-        # a lone polygon IS its own union — skip the arrangement
+def union_parts(parts: list[list[np.ndarray]], group: np.ndarray,
+                bb: np.ndarray | None = None) -> dict[int, list[Face]]:
+    """Dissolve of snapped int polygons (ring 0 = shell) per group:
+    {group: [Face]}.  Each group splits into bbox components; a lone part
+    is its own union (no arrangement), and every multi-part component of
+    every group goes into ONE union_cells call, one tag per component.
+    Faces come per group in component order (by first member, members in
+    input order), so a group's result does not depend on what else shares
+    the call.  bb: per-part (xmin, ymin, xmax, ymax), derived when None."""
+    if bb is None:
+        bb = np.array([(min(r[:, 0].min() for r in rs), min(r[:, 1].min() for r in rs),
+                        max(r[:, 0].max() for r in rs), max(r[:, 1].max() for r in rs))
+                       for rs in parts], np.int64).reshape(-1, 4)
+    members: dict[int, list[int]] = {}
+    for i, c in enumerate(_bbox_components(group, bb).tolist()):
+        members.setdefault(c, []).append(i)
+    faces_of = union_cells([(c, [(0, parts[i]) for i in m])
+                            for c, m in members.items() if len(m) > 1])
+    out: dict[int, list[Face]] = {}
+    for c, m in members.items():
+        faces = out.setdefault(int(group[c]), [])
+        if len(m) > 1:
+            faces.extend(faces_of[c])
+            continue
+        rings = parts[c]
         a2 = abs(ring_area2(rings[0].astype(np.float64)))
         for h in rings[1:]:
             a2 -= abs(ring_area2(h.astype(np.float64)))
-        return a2, [r.astype(np.float64) * grid_size for r in rings]
-
-    area2 = 0.0
-    mp: list[list[np.ndarray]] = []
-    n_parts = 0
-    for members in _bbox_components(polys):
-        if len(members) == 1:
-            a2, rings_f = single_part(polys[members[0]][1])
-            area2 += a2
-            mp.append(rings_f)
-            n_parts += 1
-            continue
-        out = union_faces([polys[i] for i in members])
-        for f in out:
-            area2 += f.area2
-            mp.append([f.shell.astype(np.float64) * grid_size]
-                      + [h.astype(np.float64) * grid_size for h in f.holes])
-            n_parts += 1
-    return (key, area2 / 2.0 * grid_size * grid_size, n_parts, wkb.dump_multipolygon(mp))
+        faces.append(Face(shell=rings[0], holes=list(rings[1:]),
+                          winding={0: 1}, area2=int(a2)))
+    return out
 
 
 AUTO_SALT_TARGET = 2000   # pieces per partial-union task on the hot key
@@ -167,148 +179,50 @@ def _parse_pieces_batch(geoms: np.ndarray, grid_size: float):
     return out
 
 
-def _components_by_key(poly_key: np.ndarray, poly_bb: np.ndarray) -> np.ndarray:
-    """Connected components of the bbox-overlap graph WITHIN each key,
-    computed for every key of a bucket at once: in-key candidate pairs by
-    offset arithmetic, closed-interval bbox test, then vectorized
-    min-label propagation.  Same overlap relation (and therefore the same
-    components) as the per-key sweep it replaces.  Returns a label per
-    polygon (min poly index of its component)."""
-    n = len(poly_key)
-    lab = np.arange(n, dtype=np.int64)
-    if n < 2:
-        return lab
-    # keys are contiguous (caller lays polys out key-major)
-    brk = np.nonzero(np.r_[True, poly_key[1:] != poly_key[:-1]])[0]
-    sizes = np.diff(np.r_[brk, n])
-    big = sizes >= 2
-    gs, gk = brk[big], sizes[big]
-    if not len(gs):
-        return lab
-    pc = gk * gk
-    tp = int(pc.sum())
-    wp = np.arange(tp, dtype=np.int64) - np.repeat(
-        np.concatenate(([0], np.cumsum(pc)))[:-1], pc)
-    s_r = np.repeat(gs, pc)
-    k_r = np.repeat(gk, pc)
-    ii = s_r + wp // k_r
-    jj = s_r + wp % k_r
-    lt = ii < jj
-    ii, jj = ii[lt], jj[lt]
-    ov = (
-        (poly_bb[ii, 0] <= poly_bb[jj, 2]) & (poly_bb[jj, 0] <= poly_bb[ii, 2])
-        & (poly_bb[ii, 1] <= poly_bb[jj, 3]) & (poly_bb[jj, 1] <= poly_bb[ii, 3])
-    )
-    ii, jj = ii[ov], jj[ov]
-    while len(ii):
-        prev = lab
-        lab = lab.copy()
-        m = np.minimum(lab[ii], lab[jj])
-        np.minimum.at(lab, ii, m)
-        np.minimum.at(lab, jj, m)
-        lab = np.minimum(lab, lab[lab])
-        if np.array_equal(lab, prev):
-            break
-    return lab
-
-
-def _union_bucket_disjoint(keys: np.ndarray, geoms: np.ndarray,
-                           starts: np.ndarray, ends: np.ndarray,
-                           grid_size: float, with_geom: bool) -> list[tuple]:
-    """All keys of one bucket in ONE arrangement pass: multi-piece
-    bbox-components of every key share a single noding/DCEL/labeling
-    invocation (multi_union_faces) instead of one full machinery call per
-    key, which is what made the heal's final owner dissolve ~1 ms/key.
-
-    EXACT-FAITHFUL to the per-key path: singleton components run the
-    identical single_part float math; multi-piece components produce the
-    same integer face areas and face counts through the shared
-    arrangement (precondition: distinct keys' interiors are disjoint —
-    the heal's resolve pieces partition the plane; sharing borders is
-    fine).  Geometry is emitted only when with_geom (vertex chains can
-    carry collinear subdivision points from neighboring keys, so callers
-    that re-emit geometry downstream keep the per-key path)."""
-    from resolve_overlap_and_gap_spark.geom.arrangement import multi_union_faces
-    from resolve_overlap_and_gap_spark.geom.core import ring_area2
-
-    def single_part(rings) -> tuple[float, list]:
-        a2 = abs(ring_area2(rings[0].astype(np.float64)))
-        for h in rings[1:]:
-            a2 -= abs(ring_area2(h.astype(np.float64)))
-        return a2, ([r.astype(np.float64) * grid_size for r in rings]
-                    if with_geom else None)
-
-    # phase 1: batch-parse every piece, split each key's polygons into
-    # bbox components (all keys at once), then accumulate in EXACTLY the
-    # scalar order — keys ascending, components by first-member index,
-    # members in WKB order — so the float area sums are bit-identical
-    parsed = _parse_pieces_batch(geoms, grid_size)
-    poly_rings: list = []
-    poly_bb_rows: list = []
-    poly_key_rows: list = []
-    key_start: list[int] = []
-    for s, e in zip(starts, ends):
-        key_start.append(len(poly_rings))
-        for r in range(s, e):
-            for rings, bb in parsed[r]:
-                poly_rings.append(rings)
-                poly_bb_rows.append(bb)
-                poly_key_rows.append(s)  # group tag: one per key slice
-    key_start.append(len(poly_rings))
-    poly_bb = (np.stack(poly_bb_rows) if poly_bb_rows
-               else np.empty((0, 4), np.int64))
-    poly_key = np.asarray(poly_key_rows, np.int64)
-    lab = _components_by_key(poly_key, poly_bb)
-
-    per_key: dict[int, list] = {}      # key -> [area2, mp, n_parts]
-    pid_of: dict[int, int] = {}        # dense pid -> key
-    shared_polys: list[tuple[int, list]] = []
-    next_pid = 0
-    for ki, (s, e) in enumerate(zip(starts, ends)):
-        k = int(keys[s])
-        lo, hi = key_start[ki], key_start[ki + 1]
-        comps: dict[int, list[int]] = {}
-        for i in range(lo, hi):
-            comps.setdefault(int(lab[i]), []).append(i)
-        acc = per_key.setdefault(k, [0.0, [], 0])
-        for members in comps.values():
-            if len(members) == 1:
-                a2, rings_f = single_part(poly_rings[members[0]])
-                acc[0] += a2
-                if with_geom:
-                    acc[1].append(rings_f)
-                acc[2] += 1
-            else:
-                for i in members:
-                    shared_polys.append((next_pid, poly_rings[i]))
-                pid_of[next_pid] = k
-                next_pid += 1
-    # phase 2: one arrangement over every multi-piece component
-    if shared_polys:
-        by_pid = multi_union_faces(shared_polys)
-        for p, faces in by_pid.items():
-            acc = per_key[pid_of[p]]
-            for f in faces:
-                acc[0] += f.area2
-                if with_geom:
-                    acc[1].append(
-                        [f.shell.astype(np.float64) * grid_size]
-                        + [h.astype(np.float64) * grid_size for h in f.holes])
-                acc[2] += 1
-    return [
-        (k, acc[0] / 2.0 * grid_size * grid_size, acc[2],
-         wkb.dump_multipolygon(acc[1]) if with_geom else None)
-        for k, acc in per_key.items()
-    ]
+def _dissolve_bucket(pdf: pd.DataFrame, by: list[str], grid_size: float,
+                     with_geom: bool) -> pd.DataFrame:
+    """One bucket: a (key, area, n_parts, geom) row per distinct `by` group
+    (key, or key + salt).  Sorted numpy slicing instead of pandas groupby:
+    ~1 ms/group groupby overhead dominates when groups are tiny (most
+    owners have 1-5 pieces)."""
+    cols = [pdf[c].to_numpy() for c in by]
+    order = np.lexsort(cols[::-1])
+    cols = [c[order] for c in cols]
+    new = np.zeros(len(order), dtype=bool)
+    new[0] = True
+    for c in cols:
+        new[1:] |= c[1:] != c[:-1]
+    grp = np.cumsum(new) - 1
+    parsed = _parse_pieces_batch(pdf["geom"].to_numpy(dtype=object)[order], grid_size)
+    parts, part_grp, part_bb = [], [], []
+    for r, entry in enumerate(parsed):
+        for rings, bb in entry:
+            parts.append(rings)
+            part_grp.append(grp[r])
+            part_bb.append(bb)
+    faces = union_parts(parts, np.asarray(part_grp, np.int64),
+                        np.asarray(part_bb, np.int64).reshape(-1, 4))
+    out = []
+    for gi, s in enumerate(np.flatnonzero(new)):
+        fs = faces.get(gi, [])
+        geom = wkb.dump_multipolygon(
+            [[f.shell.astype(np.float64) * grid_size]
+             + [h.astype(np.float64) * grid_size for h in f.holes] for f in fs]
+        ) if with_geom else None
+        out.append((int(cols[0][s]), sum((f.area2 for f in fs), 0.0) / 2.0
+                    * grid_size * grid_size, len(fs), geom))
+    return pd.DataFrame(out, columns=["key", "area", "n_parts", "geom"])
 
 
 def dissolve(df: DataFrame, key_col: str, grid_size: float,
              geom_col: str = "geom", n_salts: int | str = 1,
-             auto_checkpoint: bool = True, n_buckets: int | None = None,
-             disjoint: bool = False, with_geom: bool = True) -> DataFrame:
+             n_buckets: int | None = None, with_geom: bool = True) -> DataFrame:
     """-> (key, area, n_parts, geom WKB multipolygon): union of all
     geometries per key on the snap grid (winding >= 1 rule, so overlapping
-    inputs union correctly).
+    inputs union correctly).  Keys are independent whatever their
+    geometry: the bucket kernel tags every component (union_parts).
+    with_geom=False skips the WKB dumps (geom is null) — for callers that
+    keep only key/area/n_parts.
 
     n_salts > 1 enables the SKEW path: a hot key (one owner with millions
     of pieces) otherwise serializes in a single kernel call.  Two-level
@@ -316,44 +230,30 @@ def dissolve(df: DataFrame, key_col: str, grid_size: float,
     the partials per key — is exact because geometric union is associative
     and the winding>=1 rule is idempotent; the salt spreads the heavy
     per-piece work across n_salts tasks and the final level unions only
-    n_salts pre-merged multipolygons per key.
+    n_salts pre-merged multipolygons per key.  Both levels run the same
+    bucket kernel, the partial one keyed by (key, salt).
 
     n_salts='auto' sizes the salt count from the data with ONE cheap count
     aggregation (max pieces on any key): 1 when no key exceeds
-    AUTO_SALT_TARGET (plain single-level path, no extra pass), else
-    ceil(max/TARGET) capped at AUTO_SALT_MAX — so a single giant owner can
-    never serialize the heal's final dissolve.
-
-    With 'auto' the sizing count is an EXTRA action over the input, so
-    the slimmed input is localCheckpoint()ed internally first — an
-    expensive upstream plan is evaluated ONCE, and the dissolve itself
-    then reads the checkpoint.  Explicit n_salts pays no extra action and
-    no checkpoint.  Callers whose input is ALREADY materialized (border
-    heal passes a checkpointed pieces frame) pass auto_checkpoint=False
-    to skip re-materializing the geometry bytes.
+    AUTO_SALT_TARGET (plain single-level path), else ceil(max/TARGET)
+    capped at AUTO_SALT_MAX — so a single giant owner can never serialize
+    the heal's final dissolve.  The count is an extra action over the
+    input: materialize an expensive input first (the heal passes
+    checkpointed pieces).
 
     n_buckets defaults to the scale-aware kernel bucket count (~128 hash
-    groups per core — the same straggler-balance rule as the cell
-    kernels)."""
+    groups per core)."""
     if n_buckets is None:
-        # MANY buckets for both dissolve paths.  Per-key path: buckets only
-        # balance keys across tasks, and 100 groups in 256 buckets collide
-        # ~17% of the time (serializing unrelated keys) vs <2% in 4096.
-        # Disjoint path: the bucket's shared arrangement pays a
-        # components x edges anchor ray-cast — both grow with bucket
-        # content, so the per-bucket cost is QUADRATIC in bucket size
-        # (measured 32x bucket content -> ~200x kernel time); small buckets
-        # keep it linear in total data at fixed bucket count.  The 8/core
-        # rule is only for overlay_cells kernels, whose ray-casts are
-        # cell-sliced.
+        # MANY buckets: buckets only balance keys across tasks, and 100
+        # groups in 256 buckets collide ~17% of the time (serializing
+        # unrelated keys) vs <2% in 4096.  The 8/core rule is only for
+        # overlay_cells kernels.
         sc = df.sparkSession.sparkContext
         n_buckets = max(4096, 128 * sc.defaultParallelism)
     slim = df.select(
         F.col(key_col).cast("long").alias("key"), F.col(geom_col).alias("geom")
     )
     if n_salts == "auto":
-        if auto_checkpoint:
-            slim = slim.localCheckpoint()
         maxc = (slim.groupBy("key").count()
                 .agg(F.max("count").alias("m")).collect()[0]["m"]) or 0
         n_salts = 1 if maxc <= AUTO_SALT_TARGET else min(
@@ -363,57 +263,18 @@ def dissolve(df: DataFrame, key_col: str, grid_size: float,
         # (key * n_salts + salt, floor-divide back) would round-trip
         # through double in Spark's long division and silently regroup
         # keys above ~2^53/n_salts — polygonize's _pid64 labels use 63 bits
-        salted = slim.withColumn("_salt", F.pmod(F.hash("geom"), F.lit(n_salts)))
-
-        def partial_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            keys = pdf["key"].to_numpy()
-            salts = pdf["_salt"].to_numpy()
-            order = np.lexsort((salts, keys))
-            keys, salts = keys[order], salts[order]
-            geoms = pdf["geom"].to_numpy(dtype=object)[order]
-            brk = (keys[1:] != keys[:-1]) | (salts[1:] != salts[:-1])
-            starts = np.flatnonzero(np.r_[True, brk])
-            ends = np.r_[starts[1:], len(keys)]
-            rows = [
-                _union_one_group(int(keys[s]), list(geoms[s:e]), grid_size)
-                for s, e in zip(starts, ends)
-            ]
-            return pd.DataFrame(rows, columns=["key", "area", "n_parts", "geom"])
-
-        partial = salted.withColumn(
+        partial = slim.withColumn(
+            "_salt", F.pmod(F.hash("geom"), F.lit(n_salts))
+        ).withColumn(
             "bucket", F.pmod(F.hash("key", "_salt"), F.lit(n_buckets))
-        ).groupBy("bucket").applyInPandas(partial_kernel, DISSOLVE_SCHEMA)
+        ).groupBy("bucket").applyInPandas(
+            lambda pdf: _dissolve_bucket(pdf, ["key", "_salt"], grid_size, True),
+            DISSOLVE_SCHEMA)
         return dissolve(partial.select("key", "geom"), "key", grid_size,
-                        disjoint=disjoint, with_geom=with_geom)
-
-    if disjoint:
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            keys = pdf["key"].to_numpy()
-            order = np.argsort(keys, kind="stable")
-            keys = keys[order]
-            geoms = pdf["geom"].to_numpy(dtype=object)[order]
-            starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
-            ends = np.r_[starts[1:], len(keys)]
-            rows = _union_bucket_disjoint(
-                keys, geoms, starts, ends, grid_size, with_geom)
-            return pd.DataFrame(rows, columns=["key", "area", "n_parts", "geom"])
-    else:
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            # sorted numpy slicing instead of pandas groupby: ~1 ms/group
-            # groupby overhead dominates when groups are tiny (the common
-            # case after per-cell resolve — most owners have 1-5 pieces)
-            keys = pdf["key"].to_numpy()
-            order = np.argsort(keys, kind="stable")
-            keys = keys[order]
-            geoms = pdf["geom"].to_numpy(dtype=object)[order]
-            starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
-            ends = np.r_[starts[1:], len(keys)]
-            rows = [
-                _union_one_group(int(keys[s]), list(geoms[s:e]), grid_size)
-                for s, e in zip(starts, ends)
-            ]
-            return pd.DataFrame(rows, columns=["key", "area", "n_parts", "geom"])
+                        with_geom=with_geom)
 
     # hashed buckets: many keys per Arrow round-trip
     bucketed = slim.withColumn("bucket", F.pmod(F.hash("key"), F.lit(n_buckets)))
-    return bucketed.groupBy("bucket").applyInPandas(kernel, DISSOLVE_SCHEMA)
+    return bucketed.groupBy("bucket").applyInPandas(
+        lambda pdf: _dissolve_bucket(pdf, ["key"], grid_size, with_geom),
+        DISSOLVE_SCHEMA)

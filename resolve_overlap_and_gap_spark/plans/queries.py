@@ -1122,12 +1122,10 @@ def q_resolve_healed(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = resolve(layer, cfg, res=res, emit_border_gaps=True).select(
         "cell_id", "owner", "geom").localCheckpoint()
     pieces = both.where(F.col("owner") >= 0)
-    # the output drops geometry, and resolve pieces partition the plane:
-    # run the bucket-batched disjoint union and skip the WKB dumps
+    # the output drops geometry: skip the final dissolve's WKB dumps
     healed = border_gap_merge(layer, pieces, cfg, res=res,
                               border_gaps=border_gaps_from_resolve(both),
-                              checkpoint=False,
-                              dissolve_disjoint=True, dissolve_geom=False,
+                              checkpoint=False, dissolve_geom=False,
                               piece_res=[res])  # fixed-res resolve: known
     return healed.select(
         "owner",

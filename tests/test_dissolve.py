@@ -122,3 +122,58 @@ def test_dissolve_salted_63bit_keys(spark):
     assert set(out) == {base, base + 1, base + 2}
     for k, (a, n) in out.items():
         assert n == 1 and a == pytest.approx(3.5, rel=1e-9)
+
+
+def _brute_components(group, bb):
+    """Min-index component labels of the closed-bbox overlap graph within
+    each group, by an all-pairs check."""
+    n = len(group)
+    lab = list(range(n))
+    for i in range(n):
+        for j in range(n):
+            if (group[i] == group[j] and bb[i, 0] <= bb[j, 2] and bb[j, 0] <= bb[i, 2]
+                    and bb[i, 1] <= bb[j, 3] and bb[j, 1] <= bb[i, 3]):
+                a, b = sorted((lab[i], lab[j]))
+                lab = [a if v == b else v for v in lab]
+    return lab
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_bbox_components_equal_brute_force(seed):
+    from resolve_overlap_and_gap_spark.operators.dissolve import _bbox_components
+
+    rng = np.random.default_rng(seed)
+    n = 80
+    group = rng.integers(0, 3, size=n)
+    lo = rng.integers(0, 60, size=(n, 2))
+    bb = np.hstack([lo, lo + rng.integers(0, 8, size=(n, 2))]).astype(np.int64)
+    want = _brute_components(group, bb)
+    for chunk in (1 << 16, 3):   # 3: candidate pairs span many chunks
+        assert _bbox_components(group, bb, chunk=chunk).tolist() == want
+
+
+@pytest.mark.parametrize("layout", ["chain", "column"])
+def test_bbox_components_memory_is_not_quadratic(layout):
+    """One key with 3000 boxes: a chain (each box overlaps the next) and a
+    column (every box overlaps every other in x, only neighbours in y —
+    the sweep's worst case).  Generating all k*k candidate pairs would
+    allocate 72 MB per int64 pair array; the sweep stays under 16 MB."""
+    import tracemalloc
+
+    from resolve_overlap_and_gap_spark.operators.dissolve import _bbox_components
+
+    k = 3000
+    bound = 16 << 20
+    assert k * k * 8 > 4 * bound
+    s = np.arange(k, dtype=np.int64) * 10
+    z = np.zeros(k, np.int64)
+    bb = (np.stack([s, z, s + 15, z + 10], axis=1) if layout == "chain"
+          else np.stack([z, s, z + 100, s + 15], axis=1))
+    tracemalloc.start()
+    try:
+        lab = _bbox_components(np.zeros(k, np.int64), bb)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert (lab == 0).all()
+    assert peak < bound, peak
