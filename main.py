@@ -64,10 +64,7 @@ def main() -> None:
     elif cmd == "healed":
         from pyspark.sql import functions as F
 
-        from resolve_overlap_and_gap_spark.operators.border import (
-            border_gap_merge,
-            border_gaps_from_resolve,
-        )
+        from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
         from resolve_overlap_and_gap_spark.operators.resolve import (
             QUARANTINE_OWNER,
             resolve,
@@ -85,11 +82,7 @@ def main() -> None:
                 F.element_at("other_ids", 1).alias("fid"),
                 "geom",
             ).write.mode("overwrite").parquet(f"{out_dir}_quarantine")
-        out = border_gap_merge(
-            layer, both.where(F.col("owner") >= 0), cfg, res=res,
-            border_gaps=border_gaps_from_resolve(both),
-            checkpoint=False,
-        )
+        out = border_gap_merge(both, cfg, piece_res=[res])
     elif cmd == "query":
         name = sys.argv[4]
         out = Q.queries()[name](spark, sf_dir)

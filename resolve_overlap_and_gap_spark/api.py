@@ -107,10 +107,7 @@ def resolve_overlap_gap_run(
     arrangement at `res` as cut lines and faces report border_line_ids
     (ar5)."""
     clean = clean if clean is not None else CleanInfo()
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
     from resolve_overlap_and_gap_spark.operators.lines import resolve_with_lines
     from resolve_overlap_and_gap_spark.operators.resolve import (
         QUARANTINE_OWNER,
@@ -137,12 +134,9 @@ def resolve_overlap_gap_run(
         quarantined = both.where(F.col("owner") == QUARANTINE_OWNER)
         healed = None
         if heal:
-            gaps = border_gaps_from_resolve(both)
             # the balanced frontier may mix resolutions: piece_res=None
             # derives them from the pieces
-            healed = border_gap_merge(feats, pieces, cfg, res=res,
-                                      border_gaps=gaps, checkpoint=False,
-                                      piece_res=None)
+            healed = border_gap_merge(both, cfg)
 
     per_owner = pieces.groupBy("owner").agg(
         F.sum("area").alias("area"),

@@ -127,10 +127,7 @@ def run_healed_checkpointed(lin: Lineage, features: DataFrame,
          stage-1 table.
     """
     from resolve_overlap_and_gap_spark.operators import resolve as R
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
     from resolve_overlap_and_gap_spark.operators.overlap_gap import with_cells
 
     feats = features.selectExpr("cast(fid as long) as fid", "geom")
@@ -141,9 +138,7 @@ def run_healed_checkpointed(lin: Lineage, features: DataFrame,
 
     both = run_stage_checkpointed(lin, "resolve", cells, compute, "resolved")
     if not lin.has_stage("healed"):
-        pieces = both.where(F.col("owner") >= 0)
-        healed = border_gap_merge(feats, pieces, cfg, res=res,
-                                  border_gaps=border_gaps_from_resolve(both))
+        healed = border_gap_merge(both, cfg)
         if lin.fmt == "iceberg":
             healed.writeTo(f"{lin.root}.healed").createOrReplace()
         else:

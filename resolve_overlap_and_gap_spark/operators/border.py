@@ -6,7 +6,9 @@ function_resolve_overlap_gap_single_cell.sql:597-787).
 Per-cell resolve defers any face touching its cell border (they stay
 unmerged there). This pass:
 
-  1. takes gap faces that touch cell borders (from detection),
+  1. takes gap faces that touch cell borders (from the resolve overlay:
+     GAP_OWNER rows below min_area, KILL_OWNER interval rows at or above
+     it),
   2. reassembles them ACROSS cells with an ITERATED PARENT-CELL DISSOLVE —
      group pieces by their parent cell, union per group (union_parts heals
      the grid-border edges), finalize faces that no longer touch the parent
@@ -61,7 +63,7 @@ from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay
 from resolve_overlap_and_gap_spark.operators.dissolve import union_parts
-from resolve_overlap_and_gap_spark.operators.overlap_gap import detect_all, with_cells
+from resolve_overlap_and_gap_spark.operators.overlap_gap import with_cells
 
 ASSIGN_SCHEMA = T.StructType([
     T.StructField("owner", T.LongType()),
@@ -84,6 +86,13 @@ _ZMASK = (1 << grid.RES_SHIFT) - 1
 # single round (the multi-level pre-merge only pays off when the per-round
 # shuffles carry real mass); larger inputs keep the level-jump cascade
 ROOT_JUMP_MAX_ROWS = 200_000
+
+# quadtree levels one reassembly round coarsens (ceil(res/LEVEL_JUMP)
+# shuffles in total instead of res): grouping by a deeper ancestor is still
+# exact — a face interior to ANY ancestor cell can never gain more mass —
+# it just unions slightly larger neighborhoods per group, which the bbox
+# component decomposition absorbs
+LEVEL_JUMP = 3
 
 
 # ---------------------------------------------------------- kill intervals
@@ -232,8 +241,7 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
     part_cell: list[int] = []
     for ci, (cell, sub) in enumerate(pdf.groupby("cell_id", sort=True)):
         kiv_parts: list[np.ndarray] = []
-        kinds = sub["kind"] if "kind" in sub.columns else ["live"] * len(sub)
-        for kind, b in zip(kinds, sub["geom"]):
+        for kind, b in zip(sub["kind"], sub["geom"]):
             if kind == "kill":
                 kiv_parts.append(unpack_intervals(b))
             else:
@@ -280,7 +288,7 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
 
 
 def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
-                           n_buckets: int = 64, level_jump: int = 3) -> DataFrame:
+                           n_buckets: int = 64) -> DataFrame:
     """Distributed cross-cell sliver reassembly: iterated ancestor-cell
     dissolve of (cell_id[, kind], geom) border gap rows.  kind 'live' rows
     (the default when the column is absent) carry WKB gap pieces below
@@ -289,13 +297,9 @@ def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
     (gap_area, geom) — every reassembled gap face with
     0 < area < cfg.min_area_to_keep not connected to killed mass.
 
-    level_jump coarsens several quadtree levels per iteration (ceil(res/k)
-    shuffles total instead of res): grouping by a deeper ancestor is still
-    exact — a face interior to ANY ancestor cell can never gain more mass —
-    it just unions slightly larger neighborhoods per group, which the bbox
-    component decomposition absorbs.  Mixed-resolution inputs (balanced
-    grid) re-key every piece to its ancestor at the iteration's target
-    level, so pieces meet at their common ancestor."""
+    Each iteration coarsens LEVEL_JUMP quadtree levels.  Mixed-resolution
+    inputs (balanced grid) re-key every piece to its ancestor at the
+    iteration's target level, so pieces meet at their common ancestor."""
     res_col = F.shiftrightunsigned(F.col("cell_id"), grid.RES_SHIFT).bitwiseAND(F.lit(0x1F))
     empty = border_gaps.sparkSession.createDataFrame([], T.StructType([
         T.StructField("gap_area", T.DoubleType()),
@@ -311,13 +315,13 @@ def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
         return empty
     lmax, lmin = int(b["hi"]), int(b["lo"])
     # bounded gap mass: group everything at the root in ONE round instead
-    # of ceil(res/level_jump) rounds — each round is a fixed-latency
+    # of ceil(res/LEVEL_JUMP) rounds — each round is a fixed-latency
     # shuffle + kernel + checkpoint, and at this size the root kernel sees
     # the same rows the last round would anyway.  The SAME count that
     # derived the level bounds gates it, so big inputs (100 TB border
     # mass) keep the multi-round pre-merge untouched.
-    if int(b["n"]) <= ROOT_JUMP_MAX_ROWS:
-        level_jump = max(level_jump, lmax)
+    level_jump = (max(LEVEL_JUMP, lmax) if int(b["n"]) <= ROOT_JUMP_MAX_ROWS
+                  else LEVEL_JUMP)
     sliver_parts: list[DataFrame] = []
 
     while True:
@@ -362,152 +366,70 @@ def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
     return out
 
 
-def _kill_intervals_udf(cfg: EngineConfig):
-    """(cell_id, WKB gap geom) -> packed border-contact intervals of the
-    geometry with its cell's border lines (null when there is no
-    positive-length contact)."""
+def border_gap_merge(resolved: DataFrame, cfg: EngineConfig,
+                     dissolve_geom: bool = True,
+                     piece_res: list[int] | None = None) -> DataFrame:
+    """-> (owner, area, n_parts, geom) — the final healed layer.
+
+    resolved: the output of resolve, resolve_balanced or resolve_cells
+    called with emit_border_gaps=True.  Rows with owner >= 0 are the
+    pieces; GAP_OWNER rows are the sub-min border gap pieces and
+    KILL_OWNER rows the packed border intervals of >= min_area border gaps
+    (without them, sub-min fragments of a big cross-border gap would be
+    wrongly merged into owners); QUARANTINE_OWNER rows take no part.
+    dissolve_geom: forwarded to the final owner dissolve as with_geom —
+    callers that do not re-emit the healed geometry (resolve_healed emits
+    owner/area/n_parts only) pass False to skip the WKB dumps (geom null).
+    piece_res: the distinct cell resolutions of the pieces when the caller
+    knows them (fixed-res resolve: [res]) — skips a distinct+collect over
+    the pieces; None derives them from the data (balanced resolve emits
+    mixed resolutions).
+    """
+    from resolve_overlap_and_gap_spark.operators.dissolve import dissolve
+    from resolve_overlap_and_gap_spark.operators.resolve import GAP_OWNER, KILL_OWNER
+
     g = cfg.snap_tolerance
+    # the resolve output feeds the gap reassembly, the sliver-candidate
+    # join AND the final owner dissolve — materialize once or the whole
+    # resolve pipeline recomputes per consumer (measured 2x wall on the
+    # healed pipeline).  Only the columns the heal reads: area/other_ids
+    # would materialize ~30% more bytes for nothing
+    resolved = resolved.select("cell_id", "owner", "geom").localCheckpoint()
+    pieces = resolved.where(F.col("owner") >= 0)
 
-    @F.pandas_udf(T.BinaryType())
-    def kiv(cell_ids: pd.Series, geoms: pd.Series) -> pd.Series:
-        out = []
-        for cid, b in zip(cell_ids, geoms):
-            xmin, ymin, xmax, ymax = grid.cell_bounds_np(
-                np.array([int(cid)], dtype=np.int64))
-            cx0 = int(np.floor(xmin[0] / g + 0.5)); cy0 = int(np.floor(ymin[0] / g + 0.5))
-            cx1 = int(np.floor(xmax[0] / g + 0.5)); cy1 = int(np.floor(ymax[0] / g + 0.5))
-            iv: list = []
-            for rings in _load_int_polys(b, g):
-                iv.extend(ring_border_intervals(rings, cx0, cy0, cx1, cy1))
-            out.append(pack_intervals(merge_intervals(np.asarray(iv, np.int64)))
-                       if iv else None)
-        return pd.Series(out, dtype=object)
+    def dissolve_owners(parts: DataFrame) -> DataFrame:
+        # n_salts='auto': one count agg decides whether any owner is hot
+        # enough to need the two-level salted union (a single giant owner
+        # must never serialize the heal's final dissolve); every input is
+        # materialized, so the count re-reads cached partitions
+        return dissolve(parts, "owner", g, n_salts="auto",
+                        with_geom=dissolve_geom).withColumnRenamed("key", "owner")
 
-    return kiv
-
-
-def border_gaps_from_resolve(both: DataFrame) -> DataFrame:
-    """resolve(..., emit_border_gaps=True) output -> the (cell_id, kind,
-    geom) frame border_gap_merge expects: GAP_OWNER rows are live sub-min
-    gap pieces, KILL_OWNER rows carry packed border intervals of
-    >= min_area border gaps."""
-    from resolve_overlap_and_gap_spark.operators.resolve import (
-        GAP_OWNER,
-        KILL_OWNER,
-    )
-
-    return both.where(F.col("owner").isin(GAP_OWNER, KILL_OWNER)).select(
+    # 1. border-touching gap faces from the resolve overlay, split by the
+    #    min_area threshold: sub-min pieces reassemble as live geometry;
+    #    >= min_area gap mass rides along as kill intervals (its border
+    #    contact only) so any live fragment connected to it is recognized
+    #    as part of a >= min_area gap and stays a gap instead of merging
+    #    into an owner.
+    border_gaps = resolved.where(F.col("owner").isin(GAP_OWNER, KILL_OWNER)).select(
         "cell_id",
         F.when(F.col("owner") == GAP_OWNER, F.lit("live"))
         .otherwise(F.lit("kill")).alias("kind"),
         "geom",
     )
 
-
-def _geodesic_area_udf(cfg: EngineConfig):
-    from resolve_overlap_and_gap_spark.geom.geodesic import polygon_area_m2
-
-    @F.pandas_udf(T.DoubleType())
-    def area_m2(geoms: pd.Series) -> pd.Series:
-        vals = np.empty(len(geoms), dtype=np.float64)
-        for i, b in enumerate(geoms):
-            vals[i] = sum(
-                polygon_area_m2([np.asarray(r, np.float64) for r in rings],
-                                spheroid=cfg.geodesic_spheroid)
-                for rings in wkb.load_polygons(bytes(b))
-            )
-        return pd.Series(vals)
-
-    return area_m2
-
-
-def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
-                     res: int = 8, border_gaps: DataFrame | None = None,
-                     checkpoint: bool = True,
-                     dissolve_geom: bool = True,
-                     piece_res: list[int] | None = None) -> DataFrame:
-    """-> (owner, area, geom) — the final healed layer.
-
-    features: the ORIGINAL polygon layer (fid, geom) — used to detect gaps
-    when border_gaps is not supplied.
-    pieces: resolve() output (cell_id, owner, other_ids, area, geom).
-    border_gaps: optional (cell_id[, kind], geom) border-gap rows — pass
-    border_gaps_from_resolve(resolve(..., emit_border_gaps=True)) to reuse
-    the resolve overlay instead of running a second full detection.  kind
-    'live' rows (default) are sub-min gap pieces; 'kill' rows carry packed
-    border intervals of >= min_area border gaps (without them, sub-min
-    fragments of a big cross-border gap would be wrongly merged into
-    owners).  A geom-only frame is accepted (all-live; cell assigned from
-    the bbox center — exact, since each per-cell gap piece lies inside one
-    cell).
-    checkpoint: set False when the caller already materialized pieces
-    (avoids a redundant eager localCheckpoint).
-    dissolve_geom: forwarded to the final owner dissolve as with_geom —
-    callers that do not re-emit the healed geometry (resolve_healed emits
-    owner/area/n_parts only) pass False to skip the WKB dumps (geom null).
-    piece_res: the distinct cell resolutions present in `pieces` when the
-    caller knows them (fixed-res resolve: [res]) — skips a distinct+collect
-    over the pieces table; None derives them from the data (balanced
-    resolve emits mixed resolutions).
-    """
-    g = cfg.snap_tolerance
-    spark = pieces.sparkSession
-    # pieces feeds BOTH the sliver-candidate join and the final owner
-    # dissolve — materialize once or the whole resolve pipeline recomputes
-    # per consumer (measured 2x wall on the healed pipeline)
-    if checkpoint:
-        pieces = pieces.localCheckpoint()
-
-    # 1. border-touching gap faces, split by the min_area threshold:
-    #    sub-min pieces reassemble as live geometry; >= min_area gap mass
-    #    rides along as kill intervals (its border contact only) so any
-    #    live fragment connected to it is recognized as part of a
-    #    >= min_area gap and stays a gap instead of merging into an owner.
-    if border_gaps is None:
-        det = detect_all(features, cfg, res=res).where(
-            "kind = 'gap' and touches_border")
-        if cfg.geodesic_measure and not cfg.utm:
-            # detection areas are planar; the m^2 threshold needs the
-            # geodesic measure per piece (Arrow-batched, gap rows only)
-            det = det.withColumn("_dec_area",
-                                 _geodesic_area_udf(cfg)(F.col("geom")))
-        else:
-            det = det.withColumn("_dec_area", F.col("area"))
-        det = det.localCheckpoint()
-        live = det.where(F.col("_dec_area") < cfg.min_area_to_keep).select(
-            "cell_id", F.lit("live").alias("kind"), "geom")
-        big = det.where(F.col("_dec_area") >= cfg.min_area_to_keep).select(
-            "cell_id",
-            _kill_intervals_udf(cfg)(F.col("cell_id"), F.col("geom")).alias("geom"),
-        )
-        kill = big.where(F.col("geom").isNotNull()).select(
-            "cell_id", F.lit("kill").alias("kind"), "geom")
-        border_gaps = live.unionByName(kill)
-    elif "cell_id" not in border_gaps.columns:
-        # bbox center is strictly interior to the piece's (unique) cell
-        from resolve_overlap_and_gap_spark.operators.overlap_gap import wkb_bounds
-
-        b = border_gaps.withColumn("_b", wkb_bounds(F.col("geom")))
-        border_gaps = b.select(
-            grid.cell_id_col((F.col("_b.xmin") + F.col("_b.xmax")) / 2,
-                             (F.col("_b.ymin") + F.col("_b.ymax")) / 2,
-                             res).alias("cell_id"),
-            "geom",
-        )
-
     # 2. reassemble across cells: distributed iterated parent-cell dissolve.
     #    (already materialized: built from the loop's checkpointed outputs)
     slivers = reassemble_border_gaps(border_gaps, cfg)
-    if slivers.isEmpty():
-        from resolve_overlap_and_gap_spark.operators.dissolve import dissolve
-
-        # n_salts='auto': one count agg decides whether any owner is hot
-        # enough to need the two-level salted union (a single giant owner
-        # must never serialize the heal's final dissolve); pieces is
-        # already materialized above, so the count re-reads it
-        return dissolve(pieces.select("owner", "geom"), "owner", g,
-                        n_salts="auto",
-                        with_geom=dissolve_geom).withColumnRenamed("key", "owner")
+    no_slivers = slivers.isEmpty()
+    if piece_res is None and not no_slivers:
+        res_col = F.shiftrightunsigned(
+            F.col("cell_id"), grid.RES_SHIFT).bitwiseAND(F.lit(0x1F))
+        piece_res = sorted(int(r.r) for r in
+                           pieces.select(res_col.alias("r")).distinct().collect())
+    if no_slivers or not piece_res:
+        # no sliver, or no piece a sliver could join: only the dissolve left
+        return dissolve_owners(pieces.select("owner", "geom"))
 
     # 3. slivers join candidate pieces sharing a covering cell with the
     #    sliver bbox (J1); adjacency per sliver via overlay; choose
@@ -520,13 +442,6 @@ def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
         "gap_area",
         F.col("geom").alias("gap_geom"),
     ).localCheckpoint()
-    if piece_res is None:
-        res_col = F.shiftrightunsigned(
-            F.col("cell_id"), grid.RES_SHIFT).bitwiseAND(F.lit(0x1F))
-        piece_res = sorted(int(r.r) for r in
-                           pieces.select(res_col.alias("r")).distinct().collect())
-    if not piece_res:
-        piece_res = [res]  # no pieces at all: keep the join shape (empty)
     sl_in = (sl_df.withColumnRenamed("gap_geom", "geom")
              .withColumnRenamed("gap_id", "fid"))
     sl_cells = None
@@ -565,7 +480,6 @@ def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
             faces, adj = overlay(polys, with_adjacency=True)
             # face indices covered by the gap vs by pieces
             gap_faces = {i for i, f in enumerate(faces) if -2 in f.cover}
-            best_owner, best_len = None, -1.0
             shared: dict[int, float] = {}
             for (a, b), L in adj.items():
                 if a < 0 or b < 0:
@@ -579,28 +493,16 @@ def border_gap_merge(features: DataFrame, pieces: DataFrame, cfg: EngineConfig,
                         shared[owners[p]] = shared.get(owners[p], 0.0) + L
             if shared:
                 best_owner = min(shared, key=lambda o: (-shared[o], o))
-            if best_owner is not None:
-                ga = float(sub["gap_area"].iloc[0]) if "gap_area" in sub else 0.0
-                out.append((best_owner, ga, bytes(gap_geom)))
+                out.append((best_owner, float(sub["gap_area"].iloc[0]),
+                            bytes(gap_geom)))
         return pd.DataFrame(out, columns=["owner", "gap_area", "geom"])
 
-    assigned = cand.groupBy("gap_id").applyInPandas(
-        lambda pdf: kernel(pdf), ASSIGN_SCHEMA
-    )
+    assigned = cand.groupBy("gap_id").applyInPandas(kernel, ASSIGN_SCHEMA)
 
     # 4. final healed layer: dissolve pieces + absorbed slivers per owner
     #    (the union removes internal cell-border edges AND welds the
     #    absorbed gap slivers into their new owner's geometry).
     #    assigned is tiny (one row per sliver) — materialize it so the
-    #    auto-salt count agg below doesn't recompute the sliver kernel;
-    #    n_salts='auto' keeps a hot owner from serializing the union.
-    from resolve_overlap_and_gap_spark.operators.dissolve import dissolve
-
-    combined = pieces.select("owner", "geom").unionByName(
-        assigned.select("owner", "geom").localCheckpoint()
-    )
-    # both union branches are materialized already (pieces by the
-    # caller/checkpoint above, assigned just now): the auto-salt sizing
-    # count re-reads cached partitions instead of recomputing geometry
-    return dissolve(combined, "owner", g, n_salts="auto",
-                    with_geom=dissolve_geom).withColumnRenamed("key", "owner")
+    #    auto-salt count agg doesn't recompute the sliver kernel.
+    return dissolve_owners(pieces.select("owner", "geom").unionByName(
+        assigned.select("owner", "geom").localCheckpoint()))

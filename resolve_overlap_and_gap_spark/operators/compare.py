@@ -43,18 +43,13 @@ def compare_before_after(layer: DataFrame, cfg: EngineConfig, res: int) -> DataF
     """-> two rows (phase='before'|'after') of detection metrics. After
     resolve + heal, overlap area must be ~0 (snap-scale residue at most) and
     small interior gaps absorbed."""
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
     from resolve_overlap_and_gap_spark.operators.resolve import resolve
 
     layer = layer.localCheckpoint()  # feeds detect twice + resolve
     before = _metrics(detect_all(layer, cfg, res=res), "before", cfg.min_area_to_keep)
-    both = resolve(layer, cfg, res=res, emit_border_gaps=True).localCheckpoint()
-    pieces = both.where(F.col("owner") >= 0)
-    healed = border_gap_merge(layer, pieces, cfg, res=res, checkpoint=False,
-                              border_gaps=border_gaps_from_resolve(both))
+    healed = border_gap_merge(resolve(layer, cfg, res=res, emit_border_gaps=True), cfg,
+                              piece_res=[res])
     clean = healed.select(F.col("owner").alias("fid"), "geom")
     after = _metrics(detect_all(clean, cfg, res=res), "after", cfg.min_area_to_keep)
     return before.unionByName(after)

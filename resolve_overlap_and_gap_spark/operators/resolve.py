@@ -377,11 +377,12 @@ def resolve(features: DataFrame, cfg: EngineConfig, res: int = 8,
     payload_col: carry the named column THROUGH the kernel and attach the
     owner's value to every output piece (quarantine rows carry the
     quarantined feature's) — the reference's column_data_as_json pattern
-    (function_resolve_overlap_gap_init.sql:249).  Trade-off vs the default
-    post-resolve re-join (resolve_layer): the payload bytes ship through
-    the covering-cell shuffle once per covering cell, but the input is
-    scanned exactly once — prefer it when the payload is small relative to
-    the geometry or the input scan is the expensive part."""
+    (function_resolve_overlap_gap_init.sql:249).  Trade-off vs a
+    post-resolve re-join (api.resolve_overlap_gap_run's per-owner layer):
+    the payload bytes ship through the covering-cell shuffle once per
+    covering cell, but the input is scanned exactly once — prefer it when
+    the payload is small relative to the geometry or the input scan is the
+    expensive part."""
     sel = [F.col(id_col).cast("long").alias("fid"), F.col(geom_col).alias("geom")]
     if payload_col is not None:
         sel.append(F.col(payload_col).alias("payload"))
@@ -411,19 +412,3 @@ def resolve_balanced(features: DataFrame, cfg: EngineConfig,
         assigned = assign_balanced_cells(features, cfg, geom_col, id_col)
     return resolve_cells(assigned, cfg, emit_border_gaps, with_geom, n_buckets)
 
-
-def resolve_layer(features: DataFrame, cfg: EngineConfig, res: int = 8,
-                  geom_col: str = "geom", id_col: str = "fid") -> DataFrame:
-    """Final layer: one row per owner with attributes re-attached (J3) and
-    per-owner area; pieces stay per-cell multipolygons (the healed
-    geometry is border.border_gap_merge)."""
-    pieces = resolve(features, cfg, res, geom_col, id_col)
-    per_owner = pieces.groupBy("owner").agg(
-        F.sum("area").alias("area"),
-        F.flatten(F.collect_list("other_ids")).alias("other_ids_raw"),
-        F.count("*").alias("n_pieces"),
-    ).withColumn("other_ids", F.array_distinct(F.array_sort("other_ids_raw"))).drop("other_ids_raw")
-    attrs = mark_valid(features, geom_col).drop(geom_col)
-    return per_owner.join(
-        attrs.withColumnRenamed(id_col, "owner"), "owner", "left"
-    )

@@ -978,6 +978,8 @@ def synthetic_polygon_layer(spark: SparkSession, n: int,
 def res_for_n(n: int) -> int:
     import math
 
+    # 4^res cells; ~40 rows/cell balances per-cell fixed cost against the
+    # superlinear dense-cell noding cost (measured sweet spot at sf0.1)
     return max(4, min(int(math.ceil(math.log(max(n / 40.0, 1.0), 4))), 10))
 
 
@@ -996,30 +998,14 @@ def _table_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     return hit
 
 
-_DENSITY_CACHE: dict[tuple, int] = {}
-
-
 def _density_res(spark: SparkSession, sf_dir: str, table: str = "orders") -> int:
     """Content-balanced principle applied globally: pick the cell resolution
     that keeps expected rows-per-cell near the reference's
     max_rows_in_each_cell knob (~4 per cell here given world-wide spread).
     Full per-cell adaptive refinement lives in
-    operators.celljoin.content_balanced_cells.  Memoized per (session,
-    input): six geometry queries would otherwise each pay the count()
-    action for the same constant."""
-    import math
-
-    ck = (spark.sparkContext.applicationId, sf_dir, table)
-    hit = _DENSITY_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    n = _table_count(spark, sf_dir, table)
-    # 4^res cells; ~40 rows/cell balances per-cell fixed cost against the
-    # superlinear dense-cell noding cost (measured sweet spot at sf0.1)
-    res = int(math.ceil(math.log(max(n / 40.0, 1.0), 4)))
-    out = max(4, min(res, 10))
-    _DENSITY_CACHE[ck] = out
-    return out
+    operators.celljoin.content_balanced_cells.  The row count is memoized
+    per (session, input) by _table_count."""
+    return res_for_n(_table_count(spark, sf_dir, table))
 
 
 _ASSIGN_CACHE: dict[tuple, DataFrame] = {}
@@ -1104,28 +1090,17 @@ def q_resolve_healed(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap-sliver merge + owner dissolve). Rows-only driver check; the
     single-cell-oracle equivalence lives in tests/test_border.py."""
     from resolve_overlap_and_gap_spark.config import EngineConfig
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
     from resolve_overlap_and_gap_spark.operators.resolve import resolve
 
     layer = derived_polygon_layer(spark, sf_dir)
     cfg = EngineConfig(snap_tolerance=DETECT_CFG_SNAP, min_area_to_keep=1e-4)
     res = _density_res(spark, sf_dir)
-    # fast path: the resolve overlay emits the border gaps itself — no
-    # second detection pass (equivalence: tests/test_healed_fastpath.py).
-    # Checkpoint only the columns the heal consumes (cell_id, owner, geom):
-    # area/other_ids would materialize ~30% more bytes for nothing — the
-    # healed output recomputes area from the union (guide §2.3 project
-    # before the exchange)
-    both = resolve(layer, cfg, res=res, emit_border_gaps=True).select(
-        "cell_id", "owner", "geom").localCheckpoint()
-    pieces = both.where(F.col("owner") >= 0)
-    # the output drops geometry: skip the final dissolve's WKB dumps
-    healed = border_gap_merge(layer, pieces, cfg, res=res,
-                              border_gaps=border_gaps_from_resolve(both),
-                              checkpoint=False, dissolve_geom=False,
+    # the resolve overlay emits the border gaps itself (equivalence with
+    # detected border gaps: tests/test_healed_fastpath.py); the output drops
+    # geometry, so the final dissolve skips its WKB dumps
+    healed = border_gap_merge(resolve(layer, cfg, res=res, emit_border_gaps=True),
+                              cfg, dissolve_geom=False,
                               piece_res=[res])  # fixed-res resolve: known
     return healed.select(
         "owner",
@@ -1473,19 +1448,12 @@ def q_healed_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     This pins the healed GEOMETRY itself, not just its invariants
     (clean_invariants) — the last pipeline without a hash-exact row."""
     from resolve_overlap_and_gap_spark.config import EngineConfig
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
     from resolve_overlap_and_gap_spark.operators.resolve import resolve
 
     layer = _healed_cluster_layer(spark, sf_dir)
     cfg = EngineConfig(snap_tolerance=DETECT_CFG_SNAP, min_area_to_keep=2e-3)
-    both = resolve(layer, cfg, res=12, emit_border_gaps=True).localCheckpoint()
-    pieces = both.where(F.col("owner") >= 0)
-    healed = border_gap_merge(layer, pieces, cfg, res=12,
-                              border_gaps=border_gaps_from_resolve(both),
-                              checkpoint=False)
+    healed = border_gap_merge(resolve(layer, cfg, res=12, emit_border_gaps=True), cfg)
     return healed.select(
         "owner",
         F.expr("cast(round(area * 100000000.0) as bigint)").alias("area_x1e8"),
@@ -1525,10 +1493,7 @@ def q_healed_strip_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths share the longest-border/min-id rule, so the answer is the same
     closed form."""
     from resolve_overlap_and_gap_spark.config import EngineConfig, GridConfig
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
     from resolve_overlap_and_gap_spark.operators.resolve import resolve_balanced
 
     layer = _healed_cluster_layer(spark, sf_dir, mod=10)
@@ -1540,11 +1505,7 @@ def q_healed_strip_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid=GridConfig(base_resolution=8, max_resolution=12,
                         max_rows_in_each_cell=6),
     )
-    both = resolve_balanced(layer, cfg, emit_border_gaps=True).localCheckpoint()
-    pieces = both.where(F.col("owner") >= 0)
-    healed = border_gap_merge(layer, pieces, cfg, res=12,
-                              border_gaps=border_gaps_from_resolve(both),
-                              checkpoint=False)
+    healed = border_gap_merge(resolve_balanced(layer, cfg, emit_border_gaps=True), cfg)
     return healed.select(
         "owner",
         F.expr("cast(round(area * 100000000.0) as bigint)").alias("area_x1e8"),
@@ -1568,20 +1529,13 @@ def q_healed_strip_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     25.8-28.4e6 m^2) at EVERY cluster latitude, so the geodesic measure
     must agree with the planar closed form cluster by cluster."""
     from resolve_overlap_and_gap_spark.config import EngineConfig
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
     from resolve_overlap_and_gap_spark.operators.resolve import resolve
 
     layer = _healed_cluster_layer(spark, sf_dir, mod=15)
     cfg = EngineConfig(snap_tolerance=DETECT_CFG_SNAP, min_area_to_keep=24e6,
                        geodesic_measure=True)
-    both = resolve(layer, cfg, res=12, emit_border_gaps=True).localCheckpoint()
-    pieces = both.where(F.col("owner") >= 0)
-    healed = border_gap_merge(layer, pieces, cfg, res=12,
-                              border_gaps=border_gaps_from_resolve(both),
-                              checkpoint=False)
+    healed = border_gap_merge(resolve(layer, cfg, res=12, emit_border_gaps=True), cfg)
     return healed.select(
         "owner",
         F.expr("cast(round(area * 100000000.0) as bigint)").alias("area_x1e8"),

@@ -27,8 +27,8 @@ def fixture_df(spark):
 
 @pytest.mark.spark
 def test_healed_layer_full_contract(spark, fixture_df):
-    pieces = resolve(fixture_df, CFG, res=RES).cache()
-    healed = border_gap_merge(fixture_df, pieces, CFG, res=RES).cache()
+    resolved = resolve(fixture_df, CFG, res=RES, emit_border_gaps=True)
+    healed = border_gap_merge(resolved, CFG).cache()
     assert healed.count() == fixture_df.count()
     # the healed layer must satisfy the contract EVERYWHERE: re-detect at a
     # DIFFERENT resolution (different borders) finds no overlaps and no
@@ -47,12 +47,13 @@ def test_healed_layer_full_contract(spark, fixture_df):
 def test_matches_single_cell_oracle(spark, fixture_df):
     """Multi-cell resolve + border pass vs coarse single-cell run: per-owner
     areas agree up to the snapped-clip bound; total mass conserved."""
-    pieces = resolve(fixture_df, CFG, res=RES)
-    healed = border_gap_merge(fixture_df, pieces, CFG, res=RES)
+    healed = border_gap_merge(
+        resolve(fixture_df, CFG, res=RES, emit_border_gaps=True), CFG)
     multi = {r.owner: r.area for r in healed.collect()}
 
-    pieces1 = resolve(fixture_df, CFG, res=4)  # whole fixture in one cell
-    healed1 = border_gap_merge(fixture_df, pieces1, CFG, res=4)
+    # whole fixture in one cell
+    healed1 = border_gap_merge(
+        resolve(fixture_df, CFG, res=4, emit_border_gaps=True), CFG)
     single = {r.owner: r.area for r in healed1.collect()}
 
     assert set(multi) == set(single)

@@ -17,10 +17,14 @@ from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.operators.border import (
     border_gap_merge,
-    border_gaps_from_resolve,
     reassemble_border_gaps,
 )
-from resolve_overlap_and_gap_spark.operators.resolve import KILL_OWNER, resolve
+from resolve_overlap_and_gap_spark.operators.resolve import (
+    GAP_OWNER,
+    KILL_OWNER,
+    RESOLVE_SCHEMA,
+    resolve,
+)
 
 G = 0.001  # snap grid
 
@@ -68,18 +72,14 @@ def test_cross_parent_big_gap_not_slivered(spark):
 
 @pytest.mark.spark
 def test_merge_with_empty_pieces(spark):
-    """border_gap_merge with zero owner pieces (e.g. every feature
-    quarantined) must return an empty healed layer, not crash in the
-    mixed-res sliver keying."""
-    from resolve_overlap_and_gap_spark.operators.resolve import RESOLVE_SCHEMA
-
+    """border_gap_merge over a resolved frame with zero owner pieces (e.g.
+    every feature quarantined) and one sub-min border gap must return an
+    empty healed layer, not crash in the mixed-res sliver keying."""
     cfg = EngineConfig(snap_tolerance=G, min_area_to_keep=0.1)
-    feats = spark.createDataFrame([], T.StructType([
-        T.StructField("fid", T.LongType()), T.StructField("geom", T.BinaryType())]))
-    pieces = spark.createDataFrame([], RESOLVE_SCHEMA)
-    gaps = spark.createDataFrame(
-        [(_cell(-0.025, 5.001), _rect(-0.05, 5.0, 0.0, 5.002))], GAP_SCHEMA)
-    healed = border_gap_merge(feats, pieces, cfg, res=6, border_gaps=gaps)
+    resolved = spark.createDataFrame(
+        [(_cell(-0.025, 5.001), GAP_OWNER, [], 1e-4,
+          _rect(-0.05, 5.0, 0.0, 5.002))], RESOLVE_SCHEMA)
+    healed = border_gap_merge(resolved, cfg)
     assert healed.count() == 0
 
 
@@ -138,9 +138,7 @@ def test_gap_open_to_empty_neighbor_stays_open(spark):
                   both.where(F.col("owner") == KILL_OWNER).collect()}
     east_cell = _cell(2.0, 1.31)
     assert east_cell in kill_cells
-    healed = border_gap_merge(feats, both.where(F.col("owner") >= 0), cfg,
-                              res=6, border_gaps=border_gaps_from_resolve(both),
-                              checkpoint=False)
+    healed = border_gap_merge(both, cfg)
     out = {r.owner: r.area for r in healed.collect()}
     assert set(out) == {1, 2, 3}
     for fid, a in in_areas.items():
@@ -171,10 +169,7 @@ def test_healed_preserves_big_cross_border_gap(spark):
 
     both = resolve(feats, cfg, res=6, emit_border_gaps=True).localCheckpoint()
     assert both.where(F.col("owner") == KILL_OWNER).count() > 0
-    pieces = both.where(F.col("owner") >= 0)
-    healed = border_gap_merge(feats, pieces, cfg, res=6,
-                              border_gaps=border_gaps_from_resolve(both),
-                              checkpoint=False)
+    healed = border_gap_merge(both, cfg)
     out = {r.owner: r.area for r in healed.collect()}
     assert set(out) == {1, 2, 3, 4}
     for fid, a in in_areas.items():

@@ -17,10 +17,7 @@ def test_disjoint_dissolve_equals_exact_on_heal(spark):
     """The heal's final owner dissolve: dissolve_geom=False rows equal the
     dissolve_geom=True rows in (owner, area, n_parts)."""
     from resolve_overlap_and_gap_spark.config import EngineConfig
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
     from resolve_overlap_and_gap_spark.operators.resolve import resolve
     from resolve_overlap_and_gap_spark.plans.queries import (
         DETECT_CFG_SNAP,
@@ -31,14 +28,11 @@ def test_disjoint_dissolve_equals_exact_on_heal(spark):
     layer = derived_polygon_layer(spark, SF)
     res = _density_res(spark, SF)
     cfg = EngineConfig(snap_tolerance=DETECT_CFG_SNAP, min_area_to_keep=1e-4)
-    both = resolve(layer, cfg, res=res, emit_border_gaps=True).select(
+    resolved = resolve(layer, cfg, res=res, emit_border_gaps=True).select(
         "cell_id", "owner", "geom").localCheckpoint()
-    pieces = both.where(F.col("owner") >= 0)
 
     def run(**kw):
-        h = border_gap_merge(layer, pieces, cfg, res=res,
-                             border_gaps=border_gaps_from_resolve(both),
-                             checkpoint=False, **kw)
+        h = border_gap_merge(resolved, cfg, piece_res=[res], **kw)
         return {tuple(r) for r in h.select(
             "owner",
             F.expr("cast(floor(area * 1e9) as bigint)").alias("a"),

@@ -71,10 +71,7 @@ def test_resume_healed_equivalence(spark, tmp_path):
     cells, resume, heal — final healed layer identical to a single-shot
     run; a third invocation recomputes nothing."""
     from resolve_overlap_and_gap_spark.lineage import run_healed_checkpointed
-    from resolve_overlap_and_gap_spark.operators.border import (
-        border_gap_merge,
-        border_gaps_from_resolve,
-    )
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
 
     df = tiling_df(spark, k=6, cell=0.1, jitter=0.015, seed=3)
     df.cache().count()
@@ -82,13 +79,10 @@ def test_resume_healed_equivalence(spark, tmp_path):
     cells = with_cells(feats, RES)
 
     # single-shot oracle through the same fast path
-    both = resolve(df, CFG, res=RES, emit_border_gaps=True).localCheckpoint()
     oracle_healed = sorted(
         (r.owner, round(r.area, 12), r.n_parts)
         for r in border_gap_merge(
-            feats, both.where(F.col("owner") >= 0), CFG, res=RES,
-            border_gaps=border_gaps_from_resolve(both), checkpoint=False,
-        ).collect()
+            resolve(df, CFG, res=RES, emit_border_gaps=True), CFG).collect()
     )
 
     lin = Lineage(spark, str(tmp_path / "hckpt"))

@@ -131,3 +131,25 @@ def test_detect_quarantine_row(spark, layer):
     # default budget: converges, no quarantined rows
     out2 = detect_all(layer, EngineConfig(snap_tolerance=G), res=4).collect()
     assert not [r for r in out2 if r.kind == "quarantined"]
+
+
+@pytest.mark.spark
+def test_heal_ignores_quarantine_rows(spark, layer):
+    """QUARANTINE_OWNER rows in the resolved frame take no part in the
+    heal: no owner < 0 comes out, and the healed layer equals the heal of
+    the same frame without them."""
+    from pyspark.sql import functions as F
+
+    from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
+
+    cfg = EngineConfig(snap_tolerance=G, noding_max_iter=1)
+    resolved = resolve(layer, cfg, res=4, emit_border_gaps=True).localCheckpoint()
+    assert resolved.where(F.col("owner") == QUARANTINE_OWNER).count() == 1
+
+    def heal(frame):
+        return sorted((r.owner, r.area, r.n_parts, bytes(r.geom))
+                      for r in border_gap_merge(frame, cfg).collect())
+
+    healed = heal(resolved)
+    assert healed and all(owner >= 0 for owner, *_ in healed)
+    assert healed == heal(resolved.where(F.col("owner") != QUARANTINE_OWNER))

@@ -15,7 +15,6 @@ from resolve_overlap_and_gap_spark.operators.overlap_gap import detect_all
 from resolve_overlap_and_gap_spark.operators.resolve import (
     mark_valid,
     resolve,
-    resolve_layer,
 )
 from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
 
@@ -106,7 +105,15 @@ def test_validity_marking(spark):
 
 @pytest.mark.spark
 def test_resolve_layer_attributes(spark, fixture_df):
-    layer = resolve_layer(fixture_df, CFG, res=RES)
+    from resolve_overlap_and_gap_spark.api import (
+        CleanInfo,
+        resolve_overlap_gap_run,
+    )
+
+    layer = resolve_overlap_gap_run(
+        spark, fixture_df, snap_tolerance=CFG.snap_tolerance,
+        clean=CleanInfo(min_area_to_keep=CFG.min_area_to_keep),
+        res=RES, heal=False).layer
     rows = layer.collect()
     assert all(r.c2 is not None for r in rows)
     assert all(r._input_geo_is_valid for r in rows)
