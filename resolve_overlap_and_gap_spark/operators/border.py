@@ -63,7 +63,10 @@ from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay
 from resolve_overlap_and_gap_spark.operators.dissolve import union_parts
-from resolve_overlap_and_gap_spark.operators.overlap_gap import with_cells
+from resolve_overlap_and_gap_spark.operators.overlap_gap import (
+    default_cell_buckets,
+    with_cells,
+)
 
 ASSIGN_SCHEMA = T.StructType([
     T.StructField("owner", T.LongType()),
@@ -288,7 +291,7 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
 
 
 def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
-                           n_buckets: int = 64) -> DataFrame:
+                           n_buckets: int | None = None) -> DataFrame:
     """Distributed cross-cell sliver reassembly: iterated ancestor-cell
     dissolve of (cell_id[, kind], geom) border gap rows.  kind 'live' rows
     (the default when the column is absent) carry WKB gap pieces below
@@ -299,7 +302,11 @@ def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
 
     Each iteration coarsens LEVEL_JUMP quadtree levels.  Mixed-resolution
     inputs (balanced grid) re-key every piece to its ancestor at the
-    iteration's target level, so pieces meet at their common ancestor."""
+    iteration's target level, so pieces meet at their common ancestor.
+    n_buckets: hash buckets of ancestor cells per round; None is
+    default_cell_buckets, the rule of every kernel stage."""
+    if n_buckets is None:
+        n_buckets = default_cell_buckets(border_gaps)
     res_col = F.shiftrightunsigned(F.col("cell_id"), grid.RES_SHIFT).bitwiseAND(F.lit(0x1F))
     empty = border_gaps.sparkSession.createDataFrame([], T.StructType([
         T.StructField("gap_area", T.DoubleType()),

@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import Face, union_cells
 from resolve_overlap_and_gap_spark.geom.core import ring_area2
+from resolve_overlap_and_gap_spark.operators.overlap_gap import default_cell_buckets
 
 DISSOLVE_SCHEMA = T.StructType([
     T.StructField("key", T.LongType()),
@@ -241,15 +242,14 @@ def dissolve(df: DataFrame, key_col: str, grid_size: float,
     input: materialize an expensive input first (the heal passes
     checkpointed pieces).
 
-    n_buckets defaults to the scale-aware kernel bucket count (~128 hash
-    groups per core)."""
+    n_buckets: hash buckets of keys, one applyInPandas group each (both
+    levels of the salted path); None is the kernel-bucket rule every
+    Arrow kernel stage uses (default_cell_buckets, ~8 per core).  A bucket
+    only batches keys — they are tag-sliced in the kernel — so the count
+    changes the Arrow round trips, never the rows.  AQE never splits a
+    bucket; a hot key is spread by n_salts."""
     if n_buckets is None:
-        # MANY buckets: buckets only balance keys across tasks, and 100
-        # groups in 256 buckets collide ~17% of the time (serializing
-        # unrelated keys) vs <2% in 4096.  The 8/core rule is only for
-        # overlay_cells kernels.
-        sc = df.sparkSession.sparkContext
-        n_buckets = max(4096, 128 * sc.defaultParallelism)
+        n_buckets = default_cell_buckets(df)
     slim = df.select(
         F.col(key_col).cast("long").alias("key"), F.col(geom_col).alias("geom")
     )
@@ -271,7 +271,7 @@ def dissolve(df: DataFrame, key_col: str, grid_size: float,
             lambda pdf: _dissolve_bucket(pdf, ["key", "_salt"], grid_size, True),
             DISSOLVE_SCHEMA)
         return dissolve(partial.select("key", "geom"), "key", grid_size,
-                        with_geom=with_geom)
+                        n_buckets=n_buckets, with_geom=with_geom)
 
     # hashed buckets: many keys per Arrow round-trip
     bucketed = slim.withColumn("bucket", F.pmod(F.hash("key"), F.lit(n_buckets)))

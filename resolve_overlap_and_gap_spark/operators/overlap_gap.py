@@ -40,15 +40,17 @@ UNIVERSE = -1  # poly id of the cell box in the overlay
 
 
 def default_cell_buckets(df) -> int:
-    """Cell-bucket count for the applyInPandas kernel stages: ~8 hash
-    groups per core — multiple cells per bucket so the BATCHED overlay
-    kernels (overlay_cells / the bucket dissolve) amortize their fixed
-    numpy phases across the batch, while 8 waves/core still give AQE
-    straggler smoothing.  Scales with the cluster, never a constant.
-    History: r6 measured 256 -> 4096 as a win for the PER-CELL kernels
-    (more AQE units); with the batched kernels the direction reverses
-    (resolve noop at sf0.1/32 cores: 4096 buckets 7.8 s -> 256 buckets
-    5.4 s), so the default follows the batched kernels."""
+    """Bucket count for every applyInPandas kernel stage — the detect and
+    resolve overlays, the owner dissolve (both salt levels) and the border
+    gap reassembly: ~8 hash groups per core, so each Arrow round trip
+    batches many cells or keys and the batched kernels (overlay_cells,
+    union_parts) amortize their fixed numpy phases, while 8 waves/core
+    still give AQE straggler smoothing.  Scales with the cluster, never a
+    constant.  History: r6 measured 256 -> 4096 as a win for the PER-CELL
+    kernels (more AQE units); with the batched kernels the direction
+    reverses (resolve noop at sf0.1/32 cores: 4096 buckets 7.8 s -> 256
+    buckets 5.4 s; the heal dissolve of 1,500 owners on 4 cores: 4096
+    buckets 2.8-4.2 s -> 64 buckets 0.7-0.9 s)."""
     return max(64, 8 * df.sparkSession.sparkContext.defaultParallelism)
 
 
@@ -195,6 +197,10 @@ DETECT_SCHEMA = T.StructType([
     T.StructField("touches_border", T.BooleanType()),  # null for overlaps
     T.StructField("geom", T.BinaryType()),
 ])
+# the kernel frame's pandas dtypes, one per DETECT_SCHEMA column
+_DETECT_DTYPES = {"cell_id": "int64", "kind": object, "id_a": "Int64",
+                 "id_b": "Int64", "area": "float64",
+                 "touches_border": "boolean", "geom": object}
 
 
 def detect_cells(cells: DataFrame, cfg: EngineConfig, with_geom: bool = True,
@@ -206,8 +212,11 @@ def detect_cells(cells: DataFrame, cfg: EngineConfig, with_geom: bool = True,
 
     Cells are processed in hashed BUCKETS of n_buckets groups: one Arrow
     round-trip covers many cells (per-cell groups would pay the
-    applyInPandas overhead thousands of times); AQE still splits skewed
-    buckets."""
+    applyInPandas overhead thousands of times).  AQE never splits a
+    groupBy group (its skew handling splits join partitions only); what
+    bounds a bucket is the cell assignment — the content-balanced grid
+    caps the rows per cell — and default_cell_buckets spreading cells
+    over ~8 buckets per core."""
     if n_buckets is None:
         n_buckets = default_cell_buckets(cells)
     bucketed = cells.select("cell_id", "fid", "geom").withColumn(
@@ -249,11 +258,6 @@ def _detect_bucket(pdf: pd.DataFrame, cfg: EngineConfig,
                      sorted(q_of.get(cell, [])), sub, g, with_geom)
         for cell, sub, box, _ in subs
     ]
-    parts = [p for p in parts if len(p)]  # pandas-3: no all-NA concat
-    if not parts:
-        return pd.DataFrame(
-            columns=["cell_id", "kind", "id_a", "id_b", "area",
-                     "touches_border", "geom"])
     return pd.concat(parts, ignore_index=True)
 
 
@@ -298,10 +302,13 @@ def _detect_rows(cell: int, box: tuple, faces, quarantined, pdf: pd.DataFrame,
              + [h.astype(np.float64) * g for h in f.holes] for f in fs])
               if with_geom else None)
         rows.append((cell, "overlap", a, b, area, None, gg))
-    return pd.DataFrame(
-        rows,
-        columns=["cell_id", "kind", "id_a", "id_b", "area", "touches_border", "geom"],
-    )
+    # fixed (nullable) dtypes: a cell's all-null id_a/id_b (gaps only),
+    # touches_border (overlaps only) or geom (with_geom=False) must not
+    # decide the bucket's concat dtypes, and ids never round-trip through
+    # float64 beside a null
+    cols = list(zip(*rows)) if rows else [()] * len(_DETECT_DTYPES)
+    return pd.DataFrame({c: pd.Series(list(v), dtype=d)
+                         for (c, d), v in zip(_DETECT_DTYPES.items(), cols)})
 
 
 def assign_balanced_cells(features: DataFrame, cfg: EngineConfig,

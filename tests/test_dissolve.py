@@ -177,3 +177,31 @@ def test_bbox_components_memory_is_not_quadratic(layout):
         tracemalloc.stop()
     assert (lab == 0).all()
     assert peak < bound, peak
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("n_salts", [1, 8])
+def test_bucket_count_does_not_change_rows(spark, n_salts):
+    """A bucket only batches keys: the kernel tags every bbox component,
+    so (key, area, n_parts, geom) are the same whether all keys share one
+    bucket or each sits alone.  Input: per-cell resolve pieces (owners
+    split by cell borders) plus keys whose parts overlap each other and
+    the pieces."""
+    df = tiling_df(spark, k=4, cell=0.4, origin=(5.0, 55.0), jitter=0.0, seed=2)
+    cfg = EngineConfig(snap_tolerance=G)
+    pieces = resolve(df, cfg, res=9).select(F.col("owner").alias("key"), "geom")
+    extra = [(100 + k % 3, _sq(5.0 + 0.1 * k, 55.0, 5.3 + 0.1 * k, 55.3))
+             for k in range(12)]
+    extra += [(200, _sq(5.2, 55.2, 5.9, 55.5)), (200, _sq(6.5, 55.9, 6.6, 56.0))]
+    src = pieces.unionByName(spark.createDataFrame(extra, "key long, geom binary"))
+    src = src.localCheckpoint()
+
+    def rows(nb):
+        return sorted((r.key, r.area, r.n_parts, bytes(r.geom))
+                      for r in dissolve(src, "key", G, n_salts=n_salts,
+                                        n_buckets=nb).collect())
+
+    want = rows(None)
+    assert len(want) == 16 + 4
+    for nb in (1, 3, 4096):
+        assert rows(nb) == want, nb

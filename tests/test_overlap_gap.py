@@ -4,11 +4,19 @@ fixture, plus cross-parallelism determinism."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
+import pandas as pd
 import pytest
 
+from resolve_overlap_and_gap_spark import grid
 from resolve_overlap_and_gap_spark.config import EngineConfig
-from resolve_overlap_and_gap_spark.operators.overlap_gap import detect_all
+from resolve_overlap_and_gap_spark.geom import wkb
+from resolve_overlap_and_gap_spark.operators.overlap_gap import (
+    _detect_bucket,
+    detect_all,
+)
 from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
 
 CFG = EngineConfig(snap_tolerance=1e-5)
@@ -112,3 +120,36 @@ def test_no_overlap_layer_clean(spark):
     assert res.where("kind = 'overlap'").count() == 0
     interior_gaps = res.where("kind = 'gap' and not touches_border")
     assert interior_gaps.count() == 0
+
+
+@pytest.mark.parametrize("with_geom", [True, False])
+def test_detect_bucket_concat_is_typed(with_geom):
+    """A two-cell bucket: one cell holds a lone square (gap rows only, so
+    id_a/id_b are all null), the other two overlapping squares (an overlap
+    row with a null touches_border).  The per-cell frames concatenate
+    without pandas' all-NA FutureWarning, whose dtype rule changes in
+    pandas 3, and ids stay integers beside the nulls."""
+    def sq(x0, y0, x1, y1):
+        return wkb.dump_polygon(
+            [np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], float)])
+
+    a = int(grid.cell_id_np(np.array([10.1]), np.array([50.1]), 6)[0])
+    ax0, ay0, ax1, _ = (float(v[0]) for v in grid.cell_bounds_np(np.array([a])))
+    b = int(grid.cell_id_np(np.array([ax1 + 0.01]), np.array([ay0 + 0.01]), 6)[0])
+    bx0, by0, _, _ = (float(v[0]) for v in grid.cell_bounds_np(np.array([b])))
+    w = (ax1 - ax0) / 10
+    pdf = pd.DataFrame({
+        "cell_id": [a, b, b],
+        "fid": [1, 2, 3],
+        "geom": [sq(ax0 + w, ay0 + w, ax0 + 3 * w, ay0 + 3 * w),
+                 sq(bx0 + w, by0 + w, bx0 + 4 * w, by0 + 4 * w),
+                 sq(bx0 + 2 * w, by0 + 2 * w, bx0 + 5 * w, by0 + 5 * w)],
+    })
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = _detect_bucket(pdf, CFG, with_geom)
+    assert sorted(out["kind"]) == ["gap", "gap", "overlap"]
+    ovl = out[out["kind"] == "overlap"].iloc[0]
+    assert (ovl["id_a"], ovl["id_b"]) == (2, 3)
+    assert out["id_a"].dtype == "Int64" and out["id_b"].dtype == "Int64"
+    assert out["geom"].isna().all() != with_geom
