@@ -403,6 +403,11 @@ class Face:
     def cover(self) -> frozenset:
         return frozenset(p for p, w in self.winding.items() if w > 0)
 
+    @property
+    def rings(self) -> list[np.ndarray]:
+        """[shell, *holes] — the polygon layout of wkb.dump_grid_multipolygon."""
+        return [self.shell, *self.holes]
+
 
 class Arrangement:
     def __init__(self, S, pid, wt, cell=None):

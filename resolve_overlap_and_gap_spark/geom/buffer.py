@@ -84,13 +84,13 @@ def buffer_polygon(rings: list[np.ndarray], d_units: float,
     band = _band_parts(rr, abs(float(d_units)), quad_segs, closed=True)
     if d_units > 0:
         faces = union_faces([(len(band), rr)] + band)
-        return [[f.shell] + list(f.holes) for f in faces if f.area2 > 0]
+        return [f.rings for f in faces if f.area2 > 0]
     band_faces = union_faces(band)
-    polys = [(1, rr)] + [(2, [f.shell] + list(f.holes)) for f in band_faces]
+    polys = [(1, rr)] + [(2, f.rings) for f in band_faces]
     out = []
     for f in overlay(polys):
         if 1 in f.cover and 2 not in f.cover and f.area2 > 0:
-            out.append([f.shell] + list(f.holes))
+            out.append(f.rings)
     return out
 
 
@@ -101,7 +101,7 @@ def buffer_line(coords: np.ndarray, d_units: float,
     band = _band_parts([np.asarray(coords, dtype=np.int64)],
                        float(d_units), quad_segs, closed=False)
     faces = union_faces(band)
-    return [[f.shell] + list(f.holes) for f in faces if f.area2 > 0]
+    return [f.rings for f in faces if f.area2 > 0]
 
 
 def point_on_surface(rings: list[np.ndarray]) -> tuple[float, float]:

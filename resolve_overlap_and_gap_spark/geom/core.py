@@ -44,20 +44,6 @@ def bounds(c: np.ndarray) -> tuple[float, float, float, float]:
     )
 
 
-def centroid_ring(c: np.ndarray) -> tuple[float, float]:
-    """Area-weighted polygon-ring centroid (ST_Centroid analog)."""
-    c = _drop_closing(c)
-    x, y = c[:, 0], c[:, 1]
-    xn, yn = np.roll(x, -1), np.roll(y, -1)
-    cross = x * yn - xn * y
-    a2 = cross.sum()
-    if a2 == 0:
-        return float(x.mean()), float(y.mean())
-    cx = ((x + xn) * cross).sum() / (3.0 * a2)
-    cy = ((y + yn) * cross).sum() / (3.0 * a2)
-    return float(cx), float(cy)
-
-
 def _drop_closing(c: np.ndarray) -> np.ndarray:
     if len(c) > 1 and np.array_equal(c[0], c[-1]):
         return c[:-1]
@@ -212,13 +198,18 @@ def chaikin_acute(c: np.ndarray, n_iterations: int = 1,
 
 
 # ------------------------------------------------------------ snapping
+# The engine's one snap-grid codec: every float <-> int64 grid conversion
+# (WKB load/dump in wkb.py, cell boxes in grid.py) goes through these two.
 def snap_to_grid_int(c: np.ndarray, grid: float) -> np.ndarray:
     """Snap float coords to the integer grid (units of ``grid``) — the
     ST_SnapToGrid / set_precision analog and the entry into exact integer
-    arithmetic (int64). Round-half-away for determinism."""
+    arithmetic (int64). Round-half-up (floor(x/grid + 0.5)) for
+    determinism."""
     c = np.asarray(c, dtype=np.float64) / grid
     return np.floor(c + 0.5).astype(np.int64)
 
 
 def grid_to_float(c: np.ndarray, grid: float) -> np.ndarray:
+    """Integer grid coords back to layer units (the inverse of
+    snap_to_grid_int on the grid's points)."""
     return np.asarray(c, dtype=np.float64) * grid

@@ -12,7 +12,6 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,7 +40,3 @@ def multipolygon_geojson(b: bytes, ndigits: int = 9) -> str:
 def wkb_to_geojson(geoms: pd.Series) -> pd.Series:
     return geoms.map(lambda b: multipolygon_geojson(b))
 
-
-def with_geojson(df: DataFrame, geom_col: str = "geom",
-                 out_col: str = "geojson") -> DataFrame:
-    return df.withColumn(out_col, wkb_to_geojson(F.col(geom_col)))

@@ -10,6 +10,11 @@ Representations used engine-side:
   linestring -> (n, 2) float64
   polygon    -> list[(n, 2) float64]      (ring 0 = shell, rest = holes)
   multipolygon -> list[polygon]
+
+Kernels work on the int64 snap grid: load_grid_polygons and
+dump_grid_multipolygon are the WKB ends of the snap-grid codec
+(core.snap_to_grid_int / core.grid_to_float), and one_ring_batches is the
+one batched fast path over a column of blobs.
 """
 
 from __future__ import annotations
@@ -18,9 +23,18 @@ import struct
 
 import numpy as np
 
+from resolve_overlap_and_gap_spark.geom.core import grid_to_float, snap_to_grid_int
+
 POINT, LINESTRING, POLYGON, MULTIPOLYGON = 1, 2, 3, 6
 _HDR = struct.Struct("<BI")
 _U32 = struct.Struct("<I")
+# (coordinate offset, header bytes before the vertex count) of the two
+# one-ring layouts: a 1-ring Polygon, a 1-part/1-ring MultiPolygon
+_ONE_RING = (
+    (13, _HDR.pack(1, POLYGON) + _U32.pack(1)),
+    (22, _HDR.pack(1, MULTIPOLYGON) + _U32.pack(1)
+     + _HDR.pack(1, POLYGON) + _U32.pack(1)),
+)
 
 
 def dump_point(xy) -> bytes:
@@ -120,3 +134,39 @@ def load_polygons(b: bytes) -> list[list[np.ndarray]]:
     if kind == "multipolygon":
         return payload
     raise ValueError(f"expected polygonal WKB, got {kind}")
+
+
+# ------------------------------------------------------------ snap grid
+def load_grid_polygons(b: bytes, grid: float) -> list[list[np.ndarray]]:
+    """Any polygonal WKB -> polygons of int64 rings snapped to ``grid``."""
+    return [[snap_to_grid_int(r, grid) for r in rings]
+            for rings in load_polygons(bytes(b))]
+
+
+def dump_grid_multipolygon(polys: list[list[np.ndarray]], grid: float) -> bytes:
+    """Polygons of int64 grid rings -> float WKB multipolygon."""
+    return dump_multipolygon([[grid_to_float(r, grid) for r in rings]
+                              for rings in polys])
+
+
+def one_ring_batches(blobs):
+    """Batched parse of a column of WKB blobs: yields (rows, coords) per
+    group of equal-length blobs that are a 1-ring Polygon or a
+    1-part/1-ring MultiPolygon of >= 3 vertices — rows indexes ``blobs``,
+    coords is the (len(rows), n, 2) float64 ring, closing vertex included.
+    Such blobs of one length share one byte layout, so a group is one
+    header compare and one float64 view, no per-row parsing.  Rows never
+    yielded need the per-row parser; values are identical either way."""
+    lens = np.fromiter((len(b) for b in blobs), np.int64, len(blobs))
+    for L in np.unique(lens).tolist():
+        for off, prefix in _ONE_RING:
+            nv, rem = divmod(L - off, 16)
+            if nv < 3 or rem:
+                continue
+            rows = np.flatnonzero(lens == L)
+            a = np.frombuffer(b"".join(blobs[i] for i in rows),
+                              np.uint8).reshape(len(rows), L)
+            hdr = np.frombuffer(prefix + _U32.pack(nv), np.uint8)
+            ok = (a[:, :off] == hdr).all(axis=1)
+            if ok.any():
+                yield rows[ok], a[ok, off:].view("<f8").reshape(-1, nv, 2)

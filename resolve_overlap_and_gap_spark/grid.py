@@ -23,6 +23,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from resolve_overlap_and_gap_spark.geom.core import snap_to_grid_int
+
 MAX_RES = 28          # 2*28 = 56 morton bits
 RES_SHIFT = 58        # resolution stored in bits 58..62
 
@@ -104,6 +106,23 @@ def cell_bounds_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray
     xmin = -180.0 + ix * w
     ymin = -90.0 + iy * h
     return xmin, ymin, xmin + w, ymin + h
+
+
+def cell_box_units(cell: int, g: float) -> tuple[int, int, int, int]:
+    """(xmin, ymin, xmax, ymax) of one cell snapped to the grid of step
+    ``g`` (core.snap_to_grid_int): the int box every kernel clips to and
+    tests border contact against."""
+    b = snap_to_grid_int(np.concatenate(cell_bounds_np(np.array([cell], np.int64))), g)
+    return tuple(b.tolist())
+
+
+def touches_box(ring: np.ndarray, box: tuple[int, int, int, int]) -> bool:
+    """True iff a vertex of the int ring lies on one of the box's lines.
+    For a face inside its box the shell decides: a hole vertex on a box
+    line forces a shell vertex onto that line."""
+    x0, y0, x1, y1 = box
+    return bool((ring[:, 0] == x0).any() or (ring[:, 0] == x1).any()
+                or (ring[:, 1] == y0).any() or (ring[:, 1] == y1).any())
 
 
 def neighbors_np(cell: np.int64, ring: int = 1) -> np.ndarray:

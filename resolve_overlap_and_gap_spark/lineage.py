@@ -71,11 +71,12 @@ class Lineage:
         """J5 anti-join: drop cells already done."""
         return cells.join(F.broadcast(self.done_cells(stage)), "cell_id", "left_anti")
 
-    def log(self, stage: str, metrics: DataFrame) -> None:
-        """Append per-cell metrics (cell_id, n_rows[, extra numeric cols])."""
+    def log(self, stage: str, metrics: DataFrame, wall_ms: float) -> None:
+        """Append per-cell metrics (cell_id, n_rows[, extra numeric cols])
+        with the stage's wall time: compute plus data commit, in ms."""
         out = metrics.withColumn("stage", F.lit(stage)).withColumn(
-            "ts", F.lit(time.time())
-        )
+            "wall_ms", F.lit(float(wall_ms))
+        ).withColumn("ts", F.lit(time.time()))
         if self.fmt == "iceberg":
             if not self._lineage_exists():
                 out.writeTo(self._lineage_tbl).create()
@@ -138,11 +139,13 @@ def run_healed_checkpointed(lin: Lineage, features: DataFrame,
 
     both = run_stage_checkpointed(lin, "resolve", cells, compute, "resolved")
     if not lin.has_stage("healed"):
+        t0 = time.perf_counter()
         healed = border_gap_merge(both, cfg)
         if lin.fmt == "iceberg":
             healed.writeTo(f"{lin.root}.healed").createOrReplace()
         else:
             healed.write.mode("overwrite").parquet(f"{lin.root}/healed")
+        wall_ms = (time.perf_counter() - t0) * 1000.0
         # metrics aggregate the JUST-WRITTEN table, not the lazy `healed`
         # plan — re-evaluating that plan would run the heal's final owner
         # dissolve a second time.  cell_id must be BIGINT like stage-1
@@ -151,7 +154,7 @@ def run_healed_checkpointed(lin: Lineage, features: DataFrame,
         metrics = lin.read("healed").groupBy(
             F.pmod(F.hash("owner"), F.lit(256)).cast("long").alias("cell_id")
         ).agg(F.count("*").alias("n_rows"))
-        lin.log("healed", metrics)
+        lin.log("healed", metrics, wall_ms)
     return lin.read("healed")
 
 
@@ -170,12 +173,14 @@ def run_stage_checkpointed(
     todo = lin.remaining(cells.select("cell_id").distinct(), stage)
     todo_rows = cells.join(F.broadcast(todo), "cell_id")
     if not todo_rows.isEmpty():
+        t0 = time.perf_counter()
         result = compute(todo_rows)
         result = result.cache()
         lin.write_cells(table, result)
+        wall_ms = (time.perf_counter() - t0) * 1000.0
         metrics = result.groupBy("cell_id").agg(F.count("*").alias("n_rows"))
         # ensure every attempted cell is marked done even if it emitted 0 rows
         metrics = todo.join(metrics, "cell_id", "left").fillna(0, ["n_rows"])
-        lin.log(stage, metrics)
+        lin.log(stage, metrics, wall_ms)
         result.unpersist()
     return lin.read(table)

@@ -172,7 +172,7 @@ def _face_touches_kill(f: Face, idx: dict) -> bool:
     GEOS both keep point-touching parts separate)."""
     if not idx:
         return False
-    for ring in [f.shell] + f.holes:
+    for ring in f.rings:
         a = np.asarray(ring, np.int64)
         if len(a) < 2:
             continue
@@ -194,32 +194,6 @@ def _face_touches_kill(f: Face, idx: dict) -> bool:
     return False
 
 
-def _load_int_polys(b: bytes, g: float) -> list[list[np.ndarray]]:
-    out = []
-    for rings in wkb.load_polygons(bytes(b)):
-        out.append([
-            np.floor(np.asarray(r, np.float64) / g + 0.5).astype(np.int64)
-            for r in rings
-        ])
-    return out
-
-
-def _face_area(f: Face, g: float, cfg: EngineConfig) -> float:
-    """Decision area of one face in the configured measure (planar units^2,
-    or geodesic m^2 — WGS84 spheroid by default — when cfg.geodesic_measure
-    and not cfg.utm, matching resolve.face_measure_areas / reference
-    ST_Area(geo, true))."""
-    if cfg.geodesic_measure and not cfg.utm:
-        from resolve_overlap_and_gap_spark.geom.geodesic import polygon_area_m2
-
-        return polygon_area_m2(
-            [f.shell.astype(np.float64) * g]
-            + [h.astype(np.float64) * g for h in f.holes],
-            spheroid=cfg.geodesic_spheroid,
-        )
-    return f.area2 / 2.0 * g * g
-
-
 def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
                             is_root: bool) -> pd.DataFrame:
     """One level of the iterated dissolve: pdf holds live gap pieces and
@@ -235,9 +209,16 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
       - live, border-touching: escalates as geometry.
 
     Input kill intervals still lying on the parent border escalate;
-    interior ones have done their job this level and drop."""
+    interior ones have done their job this level and drop.  Areas are
+    judged by resolve's rule (face_measure_areas); gap_area is planar
+    units^2, or m^2 in geodesic mode."""
+    from resolve_overlap_and_gap_spark.operators.resolve import (
+        face_measure_areas,
+        measures_geodesic,
+    )
+
     g = cfg.snap_tolerance
-    min_area = cfg.min_area_to_keep
+    geodesic = measures_geodesic(cfg)
     rows = []
     cells: list[tuple[int, np.ndarray]] = []      # (parent cell, kill intervals)
     parts: list[list[np.ndarray]] = []
@@ -248,36 +229,29 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
             if kind == "kill":
                 kiv_parts.append(unpack_intervals(b))
             else:
-                for rings in _load_int_polys(b, g):
+                for rings in wkb.load_grid_polygons(b, g):
                     parts.append(rings)
                     part_cell.append(ci)
         cells.append((cell, np.vstack(kiv_parts) if kiv_parts
                       else np.empty((0, 4), dtype=np.int64)))
     faces_of = union_parts(parts, np.asarray(part_cell, np.int64))
     for ci, (cell, kiv) in enumerate(cells):
-        xmin, ymin, xmax, ymax = grid.cell_bounds_np(np.array([cell], dtype=np.int64))
-        cx0 = int(np.floor(xmin[0] / g + 0.5)); cy0 = int(np.floor(ymin[0] / g + 0.5))
-        cx1 = int(np.floor(xmax[0] / g + 0.5)); cy1 = int(np.floor(ymax[0] / g + 0.5))
+        box = grid.cell_box_units(cell, g)
+        cx0, cy0, cx1, cy1 = box
         idx = _kills_index(kiv)
         out_kill: list[tuple[int, int, int, int]] = []
-        for f in faces_of.get(ci, []):
-            if f.area2 <= 0:
-                continue
-            area = _face_area(f, g, cfg)
-            coords = np.vstack([f.shell] + f.holes) if f.holes else f.shell
-            touches = bool(
-                (coords[:, 0] == cx0).any() or (coords[:, 0] == cx1).any()
-                or (coords[:, 1] == cy0).any() or (coords[:, 1] == cy1).any()
-            )
-            if area >= min_area or _face_touches_kill(f, idx):
+        faces = [f for f in faces_of.get(ci, []) if f.area2 > 0]
+        measure, min_measure = face_measure_areas(faces, g, cfg)
+        for f, m in zip(faces, measure):
+            touches = grid.touches_box(f.shell, box)
+            if m >= min_measure or _face_touches_kill(f, idx):
                 if touches and not is_root:
-                    out_kill.extend(ring_border_intervals(
-                        [f.shell] + f.holes, cx0, cy0, cx1, cy1))
+                    out_kill.extend(ring_border_intervals(f.rings, *box))
                 continue
-            mp = [[f.shell.astype(np.float64) * g]
-                  + [h.astype(np.float64) * g for h in f.holes]]
+            area = m if geodesic else f.area2 / 2.0 * g * g
             kind = "live" if (touches and not is_root) else "sliver"
-            rows.append((int(cell), kind, area, wkb.dump_multipolygon(mp)))
+            rows.append((int(cell), kind, area,
+                         wkb.dump_grid_multipolygon([f.rings], g)))
         if not is_root:
             for ax, co, lo, hi in kiv:
                 if ((ax == 0 and co in (cx0, cx1))
@@ -465,7 +439,7 @@ def border_gap_merge(resolved: DataFrame, cfg: EngineConfig,
         out = []
         for gap_id, sub in pdf.groupby("gap_id", sort=True):
             gap_geom = sub["gap_geom"].iloc[0]
-            polys = [(-2, rings) for rings in _load_int_polys(gap_geom, g)]
+            polys = [(-2, rings) for rings in wkb.load_grid_polygons(gap_geom, g)]
             # bbox prefilter (expanded by 1 grid unit): a piece can share
             # border with the sliver only if their boxes touch — cuts the
             # overlay from all cell-mates (~hundreds) to actual neighbors
@@ -476,7 +450,7 @@ def border_gap_merge(resolved: DataFrame, cfg: EngineConfig,
             owners = {}
             k = 0
             for owner, pg in zip(sub["owner"], sub["piece_geom"]):
-                for rings in _load_int_polys(pg, g):
+                for rings in wkb.load_grid_polygons(pg, g):
                     s = rings[0]
                     if (s[:, 0].min() > gx1 or s[:, 0].max() < gx0
                             or s[:, 1].min() > gy1 or s[:, 1].max() < gy0):

@@ -106,13 +106,6 @@ def box_overlap_pairs(boxes: DataFrame, res: int, id_col: str = "id") -> DataFra
     )
 
 
-def count_per_cell(points: DataFrame, res: int) -> DataFrame:
-    """A1: feature count per cell (num_polygons analog,
-    function_resolve_overlap_gap_init.sql:195-199). Partial aggregation is
-    map-side (hash agg) before the single shuffle."""
-    return points_with_cell(points, res).groupBy("cell_id").count()
-
-
 def content_balanced_cells(
     points: DataFrame,
     base_res: int,

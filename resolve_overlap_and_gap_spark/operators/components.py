@@ -11,7 +11,7 @@ Two shapes, picked by graph structure:
   of two shuffles each.  NOT for long-chain graphs — a chain of k nodes
   needs ~log k rounds only thanks to pointer jumping, and the constant
   matters; for spatial piece graphs use the hierarchical union-find in
-  operators/lines.polygonize_lines_grid, which exploits geometry to do
+  operators/lines.polygonize_lines, which exploits geometry to do
   ceil(res/4) data-independent rounds.
 
 * the quadtree hierarchical union-find (lines.py) for geometric graphs.

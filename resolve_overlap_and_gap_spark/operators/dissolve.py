@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import Face, union_cells
-from resolve_overlap_and_gap_spark.geom.core import ring_area2
+from resolve_overlap_and_gap_spark.geom.core import ring_area2, snap_to_grid_int
 from resolve_overlap_and_gap_spark.operators.overlap_gap import default_cell_buckets
 
 DISSOLVE_SCHEMA = T.StructType([
@@ -85,6 +85,12 @@ def _bbox_components(group: np.ndarray, bb: np.ndarray,
     return roots(slice(None))
 
 
+def _bbox(rings: list[np.ndarray]) -> np.ndarray:
+    """(xmin, ymin, xmax, ymax) of one polygon's int rings."""
+    c = np.vstack(rings) if len(rings) > 1 else rings[0]
+    return np.concatenate([c.min(axis=0), c.max(axis=0)])
+
+
 def union_parts(parts: list[list[np.ndarray]], group: np.ndarray,
                 bb: np.ndarray | None = None) -> dict[int, list[Face]]:
     """Dissolve of snapped int polygons (ring 0 = shell) per group:
@@ -95,9 +101,7 @@ def union_parts(parts: list[list[np.ndarray]], group: np.ndarray,
     input order), so a group's result does not depend on what else shares
     the call.  bb: per-part (xmin, ymin, xmax, ymax), derived when None."""
     if bb is None:
-        bb = np.array([(min(r[:, 0].min() for r in rs), min(r[:, 1].min() for r in rs),
-                        max(r[:, 0].max() for r in rs), max(r[:, 1].max() for r in rs))
-                       for rs in parts], np.int64).reshape(-1, 4)
+        bb = np.array([_bbox(rs) for rs in parts], np.int64).reshape(-1, 4)
     members: dict[int, list[int]] = {}
     for i, c in enumerate(_bbox_components(group, bb).tolist()):
         members.setdefault(c, []).append(i)
@@ -123,60 +127,21 @@ AUTO_SALT_MAX = 64
 
 
 def _parse_pieces_batch(geoms: np.ndarray, grid_size: float):
-    """Batch WKB parse+snap for dissolve inputs.  Rows that are one-
-    polygon/one-ring multipolygons (the overwhelming majority of resolve
-    pieces) of equal byte length share an exact layout (coords at offset
-    22), so each length group is parsed with ONE float64 view + vectorized
-    snap; anything else falls back to the generic per-row parser.  Returns
-    per row a list of (snapped_rings, bbox_int64) — one entry per polygon
-    part, in WKB order (identical structure + values to the scalar path)."""
-    n = len(geoms)
-    out: list = [None] * n
-    lens = np.fromiter((len(b) for b in geoms), np.int64, n)
-    for L in np.unique(lens):
-        rem = L - 22
-        if rem < 16 * 3 or rem % 16:
-            continue
-        nv = rem // 16
-        idx = np.nonzero(lens == L)[0]
-        buf = b"".join(geoms[i] for i in idx)
-        a = np.frombuffer(buf, np.uint8).reshape(len(idx), L)
-        hdr = (
-            (a[:, 0] == 1)
-            & (a[:, 1] == 6) & (a[:, 2] == 0) & (a[:, 3] == 0) & (a[:, 4] == 0)
-            & (a[:, 5] == 1) & (a[:, 6] == 0) & (a[:, 7] == 0) & (a[:, 8] == 0)
-            & (a[:, 9] == 1)
-            & (a[:, 10] == 3) & (a[:, 11] == 0) & (a[:, 12] == 0) & (a[:, 13] == 0)
-            & (a[:, 14] == 1) & (a[:, 15] == 0) & (a[:, 16] == 0) & (a[:, 17] == 0)
-            & (a[:, 18] == (nv & 0xFF)) & (a[:, 19] == ((nv >> 8) & 0xFF))
-            & (a[:, 20] == ((nv >> 16) & 0xFF)) & (a[:, 21] == ((nv >> 24) & 0xFF))
-        )
-        ok = np.nonzero(hdr)[0]
-        if not len(ok):
-            continue
-        c = a[ok, 22:].copy().view("<f8").reshape(len(ok), nv, 2)
-        ci = np.floor(c / grid_size + 0.5).astype(np.int64)
-        bb = np.empty((len(ok), 4), np.int64)
-        bb[:, 0] = ci[:, :, 0].min(axis=1)
-        bb[:, 1] = ci[:, :, 1].min(axis=1)
-        bb[:, 2] = ci[:, :, 0].max(axis=1)
-        bb[:, 3] = ci[:, :, 1].max(axis=1)
-        sub = idx[ok]
-        for q in range(len(ok)):
-            out[int(sub[q])] = [([ci[q]], bb[q])]
-    for i in range(n):
-        if out[i] is None:
-            entry = []
-            for rings in wkb.load_polygons(bytes(geoms[i])):
-                ir = [np.floor(np.asarray(r, np.float64) / grid_size + 0.5)
-                      .astype(np.int64) for r in rings]
-                bb = np.array(
-                    (min(r[:, 0].min() for r in ir),
-                     min(r[:, 1].min() for r in ir),
-                     max(r[:, 0].max() for r in ir),
-                     max(r[:, 1].max() for r in ir)), np.int64)
-                entry.append((ir, bb))
-            out[i] = entry
+    """Batch WKB parse+snap for dissolve inputs: one-ring rows (the
+    overwhelming majority of resolve pieces) through wkb.one_ring_batches
+    with one vectorized snap per blob length, the rest through the per-row
+    loader.  Returns per row a list of (snapped_rings, bbox_int64) — one
+    entry per polygon part, in WKB order (the same either way)."""
+    out: list = [None] * len(geoms)
+    for rows, c in wkb.one_ring_batches(geoms):
+        ci = snap_to_grid_int(c, grid_size)
+        bb = np.concatenate([ci.min(axis=1), ci.max(axis=1)], axis=1)
+        for q, r in enumerate(rows.tolist()):
+            out[r] = [([ci[q]], bb[q])]
+    for i, entry in enumerate(out):
+        if entry is None:
+            out[i] = [(rings, _bbox(rings))
+                      for rings in wkb.load_grid_polygons(geoms[i], grid_size)]
     return out
 
 
@@ -206,10 +171,8 @@ def _dissolve_bucket(pdf: pd.DataFrame, by: list[str], grid_size: float,
     out = []
     for gi, s in enumerate(np.flatnonzero(new)):
         fs = faces.get(gi, [])
-        geom = wkb.dump_multipolygon(
-            [[f.shell.astype(np.float64) * grid_size]
-             + [h.astype(np.float64) * grid_size for h in f.holes] for f in fs]
-        ) if with_geom else None
+        geom = (wkb.dump_grid_multipolygon([f.rings for f in fs], grid_size)
+                if with_geom else None)
         out.append((int(cols[0][s]), sum((f.area2 for f in fs), 0.0) / 2.0
                     * grid_size * grid_size, len(fs), geom))
     return pd.DataFrame(out, columns=["key", "area", "n_parts", "geom"])

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from resolve_overlap_and_gap_spark.geom import wkb
+from resolve_overlap_and_gap_spark.geom.core import grid_to_float, snap_to_grid_int
 
 
 def st_buffer(geom: Column, dist: float, grid_size: float = 1e-5,
@@ -27,21 +28,15 @@ def st_buffer(geom: Column, dist: float, grid_size: float = 1e-5,
     def _buf(geoms: pd.Series) -> pd.Series:
         out = []
         for b in geoms:
-            kind, _ = wkb.load(bytes(b))
+            kind, coords = wkb.load(bytes(b))
             polys_out: list[list[np.ndarray]] = []
             if kind == "linestring":
-                _, coords = wkb.load(bytes(b))
-                c = np.floor(np.asarray(coords, np.float64) / grid_size + 0.5).astype(np.int64)
-                polys_out = buffer_line(c, d_units, quad_segs)
+                polys_out = buffer_line(snap_to_grid_int(coords, grid_size),
+                                        d_units, quad_segs)
             else:
-                for rings in wkb.load_polygons(bytes(b)):
-                    ir = [np.floor(np.asarray(r, np.float64) / grid_size + 0.5).astype(np.int64)
-                          for r in rings]
+                for ir in wkb.load_grid_polygons(b, grid_size):
                     polys_out.extend(buffer_polygon(ir, d_units, quad_segs))
-            out.append(wkb.dump_multipolygon(
-                [[r.astype(np.float64) * grid_size for r in rings]
-                 for rings in polys_out]
-            ))
+            out.append(wkb.dump_grid_multipolygon(polys_out, grid_size))
         return pd.Series(out)
 
     return _buf(geom)
@@ -64,14 +59,12 @@ def st_point_on_surface(geom: Column, grid_size: float = 1e-5) -> Column:
         xs = np.empty(len(geoms)); ys = np.empty(len(geoms))
         for i, b in enumerate(geoms):
             best_rings, best_a2 = None, -1.0
-            for rings in wkb.load_polygons(bytes(b)):
-                ir = [np.floor(np.asarray(r, np.float64) / grid_size + 0.5).astype(np.int64)
-                      for r in rings]
+            for ir in wkb.load_grid_polygons(b, grid_size):
                 a2 = abs(ring_area2(ir[0].astype(np.float64)))
                 if a2 > best_a2:
                     best_a2, best_rings = a2, ir
             px, py = point_on_surface(best_rings)
-            xs[i], ys[i] = px * grid_size, py * grid_size
+            xs[i], ys[i] = grid_to_float((px, py), grid_size)
         return pd.DataFrame({"x": xs, "y": ys})
 
     return _pos(geom)

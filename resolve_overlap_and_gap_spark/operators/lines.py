@@ -15,20 +15,15 @@ remembers its source line id, replacing the reference's ST_DWithin re-join
 
 from __future__ import annotations
 
-from collections import defaultdict
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from resolve_overlap_and_gap_spark import grid as G
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.geom.arrangement import (
-    Arrangement,
-    label_walks,
-    node_segments,
-)
+from resolve_overlap_and_gap_spark.geom.core import snap_to_grid_int
 
 POLYGONIZE_SCHEMA = T.StructType([
     T.StructField("face_id", T.LongType()),
@@ -38,97 +33,7 @@ POLYGONIZE_SCHEMA = T.StructType([
 ])
 
 
-def _polygonize_batch(pdf: pd.DataFrame, grid_size: float) -> pd.DataFrame:
-    """Node all lines of the batch, walk faces, emit positive walks with
-    the distinct source-line ids along their borders (sorted)."""
-    segs, lids = [], []
-    for lid, b in zip(pdf["lid"], pdf["geom"]):
-        kind, coords = wkb.load(bytes(b))
-        if kind != "linestring":
-            continue
-        c = np.floor(np.asarray(coords, np.float64) / grid_size + 0.5).astype(np.int64)
-        keep = (np.diff(c, axis=0) != 0).any(axis=1)
-        s = np.hstack([c[:-1][keep], c[1:][keep]])
-        segs.append(s)
-        lids.extend([int(lid)] * len(s))
-    if not segs:
-        return pd.DataFrame(columns=["face_id", "area", "geom", "border_line_ids"])
-    S = np.vstack(segs)
-    pid = np.asarray(lids, dtype=np.int64)
-    wt = np.ones(len(S), dtype=np.int64)
-    S, pid, wt = node_segments(S, pid, wt)
-    # for lines, every noded segment is an edge regardless of net winding:
-    # feed each one twice (both directions cancel nowhere) — Arrangement
-    # keeps an edge when its net dict is non-empty, so use distinct pids
-    # per direction trick: keep as-is (wt=1) which preserves all edges.
-    arr = Arrangement(S, pid, wt)
-    # source lines per undirected edge
-    edge_lines: dict[int, set[int]] = defaultdict(set)
-    for eid, net in enumerate(arr.net):
-        edge_lines[eid] = set(net.keys())
-    rows = []
-    k = 0
-    for wid, a2 in enumerate(arr.walk_area2):
-        if a2 <= 0:
-            continue
-        coords = arr.walk_coords(wid)
-        lids_here: set[int] = set()
-        for h in arr.walks[wid]:
-            lids_here |= edge_lines[h // 2]
-        rows.append((
-            k,
-            a2 / 2.0 * grid_size * grid_size,
-            wkb.dump_polygon([coords.astype(np.float64) * grid_size]),
-            sorted(lids_here),
-        ))
-        k += 1
-    out = pd.DataFrame(rows, columns=["face_id", "area", "geom", "border_line_ids"])
-    return out
-
-
-def polygonize_lines(lines: DataFrame, grid_size: float, res: int | None = 8,
-                     geom_col: str = "geom", id_col: str = "lid",
-                     n_buckets: int = 64) -> DataFrame:
-    """Polygonize a LineString network into the faces it encloses.
-
-    res=<int> (default): DISTRIBUTED — cell-partition the arrangement at
-    quadtree resolution `res` (see polygonize_lines_grid; per-cell overlay,
-    one shuffle, cross-cell face reassembly via distributed connected
-    components). This is the 100 TB path: no single-partition stage.
-
-    res=None: legacy single-partition arrangement (tiny layers / debugging;
-    mirrors the reference's single-threaded ar5 line phase,
-    function_resolve_overlap_gap_run.sql:202-276).
-
-    Both paths order face_id by (area, wkb) for determinism.  Hole
-    semantics differ on line ISLANDS (a closed ring floating inside
-    another face): the distributed path is hole-correct (overlay faces
-    carry holes; the surrounding face's area excludes the island), while
-    the legacy path emits positive walks only, counting island interiors
-    in both the island face and its surrounding face.  For island-free
-    networks (every tested fixture) the outputs are identical."""
-    if res is not None:
-        return polygonize_lines_grid(lines, grid_size, res, geom_col, id_col,
-                                     n_buckets)
-    slim = lines.select(F.col(id_col).cast("long").alias("lid"), F.col(geom_col).alias("geom"))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _polygonize_batch(pdf, grid_size)
-        if len(out):
-            # deterministic ids: sort by (area, wkb bytes)
-            out = out.sort_values(["area", "geom"], kind="mergesort").reset_index(drop=True)
-            out["face_id"] = np.arange(len(out), dtype=np.int64)
-        return out
-
-    return (
-        slim.coalesce(1)
-        .withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .applyInPandas(lambda pdf: kernel(pdf), POLYGONIZE_SCHEMA)
-    )
-
-
-# ------------------------------------------------- distributed polygonize
+# ------------------------------------------------------------ polygonize
 #
 # Cell-partitioned polygonize (the reference's job-type 2/4/5 pattern
 # applied to the line phase): each cell arranges (its lines ∪ the cell
@@ -203,13 +108,10 @@ def _piece_rows_for_cell(cell: int, sub: pd.DataFrame, g: float,
                          region: tuple[int, int, int, int]) -> list[tuple]:
     """Overlay one cell's clipped lines against the cell box; emit piece
     rows with free border intervals and rim flags."""
-    from resolve_overlap_and_gap_spark import grid as G
     from resolve_overlap_and_gap_spark.geom.arrangement import overlay
     from resolve_overlap_and_gap_spark.operators.overlap_gap import UNIVERSE
 
-    xmin, ymin, xmax, ymax = G.cell_bounds_np(np.array([cell], dtype=np.int64))
-    cx0 = int(np.floor(xmin[0] / g + 0.5)); cy0 = int(np.floor(ymin[0] / g + 0.5))
-    cx1 = int(np.floor(xmax[0] / g + 0.5)); cy1 = int(np.floor(ymax[0] / g + 0.5))
+    cx0, cy0, cx1, cy1 = G.cell_box_units(cell, g)
     cut: list[tuple[int, np.ndarray]] = []
     cover: dict[tuple[int, int], list[tuple[int, int]]] = {}
     order = np.argsort(sub["lid"].to_numpy(), kind="stable")
@@ -218,7 +120,7 @@ def _piece_rows_for_cell(cell: int, sub: pd.DataFrame, g: float,
         kind, coords = wkb.load(bytes(sub["geom"].iloc[i]))
         if kind != "linestring":
             continue
-        c = np.floor(np.asarray(coords, np.float64) / g + 0.5).astype(np.int64)
+        c = snap_to_grid_int(coords, g)
         for j in range(len(c) - 1):
             s = _clip_seg_box(int(c[j, 0]), int(c[j, 1]),
                               int(c[j + 1, 0]), int(c[j + 1, 1]),
@@ -249,7 +151,7 @@ def _piece_rows_for_cell(cell: int, sub: pd.DataFrame, g: float,
     for k, f in enumerate(faces):
         ivals: list[list[int]] = []
         rim = False
-        for ring in [f.shell] + list(f.holes):
+        for ring in f.rings:
             n = len(ring)
             for j in range(n):
                 ux, uy = int(ring[j, 0]), int(ring[j, 1])
@@ -268,26 +170,35 @@ def _piece_rows_for_cell(cell: int, sub: pd.DataFrame, g: float,
                     continue  # region rim is never a portal
                 if not covered(key, lo, hi):
                     ivals.append([key[0], key[1], lo, hi])
-        mp = [[f.shell.astype(np.float64) * g]
-              + [h.astype(np.float64) * g for h in f.holes]]
         rows.append((cell, _pid64(cell, k), int(f.area2), rim,
-                     sorted(f.lines), wkb.dump_multipolygon(mp), ivals))
+                     sorted(f.lines), wkb.dump_grid_multipolygon([f.rings], g),
+                     ivals))
     return rows
 
 
-def polygonize_lines_grid(lines: DataFrame, grid_size: float, res: int = 8,
-                          geom_col: str = "geom", id_col: str = "lid",
-                          n_buckets: int = 64) -> DataFrame:
-    """Distributed polygonize — see module comment above.  Plan shape:
-    one covering-cell shuffle + per-cell Arrow kernels for pieces, one
-    equi-join on (border line, chunk) for portal edges, O(log diameter)
-    min-label rounds with pointer jumping for components, one dissolve
-    shuffle for final faces.  The only driver-side data are the layer's
-    4 bbox doubles and per-round convergence counts."""
-    from resolve_overlap_and_gap_spark import grid as G
-    from resolve_overlap_and_gap_spark.operators.overlap_gap import wkb_bounds, with_cells
+def polygonize_lines(lines: DataFrame, grid_size: float, res: int = 8,
+                     geom_col: str = "geom", id_col: str = "lid",
+                     n_buckets: int | None = None) -> DataFrame:
+    """Polygonize a LineString network into the faces it encloses ->
+    (face_id, area, geom, border_line_ids), cell-partitioned at quadtree
+    resolution `res` (see the comment above).  Faces carry holes: a line
+    island's interior is its own face and is excluded from the face
+    around it.  face_id orders faces by (area, wkb) — the one global
+    window, over output faces only.  Plan shape: one covering-cell
+    shuffle + per-cell Arrow kernels for pieces, ceil(res/4) hierarchical
+    union-find rounds over free border intervals for components, one
+    dissolve shuffle for final faces.  The only driver-side data are the
+    layer's 4 bbox doubles.  n_buckets: hash buckets per kernel stage;
+    None is default_cell_buckets, the rule of every kernel stage."""
+    from resolve_overlap_and_gap_spark.operators.overlap_gap import (
+        default_cell_buckets,
+        wkb_bounds,
+        with_cells,
+    )
 
     g = grid_size
+    if n_buckets is None:
+        n_buckets = default_cell_buckets(lines)
     spark = lines.sparkSession
     slim = lines.select(F.col(id_col).cast("long").alias("fid"),
                         F.col(geom_col).alias("geom"))
@@ -312,12 +223,9 @@ def polygonize_lines_grid(lines: DataFrame, grid_size: float, res: int = 8,
         .repartition(max(n_buckets // 4, 1))
     )
     # region rim in grid units (for the unbounded-face test)
-    c00 = G.cell_from_xy_np(np.array([ix0]), np.array([iy0]), res)
-    c11 = G.cell_from_xy_np(np.array([ix1]), np.array([iy1]), res)
-    bx0, by0, _, _ = G.cell_bounds_np(c00)
-    _, _, bx1, by1 = G.cell_bounds_np(c11)
-    region = (int(np.floor(bx0[0] / g + 0.5)), int(np.floor(by0[0] / g + 0.5)),
-              int(np.floor(bx1[0] / g + 0.5)), int(np.floor(by1[0] / g + 0.5)))
+    c00 = G.cell_from_xy_np(np.array([ix0]), np.array([iy0]), res)[0]
+    c11 = G.cell_from_xy_np(np.array([ix1]), np.array([iy1]), res)[0]
+    region = G.cell_box_units(c00, g)[:2] + G.cell_box_units(c11, g)[2:]
 
     # ---- pieces: overlay cells holding lines; whole-box pieces elsewhere
     lcells = with_cells(slim, res).select("cell_id", F.col("fid").alias("lid"), "geom")
@@ -338,9 +246,7 @@ def polygonize_lines_grid(lines: DataFrame, grid_size: float, res: int = 8,
             rows = []
             for cid in pdf["cell_id"]:
                 cell = int(cid)
-                xmin, ymin, xmax, ymax = G.cell_bounds_np(np.array([cell], dtype=np.int64))
-                cx0 = int(np.floor(xmin[0] / g + 0.5)); cy0 = int(np.floor(ymin[0] / g + 0.5))
-                cx1 = int(np.floor(xmax[0] / g + 0.5)); cy1 = int(np.floor(ymax[0] / g + 0.5))
+                cx0, cy0, cx1, cy1 = G.cell_box_units(cell, g)
                 rx0, ry0, rx1, ry1 = region
                 ivals, rim = [], False
                 for key, lo, hi in (((0, cx0), cy0, cy1), ((0, cx1), cy0, cy1),
@@ -351,10 +257,10 @@ def polygonize_lines_grid(lines: DataFrame, grid_size: float, res: int = 8,
                         continue
                     ivals.append([key[0], key[1], lo, hi])
                 box = np.array([[cx0, cy0], [cx1, cy0], [cx1, cy1], [cx0, cy1]],
-                               np.float64) * g
+                               np.int64)
                 rows.append((cell, _pid64(cell, 0),
                              2 * (cx1 - cx0) * (cy1 - cy0), rim, [],
-                             wkb.dump_polygon([box]), ivals))
+                             wkb.dump_grid_multipolygon([[box]], g), ivals))
             yield pd.DataFrame(rows, columns=[f.name for f in PIECES_SCHEMA])
 
     empty_cells = region_cells.join(
@@ -382,9 +288,7 @@ def polygonize_lines_grid(lines: DataFrame, grid_size: float, res: int = 8,
     def cc_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         rows: list[tuple] = []
         for gcell, sub in pdf.groupby("gcell", sort=True):
-            xmin, ymin, xmax, ymax = G.cell_bounds_np(np.array([int(gcell)], dtype=np.int64))
-            gx0 = int(np.floor(xmin[0] / g + 0.5)); gy0 = int(np.floor(ymin[0] / g + 0.5))
-            gx1 = int(np.floor(xmax[0] / g + 0.5)); gy1 = int(np.floor(ymax[0] / g + 0.5))
+            gx0, gy0, gx1, gy1 = G.cell_box_units(int(gcell), g)
             parent: dict[int, int] = {}
 
             def find(x: int) -> int:
@@ -547,12 +451,10 @@ def resolve_with_lines(polygons: DataFrame, lines: DataFrame, cfg, res: int = 8,
             k2, coords = wkb.load(bytes(geom))
             if k2 != "linestring":
                 continue
-            c = np.floor(np.asarray(coords, np.float64) / g + 0.5)
             # clamp into the cell box (cut lines need no exact clip —
             # out-of-cell parts are re-cut in their own cells)
-            c[:, 0] = np.clip(c[:, 0], cx0, cx1)
-            c[:, 1] = np.clip(c[:, 1], cy0, cy1)
-            cut.append((int(fid), c.astype(np.int64)))
+            cut.append((int(fid), np.clip(snap_to_grid_int(coords, g),
+                                          [cx0, cy0], [cx1, cy1])))
         return cut
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -576,10 +478,9 @@ def resolve_with_lines(polygons: DataFrame, lines: DataFrame, cfg, res: int = 8,
                 cover = sorted(p for p in f.cover if p != UNIVERSE)
                 if not cover:
                     continue
-                mp = [[f.shell.astype(np.float64) * g]
-                      + [h.astype(np.float64) * g for h in f.holes]]
                 rows.append((cell, cover[0], cover[1:], f.lines,
-                             f.area2 / 2.0 * g * g, wkb.dump_multipolygon(mp)))
+                             f.area2 / 2.0 * g * g,
+                             wkb.dump_grid_multipolygon([f.rings], g)))
         return pd.DataFrame(rows, columns=[f.name for f in RESOLVE_LINES_SCHEMA])
 
     return cells.groupBy("bucket").applyInPandas(kernel, RESOLVE_LINES_SCHEMA)

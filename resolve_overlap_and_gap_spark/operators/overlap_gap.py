@@ -34,7 +34,11 @@ from resolve_overlap_and_gap_spark import grid
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay_cells
-from resolve_overlap_and_gap_spark.geom.core import clip_ring_to_box, ring_area2
+from resolve_overlap_and_gap_spark.geom.core import (
+    clip_ring_to_box,
+    ring_area2,
+    snap_to_grid_int,
+)
 
 UNIVERSE = -1  # poly id of the cell box in the overlay
 
@@ -67,45 +71,18 @@ BOUNDS_SCHEMA = T.StructType(
 
 @F.pandas_udf(BOUNDS_SCHEMA)
 def wkb_bounds(geoms: pd.Series) -> pd.DataFrame:
-    """Arrow-batched bounds of WKB geometries.
-
-    Single-ring little-endian polygons of equal byte length share an exact
-    byte layout (coords at offset 13, stride 16), so the batch is grouped
-    by blob length and each group's bounds come from ONE vectorized
-    min/max over a (rows x verts) float64 view — no per-row parsing.
-    Anything else (multipolygons, multi-ring, other types) falls back to
-    the generic per-row parser; results are bit-identical either way."""
-    n = len(geoms)
-    out = np.empty((n, 4), dtype=np.float64)
-    done = np.zeros(n, dtype=bool)
-    lens = np.fromiter((len(b) for b in geoms), np.int64, n)
+    """Arrow-batched bounds of WKB geometries: one-ring polygons come from
+    wkb.one_ring_batches (one vectorized min/max per blob length, no
+    per-row parsing); anything else from the per-row parser — results
+    are bit-identical either way."""
     vals = geoms.to_numpy(dtype=object)
-    for L in np.unique(lens):
-        rem = L - 13
-        if rem < 16 * 3 or rem % 16:
-            continue
-        nv = rem // 16
-        idx = np.nonzero(lens == L)[0]
-        buf = b"".join(vals[i] for i in idx)
-        a = np.frombuffer(buf, np.uint8).reshape(len(idx), L)
-        hdr = (
-            (a[:, 0] == 1)
-            & (a[:, 1] == 3) & (a[:, 2] == 0) & (a[:, 3] == 0) & (a[:, 4] == 0)
-            & (a[:, 5] == 1) & (a[:, 6] == 0) & (a[:, 7] == 0) & (a[:, 8] == 0)
-            & (a[:, 9] == (nv & 0xFF)) & (a[:, 10] == ((nv >> 8) & 0xFF))
-            & (a[:, 11] == ((nv >> 16) & 0xFF)) & (a[:, 12] == ((nv >> 24) & 0xFF))
-        )
-        ok = np.nonzero(hdr)[0]
-        if not len(ok):
-            continue
-        c = a[ok, 13:].copy().view("<f8").reshape(len(ok), nv, 2)
-        sub = idx[ok]
-        out[sub, 0] = c[:, :, 0].min(axis=1)
-        out[sub, 1] = c[:, :, 1].min(axis=1)
-        out[sub, 2] = c[:, :, 0].max(axis=1)
-        out[sub, 3] = c[:, :, 1].max(axis=1)
-        done[sub] = True
-    for i in np.nonzero(~done)[0]:
+    out = np.empty((len(vals), 4), dtype=np.float64)
+    done = np.zeros(len(vals), dtype=bool)
+    for rows, c in wkb.one_ring_batches(vals):
+        out[rows, :2] = c.min(axis=1)
+        out[rows, 2:] = c.max(axis=1)
+        done[rows] = True
+    for i in np.flatnonzero(~done):
         allc = wkb.load_coords(bytes(vals[i]))
         out[i] = (allc[:, 0].min(), allc[:, 1].min(),
                   allc[:, 0].max(), allc[:, 1].max())
@@ -136,17 +113,6 @@ def with_cells(features: DataFrame, res: int, geom_col: str = "geom") -> DataFra
 
 
 # ------------------------------------------------------------ per-cell kernel
-def _snap_polys(fid: int, geom: bytes, g: float) -> list[tuple[int, list[np.ndarray]]]:
-    out = []
-    for rings in wkb.load_polygons(bytes(geom)):
-        ir = []
-        for r in rings:
-            c = np.floor(np.asarray(r, dtype=np.float64) / g + 0.5).astype(np.int64)
-            ir.append(c)
-        out.append((fid, ir))
-    return out
-
-
 def _clip_to_cell(rings: list[np.ndarray], cxmin, cymin, cxmax, cymax) -> list[np.ndarray]:
     out = []
     for r in rings:
@@ -165,7 +131,7 @@ def _clip_to_cell(rings: list[np.ndarray], cxmin, cymin, cxmax, cymax) -> list[n
             continue
         c = clip_ring_to_box(r.astype(np.float64), cxmin, cymin, cxmax, cymax)
         if len(c) >= 3 and ring_area2(c) != 0:
-            out.append(np.floor(c + 0.5).astype(np.int64))
+            out.append(snap_to_grid_int(c, 1.0))
     return out
 
 
@@ -173,19 +139,18 @@ def _cell_prep(cell: int, pdf: pd.DataFrame, g: float):
     """Snap + clip pdf's (fid, geom) features to `cell` and add the
     UNIVERSE cell box — the front half of every per-cell overlay kernel.
     -> (cell box in grid units, polys)"""
-    xmin, ymin, xmax, ymax = grid.cell_bounds_np(np.array([cell], dtype=np.int64))
-    cxmin = int(np.floor(xmin[0] / g + 0.5)); cymin = int(np.floor(ymin[0] / g + 0.5))
-    cxmax = int(np.floor(xmax[0] / g + 0.5)); cymax = int(np.floor(ymax[0] / g + 0.5))
+    box = grid.cell_box_units(cell, g)
     polys = []
     for fid, geom in zip(pdf["fid"], pdf["geom"]):
-        for pid, rings in _snap_polys(int(fid), geom, g):
-            clipped = _clip_to_cell(rings, cxmin, cymin, cxmax, cymax)
+        for rings in wkb.load_grid_polygons(geom, g):
+            clipped = _clip_to_cell(rings, *box)
             if clipped:
-                polys.append((pid, clipped))
-    box = np.array([[cxmin, cymin], [cxmax, cymin], [cxmax, cymax], [cxmin, cymax]],
-                   dtype=np.int64)
-    polys.append((UNIVERSE, [box]))
-    return (cxmin, cymin, cxmax, cymax), polys
+                polys.append((int(fid), clipped))
+    cxmin, cymin, cxmax, cymax = box
+    ring = np.array([[cxmin, cymin], [cxmax, cymin], [cxmax, cymax], [cxmin, cymax]],
+                    dtype=np.int64)
+    polys.append((UNIVERSE, [ring]))
+    return box, polys
 
 
 DETECT_SCHEMA = T.StructType([
@@ -263,7 +228,6 @@ def _detect_bucket(pdf: pd.DataFrame, cfg: EngineConfig,
 
 def _detect_rows(cell: int, box: tuple, faces, quarantined, pdf: pd.DataFrame,
                  g: float, with_geom: bool = True) -> pd.DataFrame:
-    cxmin, cymin, cxmax, cymax = box
     rows = []
     # non-convergent features are reported, not silently dropped (kind =
     # 'quarantined', id_a = feature id, geometry = the clipped input)
@@ -277,17 +241,9 @@ def _detect_rows(cell: int, box: tuple, faces, quarantined, pdf: pd.DataFrame,
     pairs: dict[tuple[int, int], list[Face]] = {}
     for f in faces:
         if f.cover == frozenset([UNIVERSE]):
-            s = f.shell
-            touches = bool(
-                (s[:, 0] == cxmin).any() or (s[:, 0] == cxmax).any()
-                or (s[:, 1] == cymin).any() or (s[:, 1] == cymax).any()
-            )
-            gg = (wkb.dump_multipolygon(
-                [[f.shell.astype(np.float64) * g]
-                 + [h.astype(np.float64) * g for h in f.holes]])
-                  if with_geom else None)
+            gg = wkb.dump_grid_multipolygon([f.rings], g) if with_geom else None
             rows.append((cell, "gap", None, None, f.area2 / 2.0 * g * g,
-                         touches, gg))
+                         grid.touches_box(f.shell, box), gg))
             continue
         ids = sorted(p for p in f.cover if p != UNIVERSE)
         for i in range(len(ids)):
@@ -297,9 +253,7 @@ def _detect_rows(cell: int, box: tuple, faces, quarantined, pdf: pd.DataFrame,
         area = sum(f.area2 for f in fs) / 2.0 * g * g
         if area <= 0:
             continue
-        gg = (wkb.dump_multipolygon(
-            [[f.shell.astype(np.float64) * g]
-             + [h.astype(np.float64) * g for h in f.holes] for f in fs])
+        gg = (wkb.dump_grid_multipolygon([f.rings for f in fs], g)
               if with_geom else None)
         rows.append((cell, "overlap", a, b, area, None, gg))
     # fixed (nullable) dtypes: a cell's all-null id_a/id_b (gaps only),

@@ -30,12 +30,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from resolve_overlap_and_gap_spark import grid
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import (
     overlay_cells,
     ring_is_valid,
 )
+from resolve_overlap_and_gap_spark.geom.core import grid_to_float, snap_to_grid_int
 from resolve_overlap_and_gap_spark.operators.border import (
     merge_intervals,
     pack_intervals,
@@ -61,8 +63,7 @@ def wkb_is_valid(geoms: pd.Series) -> pd.Series:
                     r = np.asarray(r, dtype=np.float64)
                     # scale-relative grid keeps int64 predicates overflow-free
                     ext = float(max(r[:, 0].ptp(), r[:, 1].ptp(), 1e-30))
-                    c = np.floor(r / (ext / 1e7) + 0.5).astype(np.int64)
-                    if not ring_is_valid(c):
+                    if not ring_is_valid(snap_to_grid_int(r, ext / 1e7)):
                         ok = False
         except Exception:
             ok = False
@@ -170,21 +171,26 @@ KILL_OWNER = -3        # owner sentinel for >= min_area border-gap KILL
                        # a >= min_area cross-border gap stay gaps.
 
 
+def measures_geodesic(cfg: EngineConfig) -> bool:
+    """True when face areas are decided in spherical m^2 (the reference's
+    ST_Area(geo, true)), False for planar snap-grid units."""
+    return cfg.geodesic_measure and not cfg.utm
+
+
 def face_measure_areas(faces, g: float, cfg: EngineConfig) -> tuple[list[float], float]:
     """(decision areas per face, min threshold) in the engine's configured
     measure: planar 2x-grid-units by default; spherical m^2 when
-    cfg.geodesic_measure and not cfg.utm — the reference threads utm through
-    every area call (…utils/function_01_get_face_area.sql:24-28,
-    types_resolve_overlap.sql:19), so min_area_to_keep is m^2 there."""
-    if cfg.geodesic_measure and not cfg.utm:
+    measures_geodesic(cfg) — the reference threads utm through every area
+    call (…utils/function_01_get_face_area.sql:24-28,
+    types_resolve_overlap.sql:19), so min_area_to_keep is m^2 there.
+    The one sub-min rule: a face is a sliver iff its area < the threshold
+    (resolve's sliver merge and the heal's reassembled gaps alike)."""
+    if measures_geodesic(cfg):
         from resolve_overlap_and_gap_spark.geom.geodesic import polygon_area_m2
 
         areas = [
-            polygon_area_m2(
-                [f.shell.astype(np.float64) * g]
-                + [h.astype(np.float64) * g for h in f.holes],
-                spheroid=cfg.geodesic_spheroid,
-            )
+            polygon_area_m2([grid_to_float(r, g) for r in f.rings],
+                            spheroid=cfg.geodesic_spheroid)
             for f in faces
         ]
         return areas, cfg.min_area_to_keep
@@ -197,7 +203,6 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
     """Post-overlay half of the resolve kernel for one cell: sliver merge,
     owner assignment, row emission."""
     g = cfg.snap_tolerance
-    cxmin, cymin, cxmax, cymax = box
     # payload pass-through (reference column_data_as_json,
     # function_resolve_overlap_gap_init.sql:249): the OWNER's record rides
     # through the kernel, no post-resolve attribute re-join needed
@@ -223,14 +228,7 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
         qrows.append(q)
     if not faces:
         return pd.DataFrame(qrows, columns=cols)
-    border_faces = set()
-    for k, f in enumerate(faces):
-        s = f.shell
-        if (
-            (s[:, 0] == cxmin).any() or (s[:, 0] == cxmax).any()
-            or (s[:, 1] == cymin).any() or (s[:, 1] == cymax).any()
-        ):
-            border_faces.add(k)
+    border_faces = {k for k, f in enumerate(faces) if grid.touches_box(f.shell, box)}
     measure, min_measure = face_measure_areas(faces, g, cfg)
     group_of, _ = _merge_slivers(faces, adj, min_measure, border_faces, areas=measure)
     # owner of a group = owner of its root face (attribute inheritance)
@@ -245,14 +243,10 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
                 m = sum(measure[i] for i in members)
                 if 0 < m < min_measure:
                     area2 = sum(faces[i].area2 for i in members)
-                    mp = [
-                        [faces[i].shell.astype(np.float64) * g]
-                        + [h.astype(np.float64) * g for h in faces[i].holes]
-                        for i in members
-                    ]
+                    mp = [faces[i].rings for i in members]
                     # gap rows feed the heal geometrically — always dumped
                     rows.append(_row(cell, GAP_OWNER, [], area2 / 2.0 * g * g,
-                                     wkb.dump_multipolygon(mp)))
+                                     wkb.dump_grid_multipolygon(mp, g)))
                 elif m >= min_measure:
                     # >= min_area border gap: emit its border contact as
                     # kill intervals so the heal pass knows any sub-min
@@ -260,9 +254,7 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
                     # a big gap (border.py kill propagation)
                     iv: list = []
                     for i in members:
-                        iv.extend(ring_border_intervals(
-                            [faces[i].shell] + faces[i].holes,
-                            cxmin, cymin, cxmax, cymax))
+                        iv.extend(ring_border_intervals(faces[i].rings, *box))
                     if iv:
                         rows.append(_row(
                             cell, KILL_OWNER, [], 0.0,
@@ -272,15 +264,8 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
         owner = root_cover[0]
         others = root_cover[1:]
         area2 = sum(faces[i].area2 for i in members)
-        if with_geom:
-            mp = [
-                [faces[i].shell.astype(np.float64) * g]
-                + [h.astype(np.float64) * g for h in faces[i].holes]
-                for i in members
-            ]
-            gg = wkb.dump_multipolygon(mp)
-        else:
-            gg = None
+        gg = (wkb.dump_grid_multipolygon([faces[i].rings for i in members], g)
+              if with_geom else None)
         rows.append(_row(cell, owner, others, area2 / 2.0 * g * g, gg))
     return pd.DataFrame(rows + qrows, columns=cols)
 
@@ -291,9 +276,9 @@ def _quarantine_geoms(polys: list, quarantined, g: float) -> list[tuple[int, byt
     by_fid: dict[int, list] = {}
     for pid, rings in polys:
         if pid in quarantined:
-            by_fid.setdefault(pid, []).append(
-                [r.astype(np.float64) * g for r in rings])
-    return [(fid, wkb.dump_multipolygon(by_fid[fid])) for fid in sorted(by_fid)]
+            by_fid.setdefault(pid, []).append(rings)
+    return [(fid, wkb.dump_grid_multipolygon(by_fid[fid], g))
+            for fid in sorted(by_fid)]
 
 
 def _bucket_kernel(pdf: pd.DataFrame, cfg: EngineConfig,

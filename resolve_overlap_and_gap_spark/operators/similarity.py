@@ -17,10 +17,6 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
-def _dot(a: str, b: str) -> F.Column:
-    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)")
-
-
 def _norm(a: str) -> F.Column:
     return F.sqrt(F.expr(f"aggregate(transform({a}, x -> x * x), cast(0.0 as double), (acc, v) -> acc + v)"))
 

@@ -4,18 +4,15 @@ deterministic — J8, function_resolve_overlap_gap_single_cell.sql:820-831).
 
 A "tile" is just a grid cell at a chosen raster resolution. Vector->raster =
 explode footprint to covering tiles; tile ownership = min feature id per tile
-(deterministic under ties). Raster->vector = per-tile point-in-footprint test
-of the tile center (the classic center-sampling rasterization rule).
-All JVM built-ins.
+(deterministic under ties). Raster->vector (each feature's tile extent)
+is the registry's tiles_to_vector query. All JVM built-ins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from resolve_overlap_and_gap_spark import grid
 from resolve_overlap_and_gap_spark.operators.celljoin import boxes_with_cells
 
 
@@ -35,42 +32,3 @@ def tile_owner(boxes: DataFrame, res: int, id_col: str = "id") -> DataFrame:
         .agg(F.min(F.col(id_col)).alias("owner_id"), F.count("*").alias("n_features"))
     )
 
-
-def rasterize_center_sampled(boxes: DataFrame, res: int, id_col: str = "id") -> DataFrame:
-    """Center-sampling rasterization: tile belongs to a feature iff the tile
-    CENTER is inside the footprint (half-open). Ties broken by min id."""
-    t = boxes_with_cells(boxes, res)
-    n = float(1 << res)
-    # tile center reconstructed from the Morton id, decoded JVM-side
-    z = F.col("cell_id").bitwiseAND(F.lit((1 << grid.RES_SHIFT) - 1))
-    tx = _unspread_col(z)
-    ty = _unspread_col(F.shiftright(z, 1))
-    cx = F.lit(-180.0) + (tx.cast("double") + F.lit(0.5)) * F.lit(360.0 / n)
-    cy = F.lit(-90.0) + (ty.cast("double") + F.lit(0.5)) * F.lit(180.0 / n)
-    t = (
-        t.withColumn("cx", cx)
-        .withColumn("cy", cy)
-        .where(
-            (F.col("cx") >= F.col("xmin")) & (F.col("cx") < F.col("xmax"))
-            & (F.col("cy") >= F.col("ymin")) & (F.col("cy") < F.col("ymax"))
-        )
-    )
-    w = Window.partitionBy("cell_id").orderBy(F.col(id_col))
-    return (
-        t.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(F.col("cell_id").alias("tile_id"), F.col(id_col).alias("owner_id"))
-    )
-
-
-def _unspread_col(c):
-    c = c.bitwiseAND(F.lit(0x5555555555555555))
-    for shift, mask in (
-        (1, 0x3333333333333333),
-        (2, 0x0F0F0F0F0F0F0F0F),
-        (4, 0x00FF00FF00FF00FF),
-        (8, 0x0000FFFF0000FFFF),
-        (16, 0x00000000FFFFFFFF),
-    ):
-        c = (c.bitwiseOR(F.shiftright(c, shift))).bitwiseAND(F.lit(mask))
-    return c

@@ -824,7 +824,21 @@ def o_cells_outside_in() -> str:
 DETECT_CFG_SNAP = 1e-5
 
 
-_LAYER_CACHE: dict[tuple, DataFrame] = {}
+_MEMO: dict[tuple, object] = {}
+
+
+def _session_memo(spark: SparkSession, key: tuple, build):
+    """build() memoized per (Spark application, key) — the registry's one
+    session memo.  Storing an entry for a new applicationId drops every
+    other application's entries, so a stopped session's checkpoints and
+    counts never outlive it."""
+    app = spark.sparkContext.applicationId
+    ck = (app, *key)
+    if ck not in _MEMO:
+        for stale in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[stale]
+        _MEMO[ck] = build()
+    return _MEMO[ck]
 
 
 def derived_polygon_layer(spark: SparkSession, sf_dir: str, scale: float = 1.0,
@@ -836,19 +850,16 @@ def derived_polygon_layer(spark: SparkSession, sf_dir: str, scale: float = 1.0,
     each ACTION re-runs the Arrow derivation (~2-3 s/action at sf0.1)."""
     from resolve_overlap_and_gap_spark.sources.pages import with_ngon_footprint
 
-    ck = (spark.sparkContext.applicationId, sf_dir, scale, table, key)
-    hit = _LAYER_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    pts = _points(spark, sf_dir, table, key)
-    # small parquet files arrive as one input split; spread rows before the
-    # Arrow UDF stages so geometry derivation parallelizes
-    pts = pts.repartition(spark.sparkContext.defaultParallelism * 2)
-    out = with_ngon_footprint(pts, scale).select(
-        F.col("pid").alias("fid"), "geom"
-    ).localCheckpoint()
-    _LAYER_CACHE[ck] = out
-    return out
+    def build() -> DataFrame:
+        pts = _points(spark, sf_dir, table, key)
+        # small parquet files arrive as one input split; spread rows before
+        # the Arrow UDF stages so geometry derivation parallelizes
+        pts = pts.repartition(spark.sparkContext.defaultParallelism * 2)
+        return with_ngon_footprint(pts, scale).select(
+            F.col("pid").alias("fid"), "geom"
+        ).localCheckpoint()
+
+    return _session_memo(spark, ("layer", sf_dir, scale, table, key), build)
 
 
 _SESSIONIZE_SQL = """
@@ -983,19 +994,12 @@ def res_for_n(n: int) -> int:
     return max(4, min(int(math.ceil(math.log(max(n / 40.0, 1.0), 4))), 10))
 
 
-_TCOUNT_CACHE: dict[tuple, int] = {}
-
-
 def _table_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Row count memoized per (session, input): ring-search sizing (knn
     auto_res / geodesic r0) and density resolution all need the same
     constant — one count action per session instead of one per query."""
-    ck = (spark.sparkContext.applicationId, sf_dir, table)
-    hit = _TCOUNT_CACHE.get(ck)
-    if hit is None:
-        hit = _read(spark, sf_dir, table).count()
-        _TCOUNT_CACHE[ck] = hit
-    return hit
+    return _session_memo(spark, ("count", sf_dir, table),
+                         lambda: _read(spark, sf_dir, table).count())
 
 
 def _density_res(spark: SparkSession, sf_dir: str, table: str = "orders") -> int:
@@ -1006,9 +1010,6 @@ def _density_res(spark: SparkSession, sf_dir: str, table: str = "orders") -> int
     operators.celljoin.content_balanced_cells.  The row count is memoized
     per (session, input) by _table_count."""
     return res_for_n(_table_count(spark, sf_dir, table))
-
-
-_ASSIGN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _balanced_cfg(spark: SparkSession, sf_dir: str):
@@ -1038,15 +1039,9 @@ def _balanced_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_balanced_cells,
     )
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ASSIGN_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    layer = derived_polygon_layer(spark, sf_dir)
-    cfg = _balanced_cfg(spark, sf_dir)
-    out = assign_balanced_cells(layer, cfg).localCheckpoint()
-    _ASSIGN_CACHE[ck] = out
-    return out
+    return _session_memo(spark, ("assign", sf_dir), lambda: assign_balanced_cells(
+        derived_polygon_layer(spark, sf_dir), _balanced_cfg(spark, sf_dir)
+    ).localCheckpoint())
 
 
 def q_detect_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1144,9 +1139,6 @@ def q_resolve_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPARE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _compare_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """compare_before_after, localCheckpoint-memoized per (session, input):
     clean_metrics and clean_invariants both consume it, and the full
@@ -1155,17 +1147,10 @@ def _compare_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from resolve_overlap_and_gap_spark.config import EngineConfig
     from resolve_overlap_and_gap_spark.operators.compare import compare_before_after
 
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _COMPARE_CACHE.get(ck)
-    if hit is not None:
-        return hit
-    layer = derived_polygon_layer(spark, sf_dir)
     cfg = EngineConfig(snap_tolerance=DETECT_CFG_SNAP, min_area_to_keep=1e-4)
-    out = compare_before_after(
-        layer, cfg, res=_density_res(spark, sf_dir)
-    ).localCheckpoint()
-    _COMPARE_CACHE[ck] = out
-    return out
+    return _session_memo(spark, ("compare", sf_dir), lambda: compare_before_after(
+        derived_polygon_layer(spark, sf_dir), cfg, res=_density_res(spark, sf_dir)
+    ).localCheckpoint())
 
 
 def q_clean_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:

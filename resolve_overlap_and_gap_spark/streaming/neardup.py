@@ -68,13 +68,6 @@ def _signature(text: str, k: int, n_hashes: int) -> list[int]:
     return [min(_h32(s, f":{i}") for s in sh) for i in range(n_hashes)]
 
 
-def _bucket(sig: list[int], band: int, rows_per_band: int) -> str:
-    """Python mirror of minhash_lsh_pairs' band key:
-    md5(concat_ws('_', band values))."""
-    vals = sig[band * rows_per_band:(band + 1) * rows_per_band]
-    return hashlib.md5("_".join(str(v) for v in vals).encode()).hexdigest()
-
-
 def neardup_stream(pages: DataFrame, k: int = 3, n_hashes: int = 8,
                    bands: int = 4, rows_per_band: int = 2,
                    text_col: str = "text", id_col: str = "doc_id",

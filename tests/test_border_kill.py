@@ -174,3 +174,23 @@ def test_healed_preserves_big_cross_border_gap(spark):
     assert set(out) == {1, 2, 3, 4}
     for fid, a in in_areas.items():
         assert out[fid] == pytest.approx(a, rel=1e-6), (fid, out[fid], a)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("res", [4, 8])
+def test_heal_judges_gap_area_like_resolve(spark, res):
+    """A 0.01-degree hole ringed by eight 0.01-degree squares has exactly
+    min_area_to_keep area.  At res 4 the hole lies in one cell and resolve
+    keeps it as a gap; at res 8 lon 1.40625 splits it, and the heal must
+    judge the reassembled hole by resolve's area rule so it stays a gap
+    too: the healed total is 0.0008 whatever the grid."""
+    cfg = EngineConfig(snap_tolerance=1e-6, min_area_to_keep=1e-4)
+    x0, y0, d = 1.40125, 10.0, 0.01
+    rows = [(k, _rect(x0 + i * d, y0 + j * d, x0 + (i + 1) * d, y0 + (j + 1) * d))
+            for k, (i, j) in enumerate(
+                (i, j) for i in (-1, 0, 1) for j in (-1, 0, 1) if (i, j) != (0, 0))]
+    feats = spark.createDataFrame(rows, "fid long, geom binary")
+    healed = border_gap_merge(
+        resolve(feats, cfg, res=res, emit_border_gaps=True), cfg).collect()
+    assert len(healed) == 8
+    assert sum(r.area for r in healed) == pytest.approx(8e-4, rel=1e-9)

@@ -63,6 +63,13 @@ def test_resume_equivalence(spark, tmp_path):
         for r in result2.collect()
     )
     assert got2 == oracle
+    _assert_wall_ms(lin)
+
+
+def _assert_wall_ms(lin):
+    """Every lineage row carries the stage's wall time."""
+    rows = lin._read_lineage().select("wall_ms").collect()
+    assert rows and all(r.wall_ms is not None and r.wall_ms >= 0 for r in rows)
 
 
 @pytest.mark.spark
@@ -108,3 +115,4 @@ def test_resume_healed_equivalence(spark, tmp_path):
     assert lin._read_lineage().count() == before
     got2 = sorted((r.owner, round(r.area, 12), r.n_parts) for r in healed2.collect())
     assert got2 == oracle_healed
+    _assert_wall_ms(lin)

@@ -75,28 +75,31 @@ def test_validate_coverage(spark):
 
 @pytest.mark.spark
 def test_polygonize_distributed_matches_single(spark):
-    """Distributed (cell-partitioned) polygonize == single-partition
-    arrangement on a 4x3 lattice of unit squares spanning many res=10
-    cells: same face count, same areas, same border-line attribution."""
+    """Cell-partitioned polygonize of a 4x3 lattice of unit squares
+    spanning many res=10 cells == the analytic lattice: KX*KY faces of
+    area 1, each bordered by exactly its four lattice lines."""
     rows, lid = [], 0
     KX, KY = 4, 3
+    vert, horiz = {}, {}
     for i in range(KX + 1):
         for j in range(KY):
             lid += 1
+            vert[i, j] = lid
             rows.append((lid, _ls((i, j), (i, j + 1))))
     for j in range(KY + 1):
         for i in range(KX):
             lid += 1
+            horiz[i, j] = lid
             rows.append((lid, _ls((i, j), (i + 1, j))))
     df = spark.createDataFrame(rows, "lid long, geom binary")
-    single = polygonize_lines(df, G, res=None).collect()
-    dist = polygonize_lines(df, G, res=10).collect()
-    assert len(single) == len(dist) == KX * KY
-    for s, d in zip(sorted(r.area for r in single),
-                    sorted(r.area for r in dist)):
-        assert d == pytest.approx(s, rel=1e-12)
-    assert (sorted(tuple(r.border_line_ids) for r in single)
-            == sorted(tuple(r.border_line_ids) for r in dist))
+    faces = polygonize_lines(df, G, res=10).collect()
+    assert len(faces) == KX * KY
+    for f in faces:
+        assert f.area == pytest.approx(1.0, rel=1e-12)
+    expected = sorted(
+        tuple(sorted((vert[i, j], vert[i + 1, j], horiz[i, j], horiz[i, j + 1])))
+        for i in range(KX) for j in range(KY))
+    assert sorted(tuple(f.border_line_ids) for f in faces) == expected
 
 
 @pytest.mark.spark

@@ -76,3 +76,33 @@ def test_bench_queries_subset_of_registry():
     assert not missing, f"bench entries without a registry query: {missing}"
     orphans = [n for n in osql if n not in qs]
     assert not orphans, f"oracles without a query: {orphans}"
+
+
+def test_session_memo_is_per_application(monkeypatch):
+    """The registry's one session memo: the same application gets the
+    same object back without rebuilding; a second application rebuilds,
+    and storing it evicts the first application's entries."""
+    from types import SimpleNamespace
+
+    from resolve_overlap_and_gap_spark.plans import queries as Q
+
+    monkeypatch.setattr(Q, "_MEMO", {})  # leave the session's memos alone
+
+    def app(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    a, b = app("memo-test-a"), app("memo-test-b")
+    first = Q._session_memo(a, ("k",), build)
+    assert Q._session_memo(a, ("k",), build) is first
+    assert len(builds) == 1
+    second = Q._session_memo(b, ("k",), build)
+    assert second is not first and len(builds) == 2
+    assert all(k[0] == "memo-test-b" for k in Q._MEMO)
+    assert Q._session_memo(a, ("k",), build) is not first
+    assert len(builds) == 3
