@@ -82,7 +82,7 @@ def main() -> None:
                 F.element_at("other_ids", 1).alias("fid"),
                 "geom",
             ).write.mode("overwrite").parquet(f"{out_dir}_quarantine")
-        out = border_gap_merge(both, cfg, piece_res=[res])
+        out = border_gap_merge(both, cfg)
     elif cmd == "query":
         name = sys.argv[4]
         out = Q.queries()[name](spark, sf_dir)

@@ -134,8 +134,6 @@ def resolve_overlap_gap_run(
         quarantined = both.where(F.col("owner") == QUARANTINE_OWNER)
         healed = None
         if heal:
-            # the balanced frontier may mix resolutions: piece_res=None
-            # derives them from the pieces
             healed = border_gap_merge(both, cfg)
 
     per_owner = pieces.groupBy("owner").agg(

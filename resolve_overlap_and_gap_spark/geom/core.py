@@ -32,9 +32,28 @@ def polygon_area(rings: list[np.ndarray]) -> float:
     return a
 
 
-def line_length(c: np.ndarray) -> float:
-    d = np.diff(c, axis=0)
-    return float(np.sqrt((d * d).sum(axis=1)).sum())
+def axis_edges(rings) -> np.ndarray:
+    """(n,4) int64 (axis, coord, lo, hi) per positive-length axis-parallel
+    edge of closed integer rings (the last vertex joins the first): axis 0
+    = vertical edge on the line x=coord spanning y in [lo, hi]; axis 1 =
+    horizontal edge on y=coord spanning x.  The one scan behind every
+    cell-border interval (kill intervals, the kill test, polygonize
+    portals); rows come in ring-edge order."""
+    rs = [np.asarray(r, np.int64) for r in rings if len(r) >= 2]
+    if not rs:
+        return np.empty((0, 4), np.int64)
+    a = np.vstack(rs)
+    b = np.vstack([np.roll(r, -1, axis=0) for r in rs])
+    vert = (a[:, 0] == b[:, 0]) & (a[:, 1] != b[:, 1])
+    horiz = (a[:, 1] == b[:, 1]) & (a[:, 0] != b[:, 0])
+    keep = vert | horiz
+    a, b = a[keep], b[keep]
+    axis = horiz[keep].astype(np.int64)
+    i = np.arange(len(a))
+    along = 1 - axis
+    return np.column_stack([axis, a[i, axis],
+                            np.minimum(a[i, along], b[i, along]),
+                            np.maximum(a[i, along], b[i, along])])
 
 
 def bounds(c: np.ndarray) -> tuple[float, float, float, float]:

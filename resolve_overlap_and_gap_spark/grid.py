@@ -27,6 +27,7 @@ from resolve_overlap_and_gap_spark.geom.core import snap_to_grid_int
 
 MAX_RES = 28          # 2*28 = 56 morton bits
 RES_SHIFT = 58        # resolution stored in bits 58..62
+_ZMASK = (1 << RES_SHIFT) - 1   # the Morton bits below the resolution
 
 # Morton bit-spread magic constants (64-bit, spread 32 -> 64 even bits).
 _SPREAD = (
@@ -77,22 +78,22 @@ def cell_res_np(cell: np.ndarray) -> np.ndarray:
 
 
 def cell_to_xy_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    z = np.asarray(cell, dtype=np.int64) & ((np.int64(1) << RES_SHIFT) - 1)
+    z = np.asarray(cell, dtype=np.int64) & _ZMASK
     return _unspread_np(z), _unspread_np(z >> 1)
 
 
 def parent_np(cell: np.ndarray, steps: int = 1) -> np.ndarray:
+    """Ancestor ``steps`` levels up (numpy twin of ancestor_col)."""
     cell = np.asarray(cell, dtype=np.int64)
     res = cell_res_np(cell)
-    z = cell & ((np.int64(1) << RES_SHIFT) - 1)
-    return ((res - steps) << RES_SHIFT) | (z >> (2 * steps))
+    return ((res - steps) << RES_SHIFT) | ((cell & _ZMASK) >> (2 * steps))
 
 
 def children_np(cell: np.int64) -> np.ndarray:
     """4 child cells (quadtree split — the reference's quadrant recursion,
     find_overlap_and_gap-pre.sql:216-236)."""
     res = int(cell) >> RES_SHIFT & 0x1F
-    z = int(cell) & ((1 << RES_SHIFT) - 1)
+    z = int(cell) & _ZMASK
     base = ((res + 1) << RES_SHIFT) | (z << 2)
     return np.array([base, base | 1, base | 2, base | 3], dtype=np.int64)
 
@@ -116,6 +117,12 @@ def cell_box_units(cell: int, g: float) -> tuple[int, int, int, int]:
     return tuple(b.tolist())
 
 
+def box_ring(box: tuple[int, int, int, int]) -> np.ndarray:
+    """The box as a CCW int ring (4 vertices, not closed)."""
+    x0, y0, x1, y1 = box
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], np.int64)
+
+
 def touches_box(ring: np.ndarray, box: tuple[int, int, int, int]) -> bool:
     """True iff a vertex of the int ring lies on one of the box's lines.
     For a face inside its box the shell decides: a hole vertex on a box
@@ -123,6 +130,14 @@ def touches_box(ring: np.ndarray, box: tuple[int, int, int, int]) -> bool:
     x0, y0, x1, y1 = box
     return bool((ring[:, 0] == x0).any() or (ring[:, 0] == x1).any()
                 or (ring[:, 1] == y0).any() or (ring[:, 1] == y1).any())
+
+
+def on_box_lines(iv: np.ndarray, box: tuple[int, int, int, int]) -> np.ndarray:
+    """Mask of the (axis, coord, lo, hi) rows (core.axis_edges) lying on
+    one of the box's 4 lines."""
+    x0, y0, x1, y1 = box
+    c = iv[:, 1]
+    return np.where(iv[:, 0] == 0, (c == x0) | (c == x1), (c == y0) | (c == y1))
 
 
 def neighbors_np(cell: np.int64, ring: int = 1) -> np.ndarray:
@@ -177,6 +192,22 @@ def cell_from_xy_col(ix: Column, iy: Column, res: int) -> Column:
     """Morton id from integer cell coords — pure JVM built-ins, codegen'd."""
     z = _spread_col(ix).bitwiseOR(F.shiftleft(_spread_col(iy), 1))
     return F.lit(res << RES_SHIFT).cast("long").bitwiseOR(z)
+
+
+def res_col(cell: Column) -> Column:
+    """Resolution of each cell id (cell_res_np's twin)."""
+    return F.shiftrightunsigned(cell, RES_SHIFT).bitwiseAND(F.lit(0x1F))
+
+
+def ancestor_col(cell: Column, target: int | Column) -> Column:
+    """Ancestor of each cell at resolution ``target`` (an int, or a column
+    of them; a cell already at ``target`` maps to itself) — parent_np's
+    twin, one expression whose shift amount is itself a column, so cells
+    of mixed resolutions re-key without a per-resolution filter."""
+    t = F.lit(target) if isinstance(target, int) else target
+    z = F.call_function("shiftright", cell.bitwiseAND(F.lit(_ZMASK)),
+                        (res_col(cell) - t) * 2)
+    return F.shiftleft(t.cast("long"), RES_SHIFT).bitwiseOR(z)
 
 
 def cell_id_col(lon: Column, lat: Column, res: int) -> Column:

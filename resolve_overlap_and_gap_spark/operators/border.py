@@ -45,9 +45,9 @@ dropped after the level's test (everything that could touch them has been
 tested; union never adds new boundary), so kill mass shrinks geometrically
 just like live mass.
 
-Adjacency is computed per gap in an Arrow-batched kernel over candidate
-neighbors found by a covering-cell equi-join — one shuffle, no driver-side
-geometry.
+Adjacency comes from one cell-tagged overlay_cells pass per hash bucket of
+gaps (assign_slivers) over candidate neighbors found by a covering-cell
+equi-join — one shuffle, no driver-side geometry.
 """
 
 from __future__ import annotations
@@ -61,7 +61,8 @@ from pyspark.sql import types as T
 from resolve_overlap_and_gap_spark import grid
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay
+from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay_cells
+from resolve_overlap_and_gap_spark.geom.core import axis_edges
 from resolve_overlap_and_gap_spark.operators.dissolve import union_parts
 from resolve_overlap_and_gap_spark.operators.overlap_gap import (
     default_cell_buckets,
@@ -82,8 +83,6 @@ MERGE_SCHEMA = T.StructType([
     T.StructField("gap_area", T.DoubleType()),
     T.StructField("geom", T.BinaryType()),       # WKB, or packed intervals
 ])
-
-_ZMASK = (1 << grid.RES_SHIFT) - 1
 
 # border-gap inputs at or under this many rows reassemble at the root in a
 # single round (the multi-level pre-merge only pays off when the per-round
@@ -112,28 +111,9 @@ def unpack_intervals(b: bytes) -> np.ndarray:
 
 def ring_border_intervals(rings, cx0: int, cy0: int, cx1: int, cy1: int):
     """Positive-length contacts of closed integer rings with the 4 border
-    lines of the box -> list of (axis, coord, lo, hi)."""
-    out = []
-    for r in rings:
-        a = np.asarray(r, np.int64)
-        if len(a) < 2:
-            continue
-        b = np.roll(a, -1, axis=0)
-        vert = (a[:, 0] == b[:, 0]) & (a[:, 1] != b[:, 1])
-        for coord in (cx0, cx1):
-            m = vert & (a[:, 0] == coord)
-            if m.any():
-                lo = np.minimum(a[m, 1], b[m, 1])
-                hi = np.maximum(a[m, 1], b[m, 1])
-                out.extend((0, int(coord), int(l), int(h)) for l, h in zip(lo, hi))
-        horiz = (a[:, 1] == b[:, 1]) & (a[:, 0] != b[:, 0])
-        for coord in (cy0, cy1):
-            m = horiz & (a[:, 1] == coord)
-            if m.any():
-                lo = np.minimum(a[m, 0], b[m, 0])
-                hi = np.maximum(a[m, 0], b[m, 0])
-                out.extend((1, int(coord), int(l), int(h)) for l, h in zip(lo, hi))
-    return out
+    lines of the box -> list of [axis, coord, lo, hi]."""
+    e = axis_edges(rings)
+    return e[grid.on_box_lines(e, (cx0, cy0, cx1, cy1))].tolist()
 
 
 def merge_intervals(iv: np.ndarray) -> np.ndarray:
@@ -159,39 +139,18 @@ def merge_intervals(iv: np.ndarray) -> np.ndarray:
     return np.asarray(out, np.int64)
 
 
-def _kills_index(iv: np.ndarray) -> dict:
-    idx: dict[tuple[int, int], list[tuple[int, int]]] = {}
-    for ax, co, lo, hi in np.asarray(iv, np.int64).reshape(-1, 4):
-        idx.setdefault((int(ax), int(co)), []).append((int(lo), int(hi)))
-    return idx
-
-
-def _face_touches_kill(f: Face, idx: dict) -> bool:
+def _face_touches_kill(f: Face, kiv: np.ndarray) -> bool:
     """True iff any boundary edge of f overlaps a kill interval with
     POSITIVE length (point contact does not connect: the arrangement and
     GEOS both keep point-touching parts separate)."""
-    if not idx:
+    if not len(kiv):
         return False
-    for ring in f.rings:
-        a = np.asarray(ring, np.int64)
-        if len(a) < 2:
-            continue
-        b = np.roll(a, -1, axis=0)
-        vert = (a[:, 0] == b[:, 0]) & (a[:, 1] != b[:, 1])
-        for i in np.flatnonzero(vert):
-            ivs = idx.get((0, int(a[i, 0])))
-            if ivs:
-                lo, hi = sorted((int(a[i, 1]), int(b[i, 1])))
-                if any(max(lo, l) < min(hi, h) for l, h in ivs):
-                    return True
-        horiz = (a[:, 1] == b[:, 1]) & (a[:, 0] != b[:, 0])
-        for i in np.flatnonzero(horiz):
-            ivs = idx.get((1, int(a[i, 1])))
-            if ivs:
-                lo, hi = sorted((int(a[i, 0]), int(b[i, 0])))
-                if any(max(lo, l) < min(hi, h) for l, h in ivs):
-                    return True
-    return False
+    e = axis_edges(f.rings)
+    e = e[np.isin(e[:, 1], kiv[:, 1])][:, None, :]
+    k = kiv[None, :, :]
+    return bool(((e[..., 0] == k[..., 0]) & (e[..., 1] == k[..., 1])
+                 & (np.maximum(e[..., 2], k[..., 2])
+                    < np.minimum(e[..., 3], k[..., 3]))).any())
 
 
 def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
@@ -237,14 +196,12 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
     faces_of = union_parts(parts, np.asarray(part_cell, np.int64))
     for ci, (cell, kiv) in enumerate(cells):
         box = grid.cell_box_units(cell, g)
-        cx0, cy0, cx1, cy1 = box
-        idx = _kills_index(kiv)
-        out_kill: list[tuple[int, int, int, int]] = []
+        out_kill: list = []
         faces = [f for f in faces_of.get(ci, []) if f.area2 > 0]
         measure, min_measure = face_measure_areas(faces, g, cfg)
         for f, m in zip(faces, measure):
             touches = grid.touches_box(f.shell, box)
-            if m >= min_measure or _face_touches_kill(f, idx):
+            if m >= min_measure or _face_touches_kill(f, kiv):
                 if touches and not is_root:
                     out_kill.extend(ring_border_intervals(f.rings, *box))
                 continue
@@ -253,10 +210,7 @@ def _merge_to_parent_kernel(pdf: pd.DataFrame, cfg: EngineConfig,
             rows.append((int(cell), kind, area,
                          wkb.dump_grid_multipolygon([f.rings], g)))
         if not is_root:
-            for ax, co, lo, hi in kiv:
-                if ((ax == 0 and co in (cx0, cx1))
-                        or (ax == 1 and co in (cy0, cy1))):
-                    out_kill.append((int(ax), int(co), int(lo), int(hi)))
+            out_kill.extend(kiv[grid.on_box_lines(kiv, box)].tolist())
             if out_kill:
                 rows.append((int(cell), "kill", 0.0,
                              pack_intervals(merge_intervals(
@@ -281,7 +235,7 @@ def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
     default_cell_buckets, the rule of every kernel stage."""
     if n_buckets is None:
         n_buckets = default_cell_buckets(border_gaps)
-    res_col = F.shiftrightunsigned(F.col("cell_id"), grid.RES_SHIFT).bitwiseAND(F.lit(0x1F))
+    res_col = grid.res_col(F.col("cell_id"))
     empty = border_gaps.sparkSession.createDataFrame([], T.StructType([
         T.StructField("gap_area", T.DoubleType()),
         T.StructField("geom", T.BinaryType()),
@@ -308,18 +262,8 @@ def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
     while True:
         target = max(0, min(lmax - level_jump, lmin))
         is_root = target == 0
-        # re-key each piece to its ancestor at `target` (literal shift per
-        # resolution present — a handful of filters over checkpointed rows)
-        parts = [pending.where(res_col == target)]
-        for r in range(target + 1, lmax + 1):
-            anc = F.lit(target << grid.RES_SHIFT).cast("long").bitwiseOR(
-                F.shiftright(F.col("cell_id").bitwiseAND(F.lit(_ZMASK)),
-                             2 * (r - target))
-            )
-            parts.append(pending.where(res_col == r).withColumn("cell_id", anc))
-        cur = parts[0]
-        for p in parts[1:]:
-            cur = cur.unionByName(p)
+        # re-key each piece to its ancestor at `target`
+        cur = pending.withColumn("cell_id", grid.ancestor_col(F.col("cell_id"), target))
 
         def _make_kernel(root: bool):
             def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -347,9 +291,61 @@ def reassemble_border_gaps(border_gaps: DataFrame, cfg: EngineConfig,
     return out
 
 
+def assign_slivers(pdf: pd.DataFrame, g: float) -> pd.DataFrame:
+    """Sliver-assignment kernel over one hash bucket of candidate rows
+    (gap_id, gap_area, gap_geom, owner, piece_geom): each gap merges into
+    the owner with the LONGEST shared border (the ST_RemEdgeNewFace rule;
+    ties go to the smaller owner id) -> (owner, gap_area, geom).  Every gap
+    of the bucket is one cell-tagged item of a single overlay_cells pass;
+    a gap with no positive-length contact gets no row."""
+    items, gaps = [], []
+    for gap_id, sub in pdf.groupby("gap_id", sort=True):
+        gap_geom = sub["gap_geom"].iloc[0]
+        polys = [(-2, rings) for rings in wkb.load_grid_polygons(gap_geom, g)]
+        # bbox prefilter (expanded by 1 grid unit): a piece can share
+        # border with the sliver only if their boxes touch — cuts the
+        # overlay from all cell-mates (~hundreds) to actual neighbors
+        gx0 = min(r[:, 0].min() for _, rings in polys for r in rings) - 1
+        gy0 = min(r[:, 1].min() for _, rings in polys for r in rings) - 1
+        gx1 = max(r[:, 0].max() for _, rings in polys for r in rings) + 1
+        gy1 = max(r[:, 1].max() for _, rings in polys for r in rings) + 1
+        owners = {}
+        for owner, pg in zip(sub["owner"], sub["piece_geom"]):
+            for rings in wkb.load_grid_polygons(pg, g):
+                s = rings[0]
+                if (s[:, 0].min() > gx1 or s[:, 0].max() < gx0
+                        or s[:, 1].min() > gy1 or s[:, 1].max() < gy0):
+                    continue
+                pid = 1000 + len(owners)
+                owners[pid] = int(owner)
+                polys.append((pid, rings))
+        items.append((int(gap_id), polys))
+        gaps.append((int(gap_id), owners, float(sub["gap_area"].iloc[0]),
+                     bytes(gap_geom)))
+    faces_of = overlay_cells(items, with_adjacency=True)
+    out = []
+    for gap_id, owners, gap_area, gap_geom in gaps:
+        faces, adj = faces_of[gap_id]
+        # face indices covered by the gap vs by pieces
+        gap_faces = {i for i, f in enumerate(faces) if -2 in f.cover}
+        shared: dict[int, float] = {}
+        for (a, b), L in adj.items():
+            if a < 0 or b < 0:
+                continue
+            fa_gap, fb_gap = a in gap_faces, b in gap_faces
+            if fa_gap == fb_gap:
+                continue
+            for p in faces[b if fa_gap else a].cover:
+                if p >= 1000:
+                    shared[owners[p]] = shared.get(owners[p], 0.0) + L
+        if shared:
+            best_owner = min(shared, key=lambda o: (-shared[o], o))
+            out.append((best_owner, gap_area, gap_geom))
+    return pd.DataFrame(out, columns=["owner", "gap_area", "geom"])
+
+
 def border_gap_merge(resolved: DataFrame, cfg: EngineConfig,
-                     dissolve_geom: bool = True,
-                     piece_res: list[int] | None = None) -> DataFrame:
+                     dissolve_geom: bool = True) -> DataFrame:
     """-> (owner, area, n_parts, geom) — the final healed layer.
 
     resolved: the output of resolve, resolve_balanced or resolve_cells
@@ -361,10 +357,6 @@ def border_gap_merge(resolved: DataFrame, cfg: EngineConfig,
     dissolve_geom: forwarded to the final owner dissolve as with_geom —
     callers that do not re-emit the healed geometry (resolve_healed emits
     owner/area/n_parts only) pass False to skip the WKB dumps (geom null).
-    piece_res: the distinct cell resolutions of the pieces when the caller
-    knows them (fixed-res resolve: [res]) — skips a distinct+collect over
-    the pieces; None derives them from the data (balanced resolve emits
-    mixed resolutions).
     """
     from resolve_overlap_and_gap_spark.operators.dissolve import dissolve
     from resolve_overlap_and_gap_spark.operators.resolve import GAP_OWNER, KILL_OWNER
@@ -402,31 +394,25 @@ def border_gap_merge(resolved: DataFrame, cfg: EngineConfig,
     # 2. reassemble across cells: distributed iterated parent-cell dissolve.
     #    (already materialized: built from the loop's checkpointed outputs)
     slivers = reassemble_border_gaps(border_gaps, cfg)
-    no_slivers = slivers.isEmpty()
-    if piece_res is None and not no_slivers:
-        res_col = F.shiftrightunsigned(
-            F.col("cell_id"), grid.RES_SHIFT).bitwiseAND(F.lit(0x1F))
-        piece_res = sorted(int(r.r) for r in
-                           pieces.select(res_col.alias("r")).distinct().collect())
-    if no_slivers or not piece_res:
-        # no sliver, or no piece a sliver could join: only the dissolve left
+    if slivers.isEmpty():
+        return dissolve_owners(pieces.select("owner", "geom"))
+    # pieces may sit at MIXED resolutions (balanced-grid resolve): key the
+    # sliver at every resolution present so the equi-join below matches
+    # every piece (the res dim is a handful of values)
+    resolutions = sorted(int(r.r) for r in pieces.select(
+        grid.res_col(F.col("cell_id")).alias("r")).distinct().collect())
+    if not resolutions:
+        # no piece a sliver could join: only the dissolve left
         return dissolve_owners(pieces.select("owner", "geom"))
 
     # 3. slivers join candidate pieces sharing a covering cell with the
-    #    sliver bbox (J1); adjacency per sliver via overlay; choose
-    #    longest-shared-border piece (ST_RemEdgeNewFace rule).
-    #    Pieces may sit at MIXED resolutions (balanced-grid resolve): key
-    #    the sliver at every resolution present so the equi-join matches
-    #    every piece (the res dim is a handful of values).
-    sl_df = slivers.select(
-        F.monotonically_increasing_id().alias("gap_id"),
-        "gap_area",
-        F.col("geom").alias("gap_geom"),
+    #    sliver bbox (J1); one assign_slivers kernel per hash bucket of gaps
+    #    picks each gap's longest-shared-border owner.
+    sl_in = slivers.select(
+        F.monotonically_increasing_id().alias("fid"), "gap_area", "geom",
     ).localCheckpoint()
-    sl_in = (sl_df.withColumnRenamed("gap_geom", "geom")
-             .withColumnRenamed("gap_id", "fid"))
     sl_cells = None
-    for r in piece_res:
+    for r in resolutions:
         part = with_cells(sl_in, r).select(
             F.col("fid").alias("gap_id"), F.col("gap_area"),
             F.col("geom").alias("gap_geom"), F.col("cell_id"))
@@ -434,51 +420,12 @@ def border_gap_merge(resolved: DataFrame, cfg: EngineConfig,
     cand = sl_cells.join(
         pieces.select("cell_id", "owner", F.col("geom").alias("piece_geom")), "cell_id"
     )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for gap_id, sub in pdf.groupby("gap_id", sort=True):
-            gap_geom = sub["gap_geom"].iloc[0]
-            polys = [(-2, rings) for rings in wkb.load_grid_polygons(gap_geom, g)]
-            # bbox prefilter (expanded by 1 grid unit): a piece can share
-            # border with the sliver only if their boxes touch — cuts the
-            # overlay from all cell-mates (~hundreds) to actual neighbors
-            gx0 = min(r[:, 0].min() for _, rings in polys for r in rings) - 1
-            gy0 = min(r[:, 1].min() for _, rings in polys for r in rings) - 1
-            gx1 = max(r[:, 0].max() for _, rings in polys for r in rings) + 1
-            gy1 = max(r[:, 1].max() for _, rings in polys for r in rings) + 1
-            owners = {}
-            k = 0
-            for owner, pg in zip(sub["owner"], sub["piece_geom"]):
-                for rings in wkb.load_grid_polygons(pg, g):
-                    s = rings[0]
-                    if (s[:, 0].min() > gx1 or s[:, 0].max() < gx0
-                            or s[:, 1].min() > gy1 or s[:, 1].max() < gy0):
-                        continue
-                    polys.append((1000 + k, rings))
-                    owners[1000 + k] = int(owner)
-                    k += 1
-            faces, adj = overlay(polys, with_adjacency=True)
-            # face indices covered by the gap vs by pieces
-            gap_faces = {i for i, f in enumerate(faces) if -2 in f.cover}
-            shared: dict[int, float] = {}
-            for (a, b), L in adj.items():
-                if a < 0 or b < 0:
-                    continue
-                fa_gap, fb_gap = a in gap_faces, b in gap_faces
-                if fa_gap == fb_gap:
-                    continue
-                piece_face = b if fa_gap else a
-                for p in faces[piece_face].cover:
-                    if p >= 1000:
-                        shared[owners[p]] = shared.get(owners[p], 0.0) + L
-            if shared:
-                best_owner = min(shared, key=lambda o: (-shared[o], o))
-                out.append((best_owner, float(sub["gap_area"].iloc[0]),
-                            bytes(gap_geom)))
-        return pd.DataFrame(out, columns=["owner", "gap_area", "geom"])
-
-    assigned = cand.groupBy("gap_id").applyInPandas(kernel, ASSIGN_SCHEMA)
+    n_buckets = default_cell_buckets(cand)
+    assigned = (
+        cand.withColumn("bucket", F.pmod(F.hash("gap_id"), F.lit(n_buckets)))
+        .groupBy("bucket").applyInPandas(lambda pdf: assign_slivers(pdf, g),
+                                         ASSIGN_SCHEMA)
+    )
 
     # 4. final healed layer: dissolve pieces + absorbed slivers per owner
     #    (the union removes internal cell-border edges AND welds the

@@ -187,16 +187,13 @@ def content_balanced_cells(
         for r in hist.where(F.col("n_rows") > max_rows_in_each_cell)
         .groupBy("res").agg(F.count("*").alias("n")).collect()
     })
-    zmask = (1 << grid.RES_SHIFT) - 1
     frontier: list[DataFrame] = []
     hot_by_res: dict[int, DataFrame] = {}
     prev_hot: DataFrame | None = None
     for r in levels:
         cur = hist.where(F.col("res") == r)
         if prev_hot is not None:
-            parent_id = F.lit((r - 1) << grid.RES_SHIFT).cast("long").bitwiseOR(
-                F.shiftright(F.col("cell_id").bitwiseAND(F.lit(zmask)), 2))
-            cur = (cur.withColumn("_parent", parent_id)
+            cur = (cur.withColumn("_parent", grid.ancestor_col(F.col("cell_id"), r - 1))
                    .join(prev_hot.withColumnRenamed("cell_id", "_parent"),
                          "_parent", "left_semi")
                    .drop("_parent"))

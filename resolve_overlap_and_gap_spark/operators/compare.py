@@ -48,8 +48,7 @@ def compare_before_after(layer: DataFrame, cfg: EngineConfig, res: int) -> DataF
 
     layer = layer.localCheckpoint()  # feeds detect twice + resolve
     before = _metrics(detect_all(layer, cfg, res=res), "before", cfg.min_area_to_keep)
-    healed = border_gap_merge(resolve(layer, cfg, res=res, emit_border_gaps=True), cfg,
-                              piece_res=[res])
+    healed = border_gap_merge(resolve(layer, cfg, res=res, emit_border_gaps=True), cfg)
     clean = healed.select(F.col("owner").alias("fid"), "geom")
     after = _metrics(detect_all(clean, cfg, res=res), "after", cfg.min_area_to_keep)
     return before.unionByName(after)

@@ -23,7 +23,8 @@ from pyspark.sql import types as T
 
 from resolve_overlap_and_gap_spark import grid as G
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.geom.core import snap_to_grid_int
+from resolve_overlap_and_gap_spark.geom.arrangement import Face, overlay_cells
+from resolve_overlap_and_gap_spark.geom.core import axis_edges, snap_to_grid_int
 
 POLYGONIZE_SCHEMA = T.StructType([
     T.StructField("face_id", T.LongType()),
@@ -104,14 +105,10 @@ def _pid64(cell: int, k: int) -> int:
     return int.from_bytes(h[:8], "big") & 0x7FFFFFFFFFFFFFFF
 
 
-def _piece_rows_for_cell(cell: int, sub: pd.DataFrame, g: float,
-                         region: tuple[int, int, int, int]) -> list[tuple]:
-    """Overlay one cell's clipped lines against the cell box; emit piece
-    rows with free border intervals and rim flags."""
-    from resolve_overlap_and_gap_spark.geom.arrangement import overlay
-    from resolve_overlap_and_gap_spark.operators.overlap_gap import UNIVERSE
-
-    cx0, cy0, cx1, cy1 = G.cell_box_units(cell, g)
+def _cell_cut(box: tuple[int, int, int, int], sub: pd.DataFrame, g: float):
+    """Step 1 of a cell's pieces: clip its lines to the cell box ->
+    (cut lines, covered border intervals keyed by (axis, coord))."""
+    cx0, cy0, cx1, cy1 = box
     cut: list[tuple[int, np.ndarray]] = []
     cover: dict[tuple[int, int], list[tuple[int, int]]] = {}
     order = np.argsort(sub["lid"].to_numpy(), kind="stable")
@@ -134,43 +131,28 @@ def _piece_rows_for_cell(cell: int, sub: pd.DataFrame, g: float,
                 cover.setdefault((0, ax), []).append((min(ay, by), max(ay, by)))
             elif ay == by and ay in (cy0, cy1):
                 cover.setdefault((1, ay), []).append((min(ax, bx), max(ax, bx)))
-    box = np.array([[cx0, cy0], [cx1, cy0], [cx1, cy1], [cx0, cy1]], np.int64)
-    faces = overlay([(UNIVERSE, [box])], cut_lines=cut)
-    rx0, ry0, rx1, ry1 = region
+    return cut, cover
 
-    def covered(key: tuple[int, int], lo: int, hi: int) -> bool:
+
+def _piece_rows(cell: int, box: tuple[int, int, int, int], faces: list,
+                cover: dict, g: float,
+                region: tuple[int, int, int, int]) -> list[tuple]:
+    """Step 2: piece rows of one cell's faces (face k is piece
+    _pid64(cell, k)) with their free border intervals and rim flags."""
+
+    def covered(axis: int, coord: int, lo: int, hi: int) -> bool:
         # overlay nodes walks at cover endpoints: each boundary pair is
         # fully covered or disjoint — test the (doubled) midpoint
         m2 = lo + hi
-        for a, b in cover.get(key, ()):
-            if 2 * a <= m2 <= 2 * b:
-                return True
-        return False
+        return any(2 * a <= m2 <= 2 * b for a, b in cover.get((axis, coord), ()))
 
     rows = []
     for k, f in enumerate(faces):
-        ivals: list[list[int]] = []
-        rim = False
-        for ring in f.rings:
-            n = len(ring)
-            for j in range(n):
-                ux, uy = int(ring[j, 0]), int(ring[j, 1])
-                vx, vy = int(ring[(j + 1) % n, 0]), int(ring[(j + 1) % n, 1])
-                if ux == vx and ux in (cx0, cx1):
-                    key, lo, hi = (0, ux), min(uy, vy), max(uy, vy)
-                elif uy == vy and uy in (cy0, cy1):
-                    key, lo, hi = (1, uy), min(ux, vx), max(ux, vx)
-                else:
-                    continue
-                if lo == hi:
-                    continue
-                if (key[0] == 0 and key[1] in (rx0, rx1)) or \
-                   (key[0] == 1 and key[1] in (ry0, ry1)):
-                    rim = True
-                    continue  # region rim is never a portal
-                if not covered(key, lo, hi):
-                    ivals.append([key[0], key[1], lo, hi])
-        rows.append((cell, _pid64(cell, k), int(f.area2), rim,
+        e = axis_edges(f.rings)
+        e = e[G.on_box_lines(e, box)]
+        rim = G.on_box_lines(e, region)   # the region rim is never a portal
+        ivals = [iv for iv in e[~rim].tolist() if not covered(*iv)]
+        rows.append((cell, _pid64(cell, k), int(f.area2), bool(rim.any()),
                      sorted(f.lines), wkb.dump_grid_multipolygon([f.rings], g),
                      ivals))
     return rows
@@ -185,12 +167,14 @@ def polygonize_lines(lines: DataFrame, grid_size: float, res: int = 8,
     island's interior is its own face and is excluded from the face
     around it.  face_id orders faces by (area, wkb) — the one global
     window, over output faces only.  Plan shape: one covering-cell
-    shuffle + per-cell Arrow kernels for pieces, ceil(res/4) hierarchical
-    union-find rounds over free border intervals for components, one
-    dissolve shuffle for final faces.  The only driver-side data are the
-    layer's 4 bbox doubles.  n_buckets: hash buckets per kernel stage;
-    None is default_cell_buckets, the rule of every kernel stage."""
+    shuffle + one cell-tagged overlay per bucket for pieces, ceil(res/4)
+    hierarchical union-find rounds over free border intervals for
+    components, one dissolve shuffle for final faces.  The only
+    driver-side data are the layer's 4 bbox doubles.  n_buckets: hash
+    buckets per kernel stage; None is default_cell_buckets, the rule of
+    every kernel stage."""
     from resolve_overlap_and_gap_spark.operators.overlap_gap import (
+        UNIVERSE,
         default_cell_buckets,
         wkb_bounds,
         with_cells,
@@ -231,9 +215,16 @@ def polygonize_lines(lines: DataFrame, grid_size: float, res: int = 8,
     lcells = with_cells(slim, res).select("cell_id", F.col("fid").alias("lid"), "geom")
 
     def line_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: list[tuple] = []
+        cells = []
         for cid, sub in pdf.groupby("cell_id", sort=True):
-            rows.extend(_piece_rows_for_cell(int(cid), sub, g, region))
+            box = G.cell_box_units(int(cid), g)
+            cells.append((int(cid), box, *_cell_cut(box, sub, g)))
+        # one cell-tagged overlay of (cell box, clipped lines) per bucket
+        faces_of = overlay_cells([(cell, [(UNIVERSE, [G.box_ring(box)])], None, cut)
+                                  for cell, box, cut, _ in cells])
+        rows: list[tuple] = []
+        for cell, box, _, cover in cells:
+            rows.extend(_piece_rows(cell, box, faces_of[cell], cover, g, region))
         return pd.DataFrame(rows, columns=[f.name for f in PIECES_SCHEMA])
 
     line_pieces = (
@@ -246,21 +237,9 @@ def polygonize_lines(lines: DataFrame, grid_size: float, res: int = 8,
             rows = []
             for cid in pdf["cell_id"]:
                 cell = int(cid)
-                cx0, cy0, cx1, cy1 = G.cell_box_units(cell, g)
-                rx0, ry0, rx1, ry1 = region
-                ivals, rim = [], False
-                for key, lo, hi in (((0, cx0), cy0, cy1), ((0, cx1), cy0, cy1),
-                                    ((1, cy0), cx0, cx1), ((1, cy1), cx0, cx1)):
-                    if (key[0] == 0 and key[1] in (rx0, rx1)) or \
-                       (key[0] == 1 and key[1] in (ry0, ry1)):
-                        rim = True
-                        continue
-                    ivals.append([key[0], key[1], lo, hi])
-                box = np.array([[cx0, cy0], [cx1, cy0], [cx1, cy1], [cx0, cy1]],
-                               np.int64)
-                rows.append((cell, _pid64(cell, 0),
-                             2 * (cx1 - cx0) * (cy1 - cy0), rim, [],
-                             wkb.dump_grid_multipolygon([[box]], g), ivals))
+                x0, y0, x1, y1 = box = G.cell_box_units(cell, g)
+                whole = Face(shell=G.box_ring(box), area2=2 * (x1 - x0) * (y1 - y0))
+                rows.extend(_piece_rows(cell, box, [whole], {}, g, region))
             yield pd.DataFrame(rows, columns=[f.name for f in PIECES_SCHEMA])
 
     empty_cells = region_cells.join(
@@ -345,20 +324,11 @@ def polygonize_lines(lines: DataFrame, grid_size: float, res: int = 8,
         T.StructField("b", T.LongType()),
         T.StructField("ivals", T.ArrayType(T.ArrayType(T.LongType()))),
     ])
-    _ZMASK = (1 << G.RES_SHIFT) - 1
     cur = pieces.select(F.col("piece").alias("node"), "cell_id", "ivals")
-    cur_res = res
     level_maps: list[DataFrame] = []
     for target in targets:
-        if cur_res == target:
-            gcell = F.col("cell_id")
-        else:
-            gcell = F.lit(target << G.RES_SHIFT).cast("long").bitwiseOR(
-                F.shiftright(F.col("cell_id").bitwiseAND(F.lit(_ZMASK)),
-                             2 * (cur_res - target))
-            )
         out_cc = (
-            cur.withColumn("gcell", gcell)
+            cur.withColumn("gcell", G.ancestor_col(F.col("cell_id"), target))
             .withColumn("bucket", F.pmod(F.hash("gcell"), F.lit(n_buckets)))
             .groupBy("bucket").applyInPandas(
                 lambda pdf: cc_kernel(pdf), CC_SCHEMA)
@@ -368,7 +338,6 @@ def polygonize_lines(lines: DataFrame, grid_size: float, res: int = 8,
         cur = out_cc.where(F.col("kind") == "r").select(
             F.col("a").alias("node"), F.col("b").alias("cell_id"), "ivals"
         )
-        cur_res = target
 
     # compose the per-level maps: piece -> final component label
     labels = level_maps[0].select(F.col("member").alias("piece"),
@@ -421,7 +390,6 @@ def resolve_with_lines(polygons: DataFrame, lines: DataFrame, cfg, res: int = 8,
     arrangement as CUT LINES — they split faces without affecting coverage —
     and every output face reports the line ids on its border (J7,
     lineage-carried). One extra covering-cell join for the line layer."""
-    from resolve_overlap_and_gap_spark.geom.arrangement import overlay_cells
     from resolve_overlap_and_gap_spark.operators.overlap_gap import (
         UNIVERSE, _cell_prep, default_cell_buckets, with_cells,
     )

@@ -146,10 +146,7 @@ def _cell_prep(cell: int, pdf: pd.DataFrame, g: float):
             clipped = _clip_to_cell(rings, *box)
             if clipped:
                 polys.append((int(fid), clipped))
-    cxmin, cymin, cxmax, cymax = box
-    ring = np.array([[cxmin, cymin], [cxmax, cymin], [cxmax, cymax], [cxmin, cymax]],
-                    dtype=np.int64)
-    polys.append((UNIVERSE, [ring]))
+    polys.append((UNIVERSE, [grid.box_ring(box)]))
     return box, polys
 
 
@@ -302,7 +299,6 @@ def assign_balanced_cells(features: DataFrame, cfg: EngineConfig,
         cfg.grid.max_rows_in_each_cell, lon="cx", lat="cy", with_hot=True,
     )
 
-    zmask = (1 << grid.RES_SHIFT) - 1
     parts: list[DataFrame] = []
     r = cfg.grid.base_resolution
     cover = _cover_at(b, r)
@@ -315,11 +311,8 @@ def assign_balanced_cells(features: DataFrame, cfg: EngineConfig,
         desc = (cover.join(hot, "cell_id", "left_semi")
                 .dropDuplicates(["fid"]).drop("cell_id"))
         child_cover = _cover_at(desc, r + 1)
-        parent_id = F.lit(r << grid.RES_SHIFT).cast("long").bitwiseOR(
-            F.shiftright(F.col("cell_id").bitwiseAND(F.lit(zmask)), 2)
-        )
         cover = (
-            child_cover.withColumn("_parent", parent_id)
+            child_cover.withColumn("_parent", grid.ancestor_col(F.col("cell_id"), r))
             .join(hot.withColumnRenamed("cell_id", "_parent"),
                   "_parent", "left_semi")
             .drop("_parent")

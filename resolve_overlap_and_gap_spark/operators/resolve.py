@@ -220,6 +220,15 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
 
     cols = ["cell_id", "owner", "other_ids", "area", "geom"] + (
         ["payload"] if payload_of is not None else [])
+
+    def _frame(rows_):
+        out = pd.DataFrame(rows_, columns=cols)
+        if payload_of is not None:
+            # an object column, so Arrow converts the Python values exactly:
+            # inferred, an int payload beside GAP/KILL rows' None is float64
+            out["payload"] = pd.Series([r[-1] for r in rows_], dtype=object)
+        return out
+
     qrows = []
     for fid, gq in _quarantine_geoms(polys, quarantined, g):
         q = (cell, QUARANTINE_OWNER, [fid], 0.0, gq)
@@ -227,7 +236,7 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
             q += (payload_of.get(fid),)
         qrows.append(q)
     if not faces:
-        return pd.DataFrame(qrows, columns=cols)
+        return _frame(qrows)
     border_faces = {k for k, f in enumerate(faces) if grid.touches_box(f.shell, box)}
     measure, min_measure = face_measure_areas(faces, g, cfg)
     group_of, _ = _merge_slivers(faces, adj, min_measure, border_faces, areas=measure)
@@ -267,7 +276,7 @@ def _cell_rows(cell: int, box: tuple, polys: list, faces, adj,
         gg = (wkb.dump_grid_multipolygon([faces[i].rings for i in members], g)
               if with_geom else None)
         rows.append(_row(cell, owner, others, area2 / 2.0 * g * g, gg))
-    return pd.DataFrame(rows + qrows, columns=cols)
+    return _frame(rows + qrows)
 
 
 def _quarantine_geoms(polys: list, quarantined, g: float) -> list[tuple[int, bytes]]:

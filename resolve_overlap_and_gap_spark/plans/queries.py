@@ -1095,8 +1095,7 @@ def q_resolve_healed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # detected border gaps: tests/test_healed_fastpath.py); the output drops
     # geometry, so the final dissolve skips its WKB dumps
     healed = border_gap_merge(resolve(layer, cfg, res=res, emit_border_gaps=True),
-                              cfg, dissolve_geom=False,
-                              piece_res=[res])  # fixed-res resolve: known
+                              cfg, dissolve_geom=False)
     return healed.select(
         "owner",
         F.expr("cast(floor(area * 1e9) as bigint)").alias("area_x1e9"),

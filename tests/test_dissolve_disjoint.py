@@ -32,7 +32,7 @@ def test_disjoint_dissolve_equals_exact_on_heal(spark):
         "cell_id", "owner", "geom").localCheckpoint()
 
     def run(**kw):
-        h = border_gap_merge(resolved, cfg, piece_res=[res], **kw)
+        h = border_gap_merge(resolved, cfg, **kw)
         return {tuple(r) for r in h.select(
             "owner",
             F.expr("cast(floor(area * 1e9) as bigint)").alias("a"),

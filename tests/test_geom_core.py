@@ -37,8 +37,6 @@ def test_area_and_length():
     assert core.polygon_area([sqr]) == 100.0
     hole = np.array([[2, 2], [4, 2], [4, 4], [2, 4]], dtype=float)
     assert core.polygon_area([sqr, hole]) == 96.0
-    line = np.array([[0, 0], [3, 4], [3, 10]], dtype=float)
-    assert core.line_length(line) == 11.0
 
 
 def test_point_in_polygon():

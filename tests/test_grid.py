@@ -105,3 +105,28 @@ def test_spark_covering_matches_numpy(spark):
     want = grid.covering_cells_np(xmin, ymin, xmin + w, ymin + w, res)
     for g, w_ in zip(got, want):
         assert sorted(g) == sorted(w_.tolist())
+
+
+@pytest.mark.spark
+def test_ancestor_col_matches_parent_np(spark):
+    """ancestor_col re-keys mixed resolutions in one expression, to an int
+    or a column target; parent_np is its numpy twin."""
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    rng = np.random.default_rng(3)
+    lon = rng.uniform(-180, 180, 200)
+    lat = rng.uniform(-85, 85, 200)
+    res = rng.integers(0, grid.MAX_RES + 1, 200)
+    cells = np.array([grid.cell_id_np(lon[i:i + 1], lat[i:i + 1], int(r))[0]
+                      for i, r in enumerate(res)], np.int64)
+    target = (res * rng.uniform(0, 1, 200)).astype(np.int64)
+    df = spark.createDataFrame(pd.DataFrame({"c": cells, "t": target}))
+    got = df.select(
+        grid.res_col(F.col("c")).alias("r"),
+        grid.ancestor_col(F.col("c"), F.col("t")).alias("a"),
+        grid.ancestor_col(F.col("c"), 0).alias("a0"),
+    ).toPandas()
+    assert (got["r"].to_numpy() == res).all()
+    assert (got["a"].to_numpy() == grid.parent_np(cells, res - target)).all()
+    assert (got["a0"].to_numpy() == grid.parent_np(cells, res)).all()

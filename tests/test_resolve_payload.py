@@ -39,3 +39,20 @@ def test_payload_rides_through_kernel(spark):
     a = sorted((r.owner, r.cell_id, r.payload) for r in out.collect() if r.owner > 0)
     b = sorted((r.owner, r.cell_id, r.attrs) for r in rejoin.collect())
     assert a == b
+
+
+@pytest.mark.spark
+def test_int64_payload_exact_beside_border_gap_rows(spark):
+    """GAP_OWNER/KILL_OWNER rows carry a null payload; an int64 payload
+    above 2^53 must still come back exact on every piece row."""
+    from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+
+    big = 2 ** 53 + 1
+    layer = tiling_df(spark, k=6, cell=0.12, origin=(5, 55), jitter=0.018,
+                      seed=11).withColumn("p", F.col("fid") + F.lit(big))
+    cfg = EngineConfig(snap_tolerance=G)
+    for emit in (False, True):
+        out = resolve(layer, cfg, res=9, payload_col="p", emit_border_gaps=emit)
+        pieces = [r for r in out.collect() if r.owner >= 0]
+        assert pieces
+        assert all(r.payload == r.owner + big for r in pieces), emit
