@@ -32,7 +32,11 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from resolve_overlap_and_gap_spark.geom.core import ring_area2
+from resolve_overlap_and_gap_spark.geom.core import (
+    bbox_pairs,
+    components,
+    ring_area2,
+)
 
 CUT_LINE_BASE = -1000  # pids at or below this are attribute cut-lines
 
@@ -71,88 +75,6 @@ def rings_to_segments(polys: list[tuple[int, list[np.ndarray]]]):
         np.asarray(pids, dtype=np.int64),
         np.asarray(wts, dtype=np.int64),
     )
-
-
-def _bbox_pairs(S: np.ndarray, chunk: int = 1024) -> tuple[np.ndarray, np.ndarray]:
-    """Candidate intersecting pairs (i<j) by bbox overlap — chunked
-    broadcast for small inputs, uniform grid binning for large ones
-    (the O(m^2) broadcast dominates above a few thousand segments)."""
-    m = len(S)
-    x1 = np.minimum(S[:, 0], S[:, 2]); x2 = np.maximum(S[:, 0], S[:, 2])
-    y1 = np.minimum(S[:, 1], S[:, 3]); y2 = np.maximum(S[:, 1], S[:, 3])
-    if m > 4096:
-        return _bbox_pairs_binned(S, x1, y1, x2, y2)
-    outs_i, outs_j = [], []
-    for i0 in range(0, m, chunk):
-        i1 = min(i0 + chunk, m)
-        for j0 in range(i0, m, chunk):
-            j1 = min(j0 + chunk, m)
-            ov = (
-                (x1[i0:i1, None] <= x2[None, j0:j1])
-                & (x2[i0:i1, None] >= x1[None, j0:j1])
-                & (y1[i0:i1, None] <= y2[None, j0:j1])
-                & (y2[i0:i1, None] >= y1[None, j0:j1])
-            )
-            ii, jj = np.nonzero(ov)
-            ii = ii + i0
-            jj = jj + j0
-            keep = ii < jj
-            outs_i.append(ii[keep])
-            outs_j.append(jj[keep])
-    if not outs_i:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    return np.concatenate(outs_i), np.concatenate(outs_j)
-
-
-def _bbox_pairs_binned(S, x1, y1, x2, y2) -> tuple[np.ndarray, np.ndarray]:
-    """Uniform-grid candidate generation: bin segment bboxes into cells
-    sized by the median bbox extent; exact bbox check within bins; pairs
-    deduped via packed keys."""
-    m = len(S)
-    ext = np.median(np.maximum(x2 - x1, y2 - y1)) + 1.0
-    gx0, gy0 = x1.min(), y1.min()
-    bx1 = ((x1 - gx0) / ext).astype(np.int64)
-    bx2 = ((x2 - gx0) / ext).astype(np.int64)
-    by1 = ((y1 - gy0) / ext).astype(np.int64)
-    by2 = ((y2 - gy0) / ext).astype(np.int64)
-    # explode each segment to its bins (bounded: bbox ~ median extent) —
-    # fully vectorized repeat/arange arithmetic, no per-segment loops
-    nx = bx2 - bx1 + 1
-    ny = by2 - by1 + 1
-    counts = nx * ny
-    total = int(counts.sum())
-    seg_ids = np.repeat(np.arange(m, dtype=np.int64), counts)
-    w = np.arange(total, dtype=np.int64) - np.repeat(
-        np.concatenate(([0], np.cumsum(counts)))[:-1], counts)
-    ny_r = np.repeat(ny, counts)
-    bx = np.repeat(bx1, counts) + w // ny_r
-    by = np.repeat(by1, counts) + w % ny_r
-    bins = bx << 32 | by
-    order = np.argsort(bins, kind="stable")
-    seg_ids, bins = seg_ids[order], bins[order]
-    starts = np.nonzero(np.r_[True, bins[1:] != bins[:-1]])[0]
-    ends = np.r_[starts[1:], len(bins)]
-    k = ends - starts
-    big = k >= 2
-    starts, k = starts[big], k[big]
-    if not len(starts):
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    # all in-bin ordered pairs per group via global offset arithmetic
-    pair_cnt = k * k
-    tp = int(pair_cnt.sum())
-    wp = np.arange(tp, dtype=np.int64) - np.repeat(
-        np.concatenate(([0], np.cumsum(pair_cnt)))[:-1], pair_cnt)
-    s_r = np.repeat(starts, pair_cnt)
-    k_r = np.repeat(k, pair_cnt)
-    ii = seg_ids[s_r + wp // k_r]
-    jj = seg_ids[s_r + wp % k_r]
-    lt = ii < jj
-    uk = np.unique(ii[lt] * m + jj[lt])
-    I, J = uk // m, uk % m
-    ok = (
-        (x1[I] <= x2[J]) & (x2[I] >= x1[J]) & (y1[I] <= y2[J]) & (y2[I] >= y1[J])
-    )
-    return I[ok], J[ok]
 
 
 def _unique_rows(pts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -224,10 +146,11 @@ def node_segments(S: np.ndarray, pid: np.ndarray, wt: np.ndarray, max_iter: int 
 
 def _node_segments_impl(S: np.ndarray, pid: np.ndarray, wt: np.ndarray,
                         cell: np.ndarray | None, max_iter: int = 8):
-    """node_segments with an optional per-segment CELL tag: candidate pairs
-    are restricted to equal cells, so independent cells node in ONE batched
-    pass with results identical to per-cell runs (coordinates untouched —
-    no translation, no float differences)."""
+    """node_segments with an optional per-segment CELL tag, the group key of
+    the bbox_pairs sweep: segments of different cells are never candidates,
+    so independent cells node in ONE batched pass with results identical to
+    per-cell runs (coordinates untouched — no translation, no float
+    differences)."""
     S = np.asarray(S, dtype=np.int64).reshape(-1, 4)
     pid = np.asarray(pid, dtype=np.int64)
     wt = np.asarray(wt, dtype=np.int64)
@@ -237,10 +160,8 @@ def _node_segments_impl(S: np.ndarray, pid: np.ndarray, wt: np.ndarray,
         m = len(S)
         if m == 0:
             break
-        I, J = _bbox_pairs(S)
-        if cell is not None and len(I):
-            scm = cell[I] == cell[J]
-            I, J = I[scm], J[scm]
+        I, J = bbox_pairs(np.hstack([np.minimum(S[:, :2], S[:, 2:]),
+                                     np.maximum(S[:, :2], S[:, 2:])]), cell)
         # event arrays: split segment index + split point
         ev_s: list[np.ndarray] = []
         ev_x: list[np.ndarray] = []
@@ -627,26 +548,11 @@ def label_walks(arr: Arrangement) -> list[dict[int, int]]:
         # them): the whole-array machinery's fixed cost exceeds the scalar
         # loop here — identical results
         return _label_walks_small(arr)
-    # connected components over node ids: vectorized min-label propagation
-    # with pointer halving — O(log diameter) rounds of whole-array ops
-    # instead of a python union-find loop over every edge.  At the
-    # fixpoint every node's label is its component's MIN node id, which
-    # (node ids being in lexicographic coordinate order) is exactly the
-    # anchor the ray-cast wants.
-    n_nodes = len(arr.nodes)
+    # connected components over node ids: each node is labeled with its
+    # component's MIN node id, which (node ids being in lexicographic
+    # coordinate order) is exactly the anchor the ray-cast wants
     fe = arr.from_node[0::2]
-    te = arr.to_node[0::2]
-    lab = np.arange(n_nodes, dtype=np.int64)
-    while True:
-        prev = lab
-        lab = lab.copy()
-        m = np.minimum(lab[fe], lab[te])
-        np.minimum.at(lab, fe, m)
-        np.minimum.at(lab, te, m)
-        lab = np.minimum(lab, lab[lab])  # pointer halving
-        if np.array_equal(lab, prev):
-            break
-    comp_of_edge = lab[fe]
+    comp_of_edge = components(len(arr.nodes), fe, arr.to_node[0::2])[fe]
 
     # edge lists per component via one argsort (components keyed by their
     # min node id, so ascending key order IS ascending anchor order)

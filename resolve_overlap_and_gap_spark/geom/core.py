@@ -69,6 +69,70 @@ def _drop_closing(c: np.ndarray) -> np.ndarray:
     return c
 
 
+# ------------------------------------------------------------ candidate pairs
+def bbox_pairs(bb: np.ndarray, group: np.ndarray | None = None,
+               chunk: int = 1 << 16) -> tuple[np.ndarray, np.ndarray]:
+    """Index pairs (i < j) of boxes that overlap as closed boxes, within
+    equal ``group`` values when given — the engine's one bbox prefilter
+    (the reference's ``t.geom && g.geom``,
+    function_resolve_overlap_gap_init.sql:195-199).  bb: (n, 4) int
+    (xmin, ymin, xmax, ymax).  Sort sweep over (group, xmin): a box's
+    x-overlapping successors are one contiguous run of that order, so
+    candidates are generated in chunks of about ``chunk`` and y-checked
+    chunk by chunk — memory follows the overlapping pairs, never the
+    x-only candidates."""
+    n = len(bb)
+    if n < 2:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    # (group, x) packed into one int64 via dense ranks of group and x
+    xs, xr = np.unique(np.concatenate([bb[:, 0], bb[:, 2]]), return_inverse=True)
+    g = 0 if group is None else np.unique(group, return_inverse=True)[1] * len(xs)
+    lo, hi = g + xr[:n], g + xr[n:]
+    order = np.argsort(lo, kind="stable")
+    cnt = np.searchsorted(lo[order], hi[order], "right") - np.arange(n) - 1
+    cum = np.concatenate(([0], np.cumsum(cnt)))
+    out_i, out_j = [], []
+    p0 = 0
+    while p0 < n:
+        p1 = max(p0 + 1, int(np.searchsorted(cum, cum[p0] + chunk, "right")) - 1)
+        c = cnt[p0:p1]
+        tot = int(cum[p1] - cum[p0])
+        a = np.repeat(np.arange(p0, p1), c)
+        i = order[a]
+        j = order[a + 1 + np.arange(tot) - np.repeat(cum[p0:p1] - cum[p0], c)]
+        ov = (bb[i, 1] <= bb[j, 3]) & (bb[j, 1] <= bb[i, 3])
+        i, j = i[ov], j[ov]
+        out_i.append(np.minimum(i, j))
+        out_j.append(np.maximum(i, j))
+        p0 = p1
+    return np.concatenate(out_i), np.concatenate(out_j)
+
+
+def components(n: int, i: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """Connected components of the graph on vertices 0..n-1 with edges
+    (i[k], j[k]): a label per vertex, the min vertex of its component.
+    Vectorized union-find: every round hooks the larger root of each
+    still-split edge under the smaller (so a root is always its tree's
+    min vertex), and pointer jumping flattens the forest in O(log depth)
+    whole-array steps."""
+    parent = np.arange(n, dtype=np.int64)
+
+    def roots(x):
+        while True:
+            pp = parent[parent]
+            if np.array_equal(pp, parent):
+                return parent[x]
+            parent[:] = pp
+
+    ri, rj = roots(i), roots(j)
+    while len(ri):
+        np.minimum.at(parent, np.maximum(ri, rj), np.minimum(ri, rj))
+        ri, rj = roots(ri), roots(rj)
+        d = ri != rj
+        ri, rj = ri[d], rj[d]
+    return roots(slice(None))
+
+
 # ------------------------------------------------------------ predicates
 def points_in_ring(pts: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Vectorized even-odd ray cast: pts (m,2) vs one ring (n,2).

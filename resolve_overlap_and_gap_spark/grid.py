@@ -89,15 +89,6 @@ def parent_np(cell: np.ndarray, steps: int = 1) -> np.ndarray:
     return ((res - steps) << RES_SHIFT) | ((cell & _ZMASK) >> (2 * steps))
 
 
-def children_np(cell: np.int64) -> np.ndarray:
-    """4 child cells (quadtree split — the reference's quadrant recursion,
-    find_overlap_and_gap-pre.sql:216-236)."""
-    res = int(cell) >> RES_SHIFT & 0x1F
-    z = int(cell) & _ZMASK
-    base = ((res + 1) << RES_SHIFT) | (z << 2)
-    return np.array([base, base | 1, base | 2, base | 3], dtype=np.int64)
-
-
 def cell_bounds_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """(lon_min, lat_min, lon_max, lat_max) of each cell."""
     res = cell_res_np(cell)

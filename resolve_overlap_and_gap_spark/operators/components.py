@@ -25,9 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# contracted graphs at or under this many (symmetrized) edges finish with a
-# driver union-find — a bounded collect (~16 bytes/row) replacing several
-# fixed-latency join rounds; larger graphs use the distributed loop
+from resolve_overlap_and_gap_spark.geom.core import components
+
+# contracted graphs at or under this many (symmetrized) edges finish on the
+# driver (core.components) — a bounded collect (~16 bytes/row) replacing
+# several fixed-latency join rounds; larger graphs use the distributed loop
 DRIVER_CC_MAX_EDGES = 200_000
 
 # node->rep maps at or under this many rows join as broadcasts (~16 B/row,
@@ -119,7 +121,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     sym = sym.localCheckpoint()
     # the contracted graph is tiny on near-clique dedup inputs (~10^2 edges
     # from 2.5M simhash pairs at sf0.1).  When it fits a hard row bound,
-    # finish it with a driver union-find instead of the iterative join
+    # finish it on the driver (core.components) instead of the iterative join
     # loop: one bounded collect (<= ~3 MB) replaces 3+ fixed-latency Spark
     # jobs per propagation round.  The bound keeps the transfer O(small) —
     # above it (long-chain graphs at scale) the distributed loop runs
@@ -135,30 +137,8 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         uu = pdf["u"].to_numpy(np.int64)
         vv = pdf["v"].to_numpy(np.int64)
         ids, inv = np.unique(np.concatenate([uu, vv]), return_inverse=True)
-        parent = np.arange(len(ids))
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        ui = inv[: len(uu)]
-        vi = inv[len(uu):]
-        for a, b in zip(ui, vi):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                parent[ra] = rb
-        roots = np.fromiter((find(int(i)) for i in range(len(ids))),
-                            np.int64, len(ids))
-        # component label = min original id in the component
-        comp_min: dict[int, int] = {}
-        for i in range(len(ids)):
-            r = int(roots[i])
-            m = comp_min.get(r)
-            if m is None or ids[i] < m:
-                comp_min[r] = int(ids[i])
-        lab = np.fromiter((comp_min[int(r)] for r in roots), np.int64, len(ids))
+        # ids are sorted: a component's min index is its min original id
+        lab = ids[components(len(ids), inv[: len(uu)], inv[len(uu):])]
         spark = edges.sparkSession
         labels = spark.createDataFrame(
             pd.DataFrame({"rep": ids, "label": lab}))

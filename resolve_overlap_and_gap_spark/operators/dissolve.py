@@ -3,10 +3,12 @@
 merge pipelines …single_cell.sql:360-369).
 
 Spark-native: groupBy(hashed key bucket) -> one Arrow-batched kernel per
-bucket: batch WKB parse, bbox components per key (only parts whose boxes
-touch can interact), lone parts emitted as they are, and ONE cell-tagged
-union_cells call over every multi-part component of the bucket — tags keep
-keys and components independent, so keys may overlap each other freely.
+bucket: batch WKB parse, bbox components per key (core.bbox_pairs swept
+with the key as group, labeled by core.components — only parts whose
+boxes touch can interact), lone parts emitted as they are, and ONE
+cell-tagged union_cells call over every multi-part component of the
+bucket — tags keep keys and components independent, so keys may overlap
+each other freely.
 Because resolve() pieces tile exactly on snap-grid-aligned cell borders,
 dissolving an owner's per-cell pieces drops the internal border edges —
 this IS the cross-cell heal for owner geometry (reference job type 4,
@@ -28,7 +30,12 @@ from pyspark.sql import types as T
 
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import Face, union_cells
-from resolve_overlap_and_gap_spark.geom.core import ring_area2, snap_to_grid_int
+from resolve_overlap_and_gap_spark.geom.core import (
+    bbox_pairs,
+    components,
+    ring_area2,
+    snap_to_grid_int,
+)
 from resolve_overlap_and_gap_spark.operators.overlap_gap import default_cell_buckets
 
 DISSOLVE_SCHEMA = T.StructType([
@@ -37,52 +44,6 @@ DISSOLVE_SCHEMA = T.StructType([
     T.StructField("n_parts", T.IntegerType()),
     T.StructField("geom", T.BinaryType()),
 ])
-
-
-def _bbox_components(group: np.ndarray, bb: np.ndarray,
-                     chunk: int = 1 << 16) -> np.ndarray:
-    """Connected components of the closed-bbox overlap graph within each
-    group: a label per box, the min box index of its component.  Sort-based
-    sweep over (group, xmin): a box's x-overlapping successors are one
-    contiguous run of that order, so candidate pairs are generated in
-    chunks of about `chunk` (memory never grows with pairs per group) and
-    merged by a vectorized hook-to-smaller-root union-find."""
-    n = len(group)
-    parent = np.arange(n, dtype=np.int64)
-    if n < 2:
-        return parent
-    # (group, x) packed into one int64 via dense ranks of group and x
-    xs, xr = np.unique(np.concatenate([bb[:, 0], bb[:, 2]]), return_inverse=True)
-    g = np.unique(group, return_inverse=True)[1] * len(xs)
-    lo, hi = g + xr[:n], g + xr[n:]
-    order = np.argsort(lo, kind="stable")
-    cnt = np.searchsorted(lo[order], hi[order], "right") - np.arange(n) - 1
-    cum = np.concatenate(([0], np.cumsum(cnt)))
-
-    def roots(x):
-        while True:  # pointer jumping: O(log depth) whole-array rounds
-            pp = parent[parent]
-            if np.array_equal(pp, parent):
-                return parent[x]
-            parent[:] = pp
-
-    p0 = 0
-    while p0 < n:
-        p1 = max(p0 + 1, int(np.searchsorted(cum, cum[p0] + chunk, "right")) - 1)
-        c = cnt[p0:p1]
-        tot = int(cum[p1] - cum[p0])
-        a = np.repeat(np.arange(p0, p1), c)
-        i = order[a]
-        j = order[a + 1 + np.arange(tot) - np.repeat(cum[p0:p1] - cum[p0], c)]
-        ov = (bb[i, 1] <= bb[j, 3]) & (bb[j, 1] <= bb[i, 3])
-        ri, rj = roots(i[ov]), roots(j[ov])
-        while len(ri):
-            np.minimum.at(parent, np.maximum(ri, rj), np.minimum(ri, rj))
-            ri, rj = roots(ri), roots(rj)
-            d = ri != rj
-            ri, rj = ri[d], rj[d]
-        p0 = p1
-    return roots(slice(None))
 
 
 def _bbox(rings: list[np.ndarray]) -> np.ndarray:
@@ -94,16 +55,20 @@ def _bbox(rings: list[np.ndarray]) -> np.ndarray:
 def union_parts(parts: list[list[np.ndarray]], group: np.ndarray,
                 bb: np.ndarray | None = None) -> dict[int, list[Face]]:
     """Dissolve of snapped int polygons (ring 0 = shell) per group:
-    {group: [Face]}.  Each group splits into bbox components; a lone part
-    is its own union (no arrangement), and every multi-part component of
-    every group goes into ONE union_cells call, one tag per component.
-    Faces come per group in component order (by first member, members in
-    input order), so a group's result does not depend on what else shares
-    the call.  bb: per-part (xmin, ymin, xmax, ymax), derived when None."""
+    {group: [Face]}.  Each group splits into the components of its
+    closed-bbox overlap graph (core.bbox_pairs with the group as sweep key,
+    core.components labeling each part with its component's first member);
+    a lone part is its own union (no arrangement), and every multi-part
+    component of every group goes into ONE union_cells call, one tag per
+    component.  Faces come per group in component order (by first member,
+    members in input order), so a group's result does not depend on what
+    else shares the call.  bb: per-part (xmin, ymin, xmax, ymax), derived
+    when None."""
     if bb is None:
         bb = np.array([_bbox(rs) for rs in parts], np.int64).reshape(-1, 4)
     members: dict[int, list[int]] = {}
-    for i, c in enumerate(_bbox_components(group, bb).tolist()):
+    label = components(len(parts), *bbox_pairs(bb, group))
+    for i, c in enumerate(label.tolist()):
         members.setdefault(c, []).append(i)
     faces_of = union_cells([(c, [(0, parts[i]) for i in m])
                             for c, m in members.items() if len(m) > 1])

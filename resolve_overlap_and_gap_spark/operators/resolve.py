@@ -62,7 +62,7 @@ def wkb_is_valid(geoms: pd.Series) -> pd.Series:
                 for r in rings:
                     r = np.asarray(r, dtype=np.float64)
                     # scale-relative grid keeps int64 predicates overflow-free
-                    ext = float(max(r[:, 0].ptp(), r[:, 1].ptp(), 1e-30))
+                    ext = float(max(np.ptp(r[:, 0]), np.ptp(r[:, 1]), 1e-30))
                     if not ring_is_valid(snap_to_grid_int(r, ext / 1e7)):
                         ok = False
         except Exception:

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
+from resolve_overlap_and_gap_spark.geom.core import bbox_pairs, components
 from resolve_overlap_and_gap_spark.operators.dissolve import dissolve
 from resolve_overlap_and_gap_spark.operators.resolve import resolve
 from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
@@ -140,8 +141,6 @@ def _brute_components(group, bb):
 
 @pytest.mark.parametrize("seed", range(4))
 def test_bbox_components_equal_brute_force(seed):
-    from resolve_overlap_and_gap_spark.operators.dissolve import _bbox_components
-
     rng = np.random.default_rng(seed)
     n = 80
     group = rng.integers(0, 3, size=n)
@@ -149,7 +148,7 @@ def test_bbox_components_equal_brute_force(seed):
     bb = np.hstack([lo, lo + rng.integers(0, 8, size=(n, 2))]).astype(np.int64)
     want = _brute_components(group, bb)
     for chunk in (1 << 16, 3):   # 3: candidate pairs span many chunks
-        assert _bbox_components(group, bb, chunk=chunk).tolist() == want
+        assert components(n, *bbox_pairs(bb, group, chunk)).tolist() == want
 
 
 @pytest.mark.parametrize("layout", ["chain", "column"])
@@ -160,8 +159,6 @@ def test_bbox_components_memory_is_not_quadratic(layout):
     allocate 72 MB per int64 pair array; the sweep stays under 16 MB."""
     import tracemalloc
 
-    from resolve_overlap_and_gap_spark.operators.dissolve import _bbox_components
-
     k = 3000
     bound = 16 << 20
     assert k * k * 8 > 4 * bound
@@ -171,7 +168,7 @@ def test_bbox_components_memory_is_not_quadratic(layout):
           else np.stack([z, s, z + 100, s + 15], axis=1))
     tracemalloc.start()
     try:
-        lab = _bbox_components(np.zeros(k, np.int64), bb)
+        lab = components(k, *bbox_pairs(bb, np.zeros(k, np.int64)))
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()

@@ -19,9 +19,12 @@ import pytest
 from resolve_overlap_and_gap_spark.geom.arrangement import (
     Arrangement,
     NodingError,
+    _label_walks_small,
     label_walks,
     node_segments,
+    rings_to_segments,
 )
+from resolve_overlap_and_gap_spark.geom.core import bbox_pairs
 
 
 def _cross(ox, oy, ax, ay, bx, by):
@@ -185,3 +188,89 @@ def test_vectorized_arrangement_faces_match(seed):
     sig_b = sorted((int(x), tuple(sorted(w.items())))
                    for x, w in zip(arr_b.walk_area2, wb))
     assert sig_a == sig_b
+
+
+def test_bbox_pairs_equal_brute_force():
+    """The sweep's pair set == the all-pairs broadcast, with and without a
+    group key, for one chunk and for chunk=3 (candidates span many
+    chunks).  More than 4,096 boxes on a coarse grid: zero-width and
+    zero-height boxes, plus hand-placed boxes that touch only at an edge
+    or a corner and one that misses by a unit."""
+    rng = np.random.default_rng(5)
+    n = 4200
+    lo = rng.integers(0, 300, size=(n, 2))
+    bb = np.hstack([lo, lo + rng.integers(0, 5, size=(n, 2))])
+    touch = np.array([[1000, 1000, 1010, 1010], [1010, 1000, 1020, 1005],
+                      [1020, 1005, 1030, 1015], [1031, 1000, 1040, 1010],
+                      [1000, 1010, 1000, 1020], [990, 1020, 1000, 1020]])
+    bb = np.vstack([bb, touch]).astype(np.int64)
+    n = len(bb)
+    assert ((bb[:, 0] == bb[:, 2]) & (bb[:, 1] != bb[:, 3])).any()
+    assert ((bb[:, 1] == bb[:, 3]) & (bb[:, 0] != bb[:, 2])).any()
+    group = rng.integers(0, 3, size=n)
+    group[-len(touch):] = 0
+
+    def key(i, j):
+        assert (i < j).all()
+        return np.sort(i * n + j).tolist()
+
+    ri, rj = _bbox_pairs_ref(bb)
+    same = group[ri] == group[rj]
+    t0 = n - len(touch)
+    # edge 0-1, corner 1-2, none 2-3, edge 0-4, corner 4-5
+    want_touch = {(0, 1), (1, 2), (0, 4), (4, 5)}
+    got_touch = {(int(a) - t0, int(b) - t0) for a, b in zip(ri, rj) if a >= t0}
+    assert got_touch == want_touch
+    for chunk in (1 << 16, 3):
+        assert key(*bbox_pairs(bb, None, chunk)) == key(ri, rj)
+        assert key(*bbox_pairs(bb, group, chunk)) == key(ri[same], rj[same])
+
+
+def test_node_segments_memory_is_not_quadratic():
+    """3,000 horizontal segments 100,000 wide at distinct y, plus 2,000
+    short ones far away: every long segment's x-range overlaps every
+    other's, yet no two boxes overlap.  All-pairs candidates would be
+    4.5M pairs (the old median-extent binning put the whole column in one
+    bin); the sweep's y check keeps the peak far below that."""
+    import tracemalloc
+
+    k = 3000
+    y = np.arange(k, dtype=np.int64)
+    z = np.zeros(k, np.int64)
+    x = 10_000_000 + 10 * np.arange(2000, dtype=np.int64)
+    S = np.vstack([np.stack([z, y, z + 100_000, y], axis=1),
+                   np.stack([x, x, x + 3, x + 2], axis=1)])
+    pid = np.arange(len(S), dtype=np.int64)
+    wt = np.ones(len(S), np.int64)
+    tracemalloc.start()
+    try:
+        got = node_segments(S, pid, wt)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert _canon(*got).tolist() == _canon(S, pid, wt).tolist()
+    assert peak < 64 << 20, peak
+
+
+def _rect_soup(rng, n, span):
+    """Segments of n random axis boxes and right triangles (nested, disjoint
+    and overlapping components), noded."""
+    polys = []
+    for p in range(n):
+        x0, y0 = (int(v) for v in rng.integers(0, span, 2))
+        w, h = (int(v) for v in rng.integers(1, span // 4, 2))
+        ring = ([[x0, y0], [x0 + w, y0], [x0 + w, y0 + h], [x0, y0 + h]]
+                if p % 3 else [[x0, y0], [x0 + w, y0], [x0, y0 + h]])
+        polys.append((p, [np.array(ring, np.int64)]))
+    return node_segments(*rings_to_segments(polys))
+
+
+@pytest.mark.parametrize("n, span", [(8, 200), (60, 400), (150, 2000)])
+def test_label_walks_equal_small_path(n, span):
+    """label_walks == the scalar _label_walks_small on the same untagged
+    arrangement, below the 192-edge switch (label_walks hands over to the
+    scalar path) and above it (its own components labels and batched
+    anchor ray-casts)."""
+    arr = Arrangement(*_rect_soup(np.random.default_rng(n), n, span))
+    assert (len(arr.edges) > 192) == (n > 8)
+    assert label_walks(arr) == _label_walks_small(arr)
