@@ -30,7 +30,7 @@ def _one_task(seed: int) -> int:
     integer polygons (deterministic per seed) and count faces."""
     import numpy as np
 
-    from resolve_overlap_and_gap_spark.geom.arrangement import overlay
+    from resolve_overlap_and_gap_spark.geom.arrangement import overlay_cells
 
     polys = []
     for i in range(POLYS_PER_TASK):
@@ -42,7 +42,7 @@ def _one_task(seed: int) -> int:
         ang = 2.0 * np.pi * np.arange(k) / k + (h % 628) / 100.0
         ring = np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], axis=1)
         polys.append((i, [np.floor(ring + 0.5).astype(np.int64)]))
-    return len(overlay(polys))
+    return len(overlay_cells([(0, polys)])[0])
 
 
 def _run(workers: int, n_tasks: int = N_TASKS) -> float:

@@ -874,17 +874,11 @@ def simplify_segments(S, pid, wt, tol_units: float, chaikin_iters: int = 0,
     )
 
 
-def union_faces(polys: list[tuple[int, list[np.ndarray]]]) -> list[Face]:
-    """Dissolved union of all inputs (any winding > 0) — union_cells over
-    a single item (see there)."""
-    return union_cells([(0, polys)])[0]
-
-
 def union_cells(items: list[tuple]) -> dict:
     """Batched dissolve of INDEPENDENT items: {key: [Face]}, the union of
     each item's polys (any winding > 0), computed in ONE noding/DCEL/
-    labeling pass over all items.  The only union entry point: union_faces()
-    is this function over one item.
+    labeling pass over all items.  The only union entry point: a lone
+    union is union_cells([(0, polys)])[0].
 
     Per item: keep only the edges where coverage changes (the union
     boundary) and re-polygonize them.  Interior edges — shared borders and
@@ -972,34 +966,6 @@ def lines_to_segments(cut_lines: list[tuple[int, np.ndarray]]):
     return np.vstack(segs), np.asarray(pids, np.int64), np.asarray(wts, np.int64)
 
 
-def overlay(polys: list[tuple[int, list[np.ndarray]]],
-            with_adjacency: bool = False,
-            simplify_tol_units: float = 0.0,
-            chaikin_iters: int = 0,
-            frozen_box: tuple | None = None,
-            cut_lines: list[tuple[int, np.ndarray]] | None = None,
-            noding_max_iter: int = 8,
-            quarantine: list[int] | None = None):
-    """Full overlay of one cell: snapped int rings in, labeled faces out —
-    overlay_cells over a single item (see there for every option).
-
-    with_adjacency=True additionally returns a dict
-    (face_idx_a, face_idx_b) -> shared boundary length (grid units, a<b;
-    -1 stands for the outside/unassigned region) — the input to sliver
-    merging (ST_RemEdgeNewFace semantics).
-
-    quarantine: pass a list to receive the pids whose noding failed (the
-    reference's _no_cut_line_failed path); without it NodingError
-    propagates."""
-    q_of = None if quarantine is None else {}
-    out = overlay_cells([(0, polys, frozen_box, cut_lines)], with_adjacency,
-                        noding_max_iter, q_of, simplify_tol_units,
-                        chaikin_iters)
-    if quarantine is not None:
-        quarantine.extend(p for p in q_of.get(0, []) if p not in quarantine)
-    return out[0]
-
-
 def _assemble_faces(arr: Arrangement, winding, walk_ids, eids,
                     with_adjacency: bool):
     """Face assembly over a subset of walks/edges — the whole arrangement
@@ -1075,8 +1041,9 @@ def overlay_cells(items: list[tuple], with_adjacency: bool = False,
     """Batched overlay of INDEPENDENT cells: {key: faces} (or
     {key: (faces, adj)}) computed in ONE noding/DCEL/labeling pass over all
     cells of a kernel bucket instead of one full machinery invocation per
-    cell.  The only overlay entry point: overlay() is this function over one
-    item (union_cells is its dissolve counterpart).
+    cell.  The only overlay entry point: a lone cell is
+    overlay_cells([(0, polys)])[0] (union_cells is its dissolve
+    counterpart).
 
     items: (key, polys[, frozen_box[, cut_lines]]) per cell.
       cut_lines: [(line_id, int coords)] attribute lines that split faces
@@ -1088,6 +1055,11 @@ def overlay_cells(items: list[tuple], with_adjacency: bool = False,
     (frozen endpoints, frozen near frozen_box, chaikin_iters rounds of
     acute-angle smoothing) BEFORE face extraction, so output faces still
     partition exactly (scenario-(b) simplify+Chaikin path).
+
+    with_adjacency=True maps each key to (faces, adj): adj is
+    (face_idx_a, face_idx_b) -> shared boundary length (grid units, a<b;
+    -1 stands for the outside/unassigned region) — the input to sliver
+    merging (ST_RemEdgeNewFace semantics).
 
     EXACTNESS: coordinates are untouched (no translation); every phase is
     keyed by the cell tag (candidate pairs, edge and node identity, face

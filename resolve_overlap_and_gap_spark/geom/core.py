@@ -22,16 +22,6 @@ def ring_area2(c: np.ndarray) -> float:
     return float(np.dot(x, yr) - np.dot(y, xr))
 
 
-def polygon_area(rings: list[np.ndarray]) -> float:
-    """Area of shell minus holes (orientation-insensitive)."""
-    if not rings:
-        return 0.0
-    a = abs(ring_area2(_drop_closing(rings[0]))) / 2.0
-    for h in rings[1:]:
-        a -= abs(ring_area2(_drop_closing(h))) / 2.0
-    return a
-
-
 def axis_edges(rings) -> np.ndarray:
     """(n,4) int64 (axis, coord, lo, hi) per positive-length axis-parallel
     edge of closed integer rings (the last vertex joins the first): axis 0
@@ -54,13 +44,6 @@ def axis_edges(rings) -> np.ndarray:
     return np.column_stack([axis, a[i, axis],
                             np.minimum(a[i, along], b[i, along]),
                             np.maximum(a[i, along], b[i, along])])
-
-
-def bounds(c: np.ndarray) -> tuple[float, float, float, float]:
-    return (
-        float(c[:, 0].min()), float(c[:, 1].min()),
-        float(c[:, 0].max()), float(c[:, 1].max()),
-    )
 
 
 def _drop_closing(c: np.ndarray) -> np.ndarray:

@@ -1,7 +1,7 @@
 """Geodesic measures on the sphere AND the WGS84 spheroid (numpy) — the
-utm=false path of the reference (ST_Area(geo, true) / ST_Length(geo, true) /
-ST_Distance spheroid; …utils/function_01_get_face_area.sql:24-28,
-types_resolve_overlap.sql:19).
+utm=false path of the reference (ST_Area(geo, true);
+…utils/function_01_get_face_area.sql:24-28, types_resolve_overlap.sql:19).
+Point distance lives in SQL (operators/geodist.haversine_sql).
 
 PostGIS measures on the WGS84 *spheroid*.  The spheroid area here uses the
 authalic-latitude q-series (Snyder, Map Projections §3: the exact
@@ -12,9 +12,7 @@ same edge model (straight lon/lat segments), only the figure of the earth
 changes.  Against the mean-radius sphere the divergence is up to ~0.5%
 of area (latitude-dependent) — enough to flip keep/merge decisions near
 min_area, which is why the engine defaults to the spheroid
-(EngineConfig.geodesic_spheroid).  Spheroid line/point distance is
-Lambert's reduced-latitude formula (first order in f, ~10 m on
-continental arcs vs ~0.5% for the sphere).
+(EngineConfig.geodesic_spheroid).
 """
 
 from __future__ import annotations
@@ -80,57 +78,3 @@ def polygon_area_m2(rings: list[np.ndarray], spheroid: bool = False) -> float:
     return a
 
 
-def line_length_m(coords_deg: np.ndarray, spheroid: bool = False) -> float:
-    """Polyline length in meters: great-circle (haversine) on the sphere,
-    Lambert reduced-latitude on the WGS84 spheroid."""
-    c = np.asarray(coords_deg, dtype=np.float64)
-    if len(c) < 2:
-        return 0.0
-    if spheroid:
-        return float(distance_m(c[:-1, 0], c[:-1, 1], c[1:, 0], c[1:, 1],
-                                spheroid=True).sum())
-    lam = np.radians(c[:, 0]); phi = np.radians(c[:, 1])
-    dphi = np.diff(phi); dlam = np.diff(lam)
-    a = np.sin(dphi / 2) ** 2 + np.cos(phi[:-1]) * np.cos(phi[1:]) * np.sin(dlam / 2) ** 2
-    return float((2 * R_MEAN * np.arcsin(np.sqrt(a))).sum())
-
-
-def distance_m(lon1, lat1, lon2, lat2, spheroid: bool = False) -> np.ndarray:
-    """Vectorized point distance (m): haversine sphere by default (the
-    measure the oracled dwithin/kNN queries pin), or Lambert's
-    reduced-latitude spheroid formula (first order in flattening — ~10 m
-    accuracy on continental arcs, vs the sphere's ~0.5%)."""
-    if spheroid:
-        return _distance_m_lambert(lon1, lat1, lon2, lat2)
-    p1, p2 = np.radians(lat1), np.radians(lat2)
-    dp = p2 - p1
-    dl = np.radians(lon2) - np.radians(lon1)
-    a = np.sin(dp / 2) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2) ** 2
-    return 2 * R_MEAN * np.arcsin(np.sqrt(a))
-
-
-def _distance_m_lambert(lon1, lat1, lon2, lat2) -> np.ndarray:
-    """Lambert's formula: haversine central angle on REDUCED latitudes,
-    then the first-order flattening correction (X/Y terms)."""
-    one_f = 1.0 - F_WGS84
-    b1 = np.arctan(one_f * np.tan(np.radians(np.asarray(lat1, np.float64))))
-    b2 = np.arctan(one_f * np.tan(np.radians(np.asarray(lat2, np.float64))))
-    dl = np.radians(np.asarray(lon2, np.float64) - np.asarray(lon1, np.float64))
-    ha = (np.sin((b2 - b1) / 2) ** 2
-          + np.cos(b1) * np.cos(b2) * np.sin(dl / 2) ** 2)
-    ha = np.clip(ha, 0.0, 1.0)
-    sig = 2.0 * np.arcsin(np.sqrt(ha))
-    sin_sig = np.sin(sig)
-    P = (b1 + b2) / 2.0
-    Q = (b2 - b1) / 2.0
-    # X/Y have removable 0/0 singularities at sig=0 (coincident) and
-    # sig=pi (antipodal); guard the denominators, zero the correction there
-    cos_half = np.cos(sig / 2.0) ** 2
-    sin_half = np.sin(sig / 2.0) ** 2
-    with np.errstate(divide="ignore", invalid="ignore"):
-        X = (sig - sin_sig) * np.sin(P) ** 2 * np.cos(Q) ** 2 / np.where(cos_half > 1e-12, cos_half, 1.0)
-        Y = (sig + sin_sig) * np.cos(P) ** 2 * np.sin(Q) ** 2 / np.where(sin_half > 1e-12, sin_half, 1.0)
-    corr = np.where((cos_half > 1e-12) & (sin_half > 1e-12), X + Y, 0.0)
-    # degenerate sin_half==0 means b1==b2 and dl==0 -> Y term is 0 anyway
-    corr = np.where(sin_half > 1e-12, corr, np.where(cos_half > 1e-12, X, 0.0))
-    return A_WGS84 * (sig - F_WGS84 / 2.0 * corr)

@@ -3,17 +3,12 @@ its grid box to metric SRID 3035 for the min-distance check,
 find_overlap_and_gap-pre.sql:144,181-183, and test fixtures to UTM 25833,
 src/test/sql/regress/resolve_overlap_and_gap.sql:11).
 
-Spherical web-mercator (EPSG:3857-style, sphere radius R) is implemented
-three ways from ONE formula:
-  * SQL text (dialect-shared) — used by oracle-checked queries; stays in
-    whole-stage codegen on the Spark side,
-  * numpy forward/inverse — used inside Arrow geometry kernels,
-so query and oracle cannot drift.
+Spherical web-mercator (EPSG:3857-style, sphere radius R) as SQL text
+shared by both dialects: oracle-checked queries run it in Spark's
+whole-stage codegen and in DuckDB, so query and oracle cannot drift.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 R_SPHERE = 6378137.0  # WGS84 semi-major axis (web-mercator sphere radius)
 
@@ -28,13 +23,3 @@ def mercator_y_sql(lat: str) -> str:
     return f"({R_SPHERE!r} * ln(tan(pi() / 4.0 + radians({lat}) / 2.0)))"
 
 
-def mercator_forward_np(lon: np.ndarray, lat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    x = R_SPHERE * np.radians(lon)
-    y = R_SPHERE * np.log(np.tan(np.pi / 4.0 + np.radians(lat) / 2.0))
-    return x, y
-
-
-def mercator_inverse_np(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    lon = np.degrees(x / R_SPHERE)
-    lat = np.degrees(2.0 * np.arctan(np.exp(y / R_SPHERE)) - np.pi / 2.0)
-    return lon, lat

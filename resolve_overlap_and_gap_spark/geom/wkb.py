@@ -37,10 +37,6 @@ _ONE_RING = (
 )
 
 
-def dump_point(xy) -> bytes:
-    return _HDR.pack(1, POINT) + struct.pack("<2d", float(xy[0]), float(xy[1]))
-
-
 def dump_linestring(coords: np.ndarray) -> bytes:
     c = np.ascontiguousarray(coords, dtype="<f8")
     return _HDR.pack(1, LINESTRING) + _U32.pack(len(c)) + c.tobytes()

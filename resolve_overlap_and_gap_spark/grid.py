@@ -131,26 +131,6 @@ def on_box_lines(iv: np.ndarray, box: tuple[int, int, int, int]) -> np.ndarray:
     return np.where(iv[:, 0] == 0, (c == x0) | (c == x1), (c == y0) | (c == y1))
 
 
-def neighbors_np(cell: np.int64, ring: int = 1) -> np.ndarray:
-    """Cells of the square ring at distance ``ring`` (ring 0 = the cell).
-    Used by kNN cell-ring expansion (north rule; no reference counterpart —
-    SURVEY.md §2.3 J-table note)."""
-    res = int(cell_res_np(np.array([cell]))[0])
-    n = 1 << res
-    ix, iy = cell_to_xy_np(np.array([cell]))
-    ix, iy = int(ix[0]), int(iy[0])
-    out = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            if max(abs(dx), abs(dy)) != ring:
-                continue
-            jx, jy = ix + dx, iy + dy
-            if 0 <= jy < n:
-                out.append(cell_from_xy_np(
-                    np.array([jx % n]), np.array([jy]), res)[0])
-    return np.array(sorted(set(out)), dtype=np.int64)
-
-
 def covering_cells_np(xmin, ymin, xmax, ymax, res: int) -> list[np.ndarray]:
     """Per input bbox, all cells at ``res`` intersecting it (bbox polyfill).
     This is the reference's grid<->feature `&&` join key generation

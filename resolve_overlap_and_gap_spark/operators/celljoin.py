@@ -214,16 +214,3 @@ def content_balanced_cells(
     return out
 
 
-def assign_to_balanced_cells(points: DataFrame, cells: DataFrame, max_res: int,
-                             lon: str = "px", lat: str = "py") -> DataFrame:
-    """Assign each point to its unique content-balanced cell: key the point at
-    every distinct resolution present in ``cells`` (small dim — broadcast) and
-    semi-join; a point matches exactly one balanced cell because the balanced
-    set is a proper quadtree frontier."""
-    res_list = [r["res"] for r in cells.select("res").distinct().collect()]
-    out = None
-    for r in sorted(res_list):
-        keyed = points.withColumn("cell_id", grid.cell_id_col(F.col(lon), F.col(lat), r))
-        matched = keyed.join(F.broadcast(cells.where(F.col("res") == r).select("cell_id")), "cell_id")
-        out = matched if out is None else out.unionByName(matched)
-    return out

@@ -464,29 +464,3 @@ VALIDATE_SCHEMA = T.StructType([
 ])
 
 
-def validate_coverage(features: DataFrame, cfg, res: int = 8,
-                      min_gap_area: float = 0.0) -> DataFrame:
-    """ValidateTopology analog (function_resolve_overlap_gap_run.sql:390-424
-    — 0 rows = valid): a layer is a valid coverage iff it has no overlaps
-    and no interior gaps above min_gap_area. One detection pass."""
-    from resolve_overlap_and_gap_spark.operators.overlap_gap import detect_all
-
-    det = detect_all(features, cfg, res=res)
-    agg = det.agg(
-        F.sum(F.when(F.col("kind") == "overlap", 1).otherwise(0)).alias("n_overlap_pairs"),
-        F.sum(F.when(F.col("kind") == "overlap", F.col("area")).otherwise(0.0)).alias("overlap_area"),
-        F.sum(F.when((F.col("kind") == "gap") & ~F.col("touches_border")
-                     & (F.col("area") > min_gap_area), 1).otherwise(0)).alias("n_interior_gaps"),
-        F.sum(F.when((F.col("kind") == "gap") & ~F.col("touches_border")
-                     & (F.col("area") > min_gap_area), F.col("area")).otherwise(0.0)).alias("interior_gap_area"),
-    )
-    n = features.count()
-    return agg.select(
-        F.lit(n).alias("n_features"),
-        F.coalesce(F.col("n_overlap_pairs"), F.lit(0)).alias("n_overlap_pairs"),
-        F.coalesce(F.col("overlap_area"), F.lit(0.0)).alias("overlap_area"),
-        F.coalesce(F.col("n_interior_gaps"), F.lit(0)).alias("n_interior_gaps"),
-        F.coalesce(F.col("interior_gap_area"), F.lit(0.0)).alias("interior_gap_area"),
-        ((F.coalesce(F.col("n_overlap_pairs"), F.lit(0)) == 0)
-         & (F.coalesce(F.col("n_interior_gaps"), F.lit(0)) == 0)).alias("is_valid_coverage"),
-    )

@@ -998,23 +998,3 @@ def extract_features(media: DataFrame, grid: int = 4) -> DataFrame:
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every: int = 2) -> DataFrame:
-    """Frame-sampling plumbing for video-like payloads: here each media row
-    'samples' its rows of pixels as frames (stand-in for ffmpeg seek);
-    demonstrates the explode-to-frames partition shape."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["payload"]):
-                img = _decode_image(bytes(buf))
-                for fi in range(0, img.shape[0], every):
-                    rows.append((int(mid), fi, float(img[fi].mean())))
-            yield pd.DataFrame(rows, columns=["media_id", "frame", "mean_byte"])
-
-    schema = T.StructType([
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame", T.IntegerType()),
-        T.StructField("mean_byte", T.DoubleType()),
-    ])
-    return media.mapInPandas(run, schema)

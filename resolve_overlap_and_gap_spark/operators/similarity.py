@@ -16,9 +16,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+# the brute-force baselines collect one side to the driver; above this many
+# rows that side is no longer small, and the caller belongs on the scale
+# paths (lsh_ann_topk / ivf_ann_topk, the ann_lsh / ann_ivf queries)
+DRIVER_COLLECT_MAX_ROWS = 200_000
 
-def _norm(a: str) -> F.Column:
-    return F.sqrt(F.expr(f"aggregate(transform({a}, x -> x * x), cast(0.0 as double), (acc, v) -> acc + v)"))
+
+def _collect_bounded(df: DataFrame, what: str) -> list:
+    """df.collect() with at most DRIVER_COLLECT_MAX_ROWS + 1 rows reaching
+    the driver (no separate count job); more than the bound raises."""
+    rows = df.limit(DRIVER_COLLECT_MAX_ROWS + 1).collect()
+    if len(rows) > DRIVER_COLLECT_MAX_ROWS:
+        raise ValueError(
+            f"{what}: more than {DRIVER_COLLECT_MAX_ROWS} rows to collect to "
+            "the driver; use the scale path (lsh_ann_topk / ivf_ann_topk, "
+            "queries ann_lsh / ann_ivf)")
+    return rows
 
 
 def _fold_gram(A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -35,8 +48,8 @@ def _fold_gram(A: np.ndarray, B: np.ndarray) -> np.ndarray:
 
 
 def _fold_sqnorm(A: np.ndarray) -> np.ndarray:
-    """Per-row left-fold of x*x (bit-identical to the _norm expression's
-    aggregate before its sqrt)."""
+    """Per-row left-fold of x*x (bit-identical to the Catalyst expression
+    ``aggregate(v, 0.0D, (s, x) -> s + x * x)`` before its sqrt)."""
     acc = np.zeros(A.shape[0])
     for d in range(A.shape[1]):
         acc += A[:, d] * A[:, d]
@@ -54,7 +67,9 @@ def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int) -> DataFr
     sims are bit-identical (_fold_gram), the final top-k window is
     unchanged."""
     sc = emb.sparkSession.sparkContext
-    q_rows = sorted(queries.select("qid", "qvec").collect(), key=lambda r: r.qid)
+    q_rows = sorted(_collect_bounded(queries.select("qid", "qvec"),
+                                     "cosine_topk_bruteforce queries"),
+                    key=lambda r: r.qid)
     qids = np.array([r.qid for r in q_rows], dtype=np.int64)
     Q = np.array([r.qvec for r in q_rows], dtype=np.float64)
     q_b = sc.broadcast((qids, Q))
@@ -93,7 +108,9 @@ def brute_cosine_pairs_x1e6(emb: DataFrame, threshold: float,
     folds.  Sims are bit-identical to the expression form (_fold_gram
     docstring); output: (id_a, id_b, sim_x1e6)."""
     sc = emb.sparkSession.sparkContext
-    rows = sorted(emb.select("pid", "vec").collect(), key=lambda r: r.pid)
+    rows = sorted(_collect_bounded(emb.select("pid", "vec"),
+                                   "brute_cosine_pairs_x1e6 embeddings"),
+                  key=lambda r: r.pid)
     ids = np.array([r.pid for r in rows], dtype=np.int64)
     B = np.array([r.vec for r in rows], dtype=np.float64)
     b_b = sc.broadcast((ids, B))

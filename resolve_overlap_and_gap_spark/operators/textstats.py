@@ -124,16 +124,6 @@ def html_to_text_sql(col: str, dialect: str) -> str:
     return norm_ws_sql(x, dialect)
 
 
-def html_to_text(pages: DataFrame, html_col: str = "html",
-                 id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, text) from an HTML binary/string column."""
-    src = f"decode({html_col}, 'UTF-8')"
-    return pages.selectExpr(
-        f"cast({id_col} as bigint) as doc_id",
-        f"{html_to_text_sql(src, SPARK)} as text",
-    )
-
-
 def canonical_url_sql(col: str, dialect: str) -> str:
     """Crawl URL canonicalization (the dedup key for url-level dedup of a
     Common-Crawl-style table — the input_hint's `url` column): lowercase
@@ -628,20 +618,6 @@ def mojibake_score_sql(col: str) -> str:
     leads = ["\u00c3", "\u00e2\u20ac", "\u00c2"]
     terms = [occurrences_sql(col, lead) for lead in leads]
     return "(" + " + ".join(terms) + ")"
-
-
-def mojibake_repair(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, text_fixed, moji_before, moji_after): repair encoding
-    damage and report the detection score on both sides.  Pure JVM
-    codegen (a replace chain), no shuffle at all."""
-    rep = mojibake_repair_sql(text_col)
-    return docs.selectExpr(
-        f"cast({id_col} as bigint) as doc_id",
-        f"{rep} as text_fixed",
-        f"{mojibake_score_sql(text_col)} as moji_before",
-        f"{mojibake_score_sql(f'({rep})')} as moji_after",
-    )
 
 
 def chunk_docs(docs: DataFrame, chunk: int = 64, stride: int = 48,

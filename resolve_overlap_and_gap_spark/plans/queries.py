@@ -139,8 +139,7 @@ def _tile_range_exprs(res: int) -> dict[str, str]:
 
 
 def q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector->raster tile assignment (flat tile ids for oracle parity;
-    engine-internal Morton variant in operators/tiling.py)."""
+    """Vector->raster tile assignment (flat tile ids for oracle parity)."""
     r = _tile_range_exprs(TILE_RES)
     boxes = _boxes(spark, sf_dir, "part", "p_partkey", 0.25)
     return boxes.selectExpr(
@@ -1654,29 +1653,6 @@ def q_dissolve_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def flagship(spark: SparkSession, sf_dir: str, scale: float = 8.0) -> DataFrame:
-    """Flagship pipeline: derive page footprints, overlap self-join (J2) with
-    canonical-cell dedup, then attach each left feature's canonical owner
-    tile (J4/J8). Scale factor widens footprints so even the tiny smoke
-    dataset has overlap structure."""
-    boxes = _boxes(spark, sf_dir, "part", "p_partkey", scale)
-    pairs = box_overlap_pairs(boxes, OVL_RES, id_col="bid")
-    r = _tile_range_exprs(TILE_RES)
-    assign = boxes.selectExpr(
-        "bid",
-        f"explode(flatten(transform(sequence({r['ix0']}, {r['ix1']}), "
-        f"x -> transform(sequence({r['iy0']}, {r['iy1']}), y -> x * {r['n']} + y)))) as tile_id",
-    )
-    owner = assign.groupBy("bid").agg(F.min("tile_id").alias("owner_tile"))
-    return (
-        pairs.selectExpr(
-            "id_a", "id_b",
-            "cast(floor((ixmax - ixmin) * (iymax - iymin) * 1000000.0) as bigint) as inter_area_x1e6",
-        )
-        .join(owner.withColumnRenamed("bid", "id_a"), "id_a", "left")
-    )
-
-
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs: band the 8-hash signature into 4 bands
     of 2, bucket-join per band, distinct — the scale path of minhash dedup
@@ -2660,7 +2636,7 @@ def _accent_page_sql() -> tuple:
 
 
 def q_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Encoding-damage detection + repair (textstats.mojibake_repair):
+    """Encoding-damage detection + repair (textstats.mojibake_repair_sql):
     the UTF-8-read-as-cp1252 defect -- the most common crawl mojibake --
     detected by telltale-sequence counts and repaired by the table-driven
     replace chain, all JVM codegen with no shuffle.  The fixture damages

@@ -1,67 +1,22 @@
-"""Sources: the Common-Crawl-style pages table.
+"""Sources: geometry derived from a pages table (url, warc_ts, html, text,
+lang, doc_id) — the Common-Crawl-style input BASELINE.json's input_hint
+names.
 
-BASELINE.json input_hint mandates the engine operate over
-(url:string, warc_ts:timestamp, html:binary, text:string, lang:string).
-
-Two constructors:
-  * ``pages_from_documents`` — adapt the driver-provided ``documents``
-    parquet (doc_id, text, lang, source, n_chars) into the pages shape. The
-    ``text`` column is passed through untouched (byte-identity invariant,
-    BASELINE.md correctness gate).
-  * ``synthesize_pages`` — deterministic seeded generator for tests/bench at
-    arbitrary row counts (no external data; FIXTURES.md F0).
-
-Geometry is NOT stored — it is derived on the fly by derive.py formulas, so
-any pages DataFrame gains (px, py[, footprint box]) via ``with_point`` /
-``with_footprint`` without a Python UDF.
+Geometry is NOT stored: points and boxes derive from the row key by the
+derive.py formulas (shared with the DuckDB oracles), and the WKB footprints
+below are built around those derived columns.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from resolve_overlap_and_gap_spark import derive
 from resolve_overlap_and_gap_spark.geom import wkb as _wkb
-
-
-def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    doc = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return doc.select(
-        F.concat(F.lit("http://"), F.col("source"), F.lit("/"), F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.encode(F.col("text"), "UTF-8").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-        F.col("doc_id"),
-    )
-
-
-def synthesize_pages(spark: SparkSession, n: int, partitions: int = 32) -> DataFrame:
-    """Seeded deterministic pages table of ``n`` rows, generated JVM-side
-    (spark.range + built-ins; no Python, no external data)."""
-    df = spark.range(0, n, 1, partitions)
-    return df.select(
-        F.concat(F.lit("http://site-"), (F.col("id") % 1000).cast("string"),
-                 F.lit(".example/page/"), F.col("id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.encode(F.concat(F.lit("<html><body>doc "), F.col("id").cast("string"),
-                          F.lit("</body></html>")), "UTF-8").alias("html"),
-        F.concat(F.lit("synthetic document body number "), F.col("id").cast("string"),
-                 F.lit(" with deterministic text payload")).alias("text"),
-        F.when(F.col("id") % 5 == 0, "no").otherwise("en").alias("lang"),
-        F.col("id").alias("doc_id"),
-    )
-
-
-def with_point(df: DataFrame, key_col: str = "doc_id") -> DataFrame:
-    """Derive the page's lon/lat point (geo-parse stage) — JVM expressions."""
-    return df.withColumn("px", F.expr(derive.lon_sql(key_col, derive.SPARK))).withColumn(
-        "py", F.expr(derive.lat_sql(key_col, derive.SPARK))
-    )
 
 
 def _ngon_footprint_kernel(pid: pd.Series, px: pd.Series, py: pd.Series,
@@ -115,22 +70,11 @@ def with_ngon_footprint(df: DataFrame, scale: float = 1.0,
     return df.withColumn("geom", ngon(F.col(id_col), F.col("px"), F.col("py")))
 
 
-def with_footprint(df: DataFrame, key_col: str = "doc_id", scale: float = 1.0) -> DataFrame:
-    """Derive the page's footprint box (xmin/ymin/xmax/ymax)."""
-    b = derive.box_sql(key_col, derive.SPARK, scale)
-    out = df
-    for k, v in b.items():
-        out = out.withColumn(k, F.expr(v))
-    return out
-
-
 def with_regular_ngon(df: DataFrame, k: int = 8, scale: float = 1.0,
                       id_col: str = "pid") -> DataFrame:
     """Regular convex k-gon WKB footprint from the derive.regular_ngon
     formula — numpy mirror of the SQL so oracle vertices match exactly.
-    Needs derived px/py columns (with_point / derive.point_select)."""
-    from resolve_overlap_and_gap_spark import derive
-
+    Needs derived px/py columns (derive.point_select)."""
     @F.pandas_udf(T.BinaryType())
     def ngon(px: pd.Series, py: pd.Series, hw: pd.Series,
              hrot: pd.Series) -> pd.Series:

@@ -13,7 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from resolve_overlap_and_gap_spark.geom.arrangement import overlay
+from resolve_overlap_and_gap_spark.geom.arrangement import overlay_cells, union_cells
 
 
 def sq(x0, y0, x1, y1):
@@ -46,7 +46,7 @@ def boxes_cover_oracle(boxes):
 
 
 def test_single_square():
-    faces = overlay([(7, [sq(0, 0, 10, 10)])])
+    faces = overlay_cells([(0, [(7, [sq(0, 0, 10, 10)])])])[0]
     assert len(faces) == 1
     f = faces[0]
     assert f.cover == frozenset([7])
@@ -55,7 +55,7 @@ def test_single_square():
 
 
 def test_two_overlapping_squares():
-    faces = overlay([(1, [sq(0, 0, 10, 10)]), (2, [sq(5, 5, 15, 15)])])
+    faces = overlay_cells([(0, [(1, [sq(0, 0, 10, 10)]), (2, [sq(5, 5, 15, 15)])])])[0]
     got = areas_by_cover(faces)
     assert got == {
         frozenset([1]): 75.0,
@@ -65,14 +65,14 @@ def test_two_overlapping_squares():
 
 
 def test_disjoint_squares():
-    faces = overlay([(1, [sq(0, 0, 2, 2)]), (2, [sq(10, 10, 12, 12)])])
+    faces = overlay_cells([(0, [(1, [sq(0, 0, 2, 2)]), (2, [sq(10, 10, 12, 12)])])])[0]
     got = areas_by_cover(faces)
     assert got == {frozenset([1]): 4.0, frozenset([2]): 4.0}
 
 
 def test_donut_hole():
     # polygon with hole: shell 0..10, hole 3..7
-    faces = overlay([(1, [sq(0, 0, 10, 10), sq(3, 3, 7, 7)])])
+    faces = overlay_cells([(0, [(1, [sq(0, 0, 10, 10), sq(3, 3, 7, 7)])])])[0]
     got = areas_by_cover(faces)
     # hole interior has empty cover -> excluded from dict (area2 != 0 but cover empty)
     assert got[frozenset([1])] == 100.0 - 16.0
@@ -84,7 +84,7 @@ def test_donut_hole():
 
 def test_nested_components():
     # small square strictly inside big square (separate polygons, no edges shared)
-    faces = overlay([(1, [sq(0, 0, 10, 10)]), (2, [sq(4, 4, 6, 6)])])
+    faces = overlay_cells([(0, [(1, [sq(0, 0, 10, 10)]), (2, [sq(4, 4, 6, 6)])])])[0]
     got = areas_by_cover(faces)
     assert got == {frozenset([1]): 96.0, frozenset([1, 2]): 4.0}
     big = [f for f in faces if f.cover == frozenset([1])][0]
@@ -93,7 +93,7 @@ def test_nested_components():
 
 def test_shared_edge_neighbors():
     # two squares sharing an edge: no overlap, both faces present
-    faces = overlay([(1, [sq(0, 0, 5, 10)]), (2, [sq(5, 0, 10, 10)])])
+    faces = overlay_cells([(0, [(1, [sq(0, 0, 5, 10)]), (2, [sq(5, 0, 10, 10)])])])[0]
     got = areas_by_cover(faces)
     assert got == {frozenset([1]): 50.0, frozenset([2]): 50.0}
 
@@ -102,7 +102,7 @@ def test_triangle_crossing_square():
     # right triangle whose hypotenuse meets the square at integer points
     # (5,15) and (15,5): the snapped arrangement is exact here
     tri = np.array([[0, 0], [20, 0], [0, 20]], dtype=np.int64)
-    faces = overlay([(1, [tri]), (2, [sq(5, 5, 15, 15)])])
+    faces = overlay_cells([(0, [(1, [tri]), (2, [sq(5, 5, 15, 15)])])])[0]
     got = areas_by_cover(faces)
     total_tri = sum(v for k, v in got.items() if 1 in k)
     total_sq = sum(v for k, v in got.items() if 2 in k)
@@ -115,7 +115,7 @@ def test_snapping_moves_offgrid_intersections():
     """With a coarse grid, off-grid crossings snap to integers and areas
     shift by O(perimeter x grid) — the documented ST_SnapToGrid semantics."""
     tri = np.array([[0, 0], [20, 0], [10, 18]], dtype=np.int64)
-    faces = overlay([(1, [tri]), (2, [sq(5, 5, 15, 15)])])
+    faces = overlay_cells([(0, [(1, [tri]), (2, [sq(5, 5, 15, 15)])])])[0]
     got = areas_by_cover(faces)
     total_tri = sum(v for k, v in got.items() if 1 in k)
     assert total_tri == pytest.approx(180.0, abs=0.05 * 180.0)
@@ -134,7 +134,7 @@ def test_snapping_moves_offgrid_intersections():
 def test_random_boxes_match_compression_oracle(raw):
     boxes = [(x, y, x + w, y + h) for x, y, w, h in raw]
     polys = [(k, [sq(*b)]) for k, b in enumerate(boxes)]
-    got = areas_by_cover(overlay(polys))
+    got = areas_by_cover(overlay_cells([(0, polys)])[0])
     got = {k: v for k, v in got.items() if k}  # drop empty-cover faces
     want = boxes_cover_oracle(boxes)
     assert got == want
@@ -144,11 +144,11 @@ def test_overlap_and_gap_vs_universe():
     """The detection semantics: universe cell + two overlapping polys.
     gap = cover {U} area; overlap = cover containing both polys."""
     U = 99
-    faces = overlay([
+    faces = overlay_cells([(0, [
         (U, [sq(0, 0, 20, 20)]),
         (1, [sq(2, 2, 10, 10)]),
         (2, [sq(8, 8, 16, 16)]),
-    ])
+    ])])[0]
     got = areas_by_cover(faces)
     overlap = sum(v for k, v in got.items() if 1 in k and 2 in k)
     gap = got.get(frozenset([U]), 0.0)
@@ -157,18 +157,15 @@ def test_overlap_and_gap_vs_universe():
 
 
 def test_union_faces_hole_semantics():
-    """Regression: union_faces must not fill holes (the hole-interior walk
+    """Regression: a union must not fill holes (the hole-interior walk
     has winding 0), must not attach island-surround walks as holes, and a
     cross-part hole (two C-shapes forming an annulus) must reassemble."""
-    import numpy as np
-    from resolve_overlap_and_gap_spark.geom.arrangement import union_faces
-
     left = [np.array([[0, 0], [50, 0], [50, 40], [40, 40], [40, 60], [50, 60],
                       [50, 100], [0, 100]], dtype=np.int64)]
     right = [np.array([[50, 0], [100, 0], [100, 100], [50, 100], [50, 60],
                        [60, 60], [60, 40], [50, 40]], dtype=np.int64)]
-    out = union_faces([(0, left), (0, right)])
+    out = union_cells([(0, [(0, left), (0, right)])])[0]
     assert [(f.area2, len(f.holes)) for f in out] == [(19200, 1)]
     island = [np.array([[45, 45], [55, 45], [55, 55], [45, 55]], dtype=np.int64)]
-    out2 = union_faces([(0, left), (0, right), (0, island)])
+    out2 = union_cells([(0, [(0, left), (0, right), (0, island)])])[0]
     assert sorted((f.area2, len(f.holes)) for f in out2) == [(200, 0), (19200, 1)]

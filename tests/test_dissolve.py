@@ -9,7 +9,7 @@ from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.core import bbox_pairs, components
 from resolve_overlap_and_gap_spark.operators.dissolve import dissolve
 from resolve_overlap_and_gap_spark.operators.resolve import resolve
-from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+from tests.fixtures import tiling_df
 
 G = 1e-5
 

@@ -39,15 +39,6 @@ def test_parent_child():
     assert grid.parent_np(c11) == c
 
 
-def test_neighbors_ring():
-    c = grid.cell_id_np(np.array([0.0]), np.array([0.0]), 8)[0]
-    ring1 = grid.neighbors_np(c, 1)
-    assert len(ring1) == 8
-    ring2 = grid.neighbors_np(c, 2)
-    assert len(ring2) == 16
-    assert c not in set(ring1.tolist())
-
-
 def test_covering_cells():
     cells = grid.covering_cells_np(
         np.array([0.1]), np.array([0.1]), np.array([2.0]), np.array([2.0]), 8

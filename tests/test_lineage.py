@@ -12,7 +12,7 @@ from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.lineage import Lineage, run_stage_checkpointed
 from resolve_overlap_and_gap_spark.operators.overlap_gap import with_cells
 from resolve_overlap_and_gap_spark.operators.resolve import resolve, resolve_cells
-from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+from tests.fixtures import tiling_df
 
 CFG = EngineConfig(snap_tolerance=1e-5, min_area_to_keep=5e-4)
 RES = 8

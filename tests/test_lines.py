@@ -2,13 +2,9 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.operators.lines import polygonize_lines, validate_coverage
-from resolve_overlap_and_gap_spark.operators.resolve import resolve
-from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+from resolve_overlap_and_gap_spark.operators.lines import polygonize_lines
 
 G = 1e-5
 
@@ -53,25 +49,6 @@ def test_polygonize_crossing_lines(spark):
     assert len(faces) == 4
     assert sum(f.area for f in faces) == pytest.approx(4.0, rel=1e-9)
 
-
-@pytest.mark.spark
-def test_validate_coverage(spark):
-    cfg = EngineConfig(snap_tolerance=1e-5, min_area_to_keep=5e-4)
-    dirty = tiling_df(spark, k=5, cell=0.1, jitter=0.015, seed=9)
-    v1 = validate_coverage(dirty, cfg, res=8).collect()[0]
-    assert not v1.is_valid_coverage and v1.n_overlap_pairs > 0
-
-    clean_pieces = resolve(dirty, cfg, res=8)
-    relabeled = clean_pieces.select(
-        F.monotonically_increasing_id().alias("fid"), "geom"
-    )
-    # after resolve: zero overlaps, and every remaining interior gap is
-    # ABOVE min_area (large genuine gaps stay, like the reference's)
-    v_all = validate_coverage(relabeled, cfg, res=8, min_gap_area=0.0).collect()[0]
-    v_big = validate_coverage(relabeled, cfg, res=8,
-                              min_gap_area=cfg.min_area_to_keep).collect()[0]
-    assert v_all.n_overlap_pairs == 0
-    assert v_all.n_interior_gaps == v_big.n_interior_gaps  # no slivers left
 
 @pytest.mark.spark
 def test_polygonize_distributed_matches_single(spark):

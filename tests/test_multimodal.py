@@ -12,7 +12,6 @@ from resolve_overlap_and_gap_spark.operators.multimodal import (
     _decode_png,
     encode_png,
     extract_features,
-    frame_sample,
     synthesize_media,
 )
 
@@ -45,16 +44,6 @@ def test_png_and_fake_payloads_give_identical_features(spark):
         )
 
     assert feats("png") == feats("fake")
-
-
-@pytest.mark.spark
-def test_frame_sample_shape(spark):
-    media = synthesize_media(spark, 10, partitions=2)
-    frames = frame_sample(media, every=8)
-    per = frames.groupBy("media_id").count().collect()
-    heights = {r.media_id: r.meta_h for r in media.select("media_id", "meta_h").collect()}
-    for r in per:
-        assert r["count"] == -(-heights[r.media_id] // 8)  # ceil
 
 
 def test_png_roundtrip_all_channel_counts():
@@ -187,10 +176,7 @@ def test_decode_rejects_unsupported_formats():
 def test_text_passthrough_byte_identity(spark):
     """BASELINE.md invariant: per-url extracted text stays byte-identical
     through the geo-parse + cell-assign pipeline."""
-    from resolve_overlap_and_gap_spark.sources.pages import (
-        synthesize_pages,
-        with_point,
-    )
+    from tests.fixtures import synthesize_pages, with_point
     from resolve_overlap_and_gap_spark.operators.celljoin import points_with_cell
 
     pages = synthesize_pages(spark, 500, partitions=4)

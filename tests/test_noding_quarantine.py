@@ -21,7 +21,7 @@ from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.geom.arrangement import (
     NodingError,
     node_segments,
-    overlay,
+    overlay_cells,
     rings_to_segments,
 )
 from resolve_overlap_and_gap_spark.operators.resolve import (
@@ -50,9 +50,9 @@ def test_node_segments_raises_out_of_budget():
 
 
 def test_overlay_quarantines_and_continues():
-    q: list[int] = []
-    faces = overlay(POLYS, noding_max_iter=1, quarantine=q)
-    assert q == [1]
+    q: dict = {}
+    faces = overlay_cells([(0, POLYS)], noding_max_iter=1, quarantine_of=q)[0]
+    assert q == {0: [1]}
     covers = {frozenset(f.cover) for f in faces}
     # P3 lies inside P2: its face is covered by both
     assert frozenset([2]) in covers and frozenset([2, 3]) in covers

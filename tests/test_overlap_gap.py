@@ -17,7 +17,7 @@ from resolve_overlap_and_gap_spark.operators.overlap_gap import (
     _detect_bucket,
     detect_all,
 )
-from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+from tests.fixtures import tiling_df
 
 CFG = EngineConfig(snap_tolerance=1e-5)
 
@@ -79,7 +79,7 @@ def test_cell_partition_is_exact(spark, fixture_df):
     sum of all face areas (covered + gaps, incl. holes) equals the cell area
     exactly in integer grid units (the ValidateTopology analog)."""
     from resolve_overlap_and_gap_spark import grid as G
-    from resolve_overlap_and_gap_spark.geom.arrangement import overlay
+    from resolve_overlap_and_gap_spark.geom.arrangement import overlay_cells
     from resolve_overlap_and_gap_spark.operators.overlap_gap import (
         UNIVERSE, _cell_prep, with_cells,
     )
@@ -90,7 +90,8 @@ def test_cell_partition_is_exact(spark, fixture_df):
     for cell_id, pdf in pdfs.groupby("cell_id"):
         g = CFG.snap_tolerance
         (cx0, cy0, cx1, cy1), polys = _cell_prep(int(cell_id), pdf, g)
-        faces = overlay(polys, noding_max_iter=CFG.noding_max_iter)
+        faces = overlay_cells([(0, polys)],
+                              noding_max_iter=CFG.noding_max_iter)[0]
         # the box _cell_prep derived is the cell's own bounds
         xmin, ymin, xmax, ymax = G.cell_bounds_np(np.array([cell_id]))
         assert (cx0, cy0) == (int(np.floor(xmin[0] / g + 0.5)),

@@ -1,12 +1,12 @@
-"""overlay_cells (batched multi-cell arrangement) must equal per-cell
-overlay() exactly: same faces (shells, holes, windings, exact areas), same
+"""overlay_cells (batched multi-cell arrangement) must equal overlay_cells
+over each cell alone exactly: same faces (shells, holes, windings, exact areas), same
 adjacency dicts (float-sum equality included), same quarantine sets."""
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from resolve_overlap_and_gap_spark.geom.arrangement import overlay, overlay_cells
+from resolve_overlap_and_gap_spark.geom.arrangement import overlay_cells
 from resolve_overlap_and_gap_spark.operators.overlap_gap import UNIVERSE
 
 
@@ -75,10 +75,10 @@ def test_overlay_cells_equals_per_cell(seed, option):
     kw = SIMPLIFY if option == "simplify_chaikin_frozen" else {}
 
     got = overlay_cells(items, with_adjacency=True, noding_max_iter=8, **kw)
-    for key, polys, *opt in items:
-        exp_faces, exp_adj = overlay(
-            polys, with_adjacency=True, frozen_box=opt[0] if opt else None,
-            cut_lines=opt[1] if len(opt) > 1 else None, **kw)
+    for item in items:
+        key = item[0]
+        exp_faces, exp_adj = overlay_cells([item], with_adjacency=True,
+                                           **kw)[key]
         got_faces, got_adj = got[key]
         assert [_face_sig(f) for f in got_faces] == \
             [_face_sig(f) for f in exp_faces], key
@@ -97,7 +97,8 @@ def test_overlay_cells_adjacent_cells_share_borders():
         items.append((ci, _rand_cell_polys(rng, gx, 0, size, 5)))
     got = overlay_cells(items, with_adjacency=True)
     for key, polys in items:
-        exp_faces, exp_adj = overlay(polys, with_adjacency=True)
+        exp_faces, exp_adj = overlay_cells([(key, polys)],
+                                           with_adjacency=True)[key]
         got_faces, got_adj = got[key]
         assert [_face_sig(f) for f in got_faces] == \
             [_face_sig(f) for f in exp_faces]
@@ -105,10 +106,10 @@ def test_overlay_cells_adjacent_cells_share_borders():
 
 
 def test_overlay_cells_quarantine_matches():
-    """A non-converging cell quarantines the same pids as per-cell overlay,
-    and other cells are unaffected."""
+    """A non-converging cell quarantines the same pids as run alone, and
+    other cells are unaffected."""
     # craft a cell whose noding cannot converge in 0 rounds: any crossing
-    # pair with max_iter=0 raises; per-cell overlay quarantines pid>=0
+    # pair with max_iter=0 raises; a lone cell quarantines pid>=0
     box = np.array([[0, 0], [40, 0], [40, 40], [0, 40]], np.int64)
     tri1 = np.array([[1, 1], [21, 2], [3, 17]], np.int64)
     tri2 = np.array([[2, 9], [22, 10], [4, 30]], np.int64)
@@ -116,18 +117,19 @@ def test_overlay_cells_quarantine_matches():
     ok_cell = [(0, [np.array([[2, 2], [12, 2], [7, 9]], np.int64)]),
                (UNIVERSE, [box])]
 
-    q_ref: list[int] = []
-    ref = overlay(bad_cell, with_adjacency=True, noding_max_iter=0,
-                  quarantine=q_ref)
+    q_ref: dict = {}
+    ref = overlay_cells([(0, bad_cell)], with_adjacency=True,
+                        noding_max_iter=0, quarantine_of=q_ref)[0]
     q_got: dict = {}
     got = overlay_cells([("bad", bad_cell), ("ok", ok_cell)],
                         with_adjacency=True, noding_max_iter=0,
                         quarantine_of=q_got)
-    assert sorted(q_got.get("bad", [])) == sorted(q_ref)
+    assert sorted(q_got.get("bad", [])) == sorted(q_ref.get(0, []))
     assert [_face_sig(f) for f in got["bad"][0]] == \
         [_face_sig(f) for f in ref[0]]
     assert got["bad"][1] == ref[1]
-    ok_ref = overlay(ok_cell, with_adjacency=True, noding_max_iter=0)
+    ok_ref = overlay_cells([(0, ok_cell)], with_adjacency=True,
+                           noding_max_iter=0)[0]
     assert [_face_sig(f) for f in got["ok"][0]] == \
         [_face_sig(f) for f in ok_ref[0]]
 

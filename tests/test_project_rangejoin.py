@@ -1,4 +1,4 @@
-"""Tests for reprojection (ST_Transform analog) and the interval join."""
+"""Tests for the interval join and the point-in-polygon join."""
 
 from __future__ import annotations
 
@@ -8,24 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from resolve_overlap_and_gap_spark.geom.project import (
-    mercator_forward_np,
-    mercator_inverse_np,
-)
 from resolve_overlap_and_gap_spark.operators.rangejoin import interval_count_join
-
-
-def test_mercator_roundtrip_np():
-    rng = np.random.default_rng(3)
-    lon = rng.uniform(-180, 180, 1000)
-    lat = rng.uniform(-85, 85, 1000)
-    x, y = mercator_forward_np(lon, lat)
-    lon2, lat2 = mercator_inverse_np(x, y)
-    assert np.allclose(lon, lon2, atol=1e-9)
-    assert np.allclose(lat, lat2, atol=1e-9)
-    # known anchor: equator/prime meridian maps to origin
-    x0, y0 = mercator_forward_np(np.array([0.0]), np.array([0.0]))
-    assert abs(x0[0]) < 1e-9 and abs(y0[0]) < 1e-9
 
 
 @pytest.mark.spark

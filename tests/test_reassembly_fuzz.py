@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 from resolve_overlap_and_gap_spark import grid
 from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
-from resolve_overlap_and_gap_spark.geom.arrangement import union_faces
+from resolve_overlap_and_gap_spark.geom.arrangement import union_cells
 from resolve_overlap_and_gap_spark.operators.border import (
     pack_intervals,
     reassemble_border_gaps,
@@ -52,7 +52,7 @@ def _rand_rects(rng: np.random.Generator, n: int) -> list[np.ndarray]:
 
 def _global_parts(rects) -> list[tuple[float, tuple[int, int, int, int]]]:
     """(area_units2, bbox) per connected part of the union."""
-    faces = union_faces([(i, [r]) for i, r in enumerate(rects)])
+    faces = union_cells([(0, [(i, [r]) for i, r in enumerate(rects)])])[0]
     out = []
     for f in faces:
         if f.area2 <= 0:
@@ -92,7 +92,7 @@ def _per_cell_rows(rects, min_area_units2: float):
                 polys.append((i, clipped))
         if not polys:
             continue
-        for f in union_faces(polys):
+        for f in union_cells([(0, polys)])[0]:
             if f.area2 <= 0:
                 continue
             coords = np.vstack([f.shell] + f.holes) if f.holes else f.shell

@@ -16,7 +16,7 @@ from resolve_overlap_and_gap_spark.operators.resolve import (
     mark_valid,
     resolve,
 )
-from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+from tests.fixtures import tiling_df
 
 # min_area = 1e-4 deg^2 >> sliver sizes (jitter 0.02 * edge 0.1 ~ 2e-3...)
 CFG = EngineConfig(snap_tolerance=1e-5, min_area_to_keep=5e-4)

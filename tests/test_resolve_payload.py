@@ -45,7 +45,7 @@ def test_payload_rides_through_kernel(spark):
 def test_int64_payload_exact_beside_border_gap_rows(spark):
     """GAP_OWNER/KILL_OWNER rows carry a null payload; an int64 payload
     above 2^53 must still come back exact on every piece row."""
-    from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+    from tests.fixtures import tiling_df
 
     big = 2 ** 53 + 1
     layer = tiling_df(spark, k=6, cell=0.12, origin=(5, 55), jitter=0.018,

@@ -10,10 +10,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from resolve_overlap_and_gap_spark.operators import similarity
 from resolve_overlap_and_gap_spark.operators.similarity import (
     _fold_gram,
     _fold_sqnorm,
     brute_cosine_pairs_x1e6,
+    cosine_topk_bruteforce,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -103,3 +105,23 @@ def test_simhash_canonical_band_equals_distinct(spark):
         .where(F.col("hamming") <= 3)
         .distinct().collect())}
     assert new == old and len(new) > 0
+
+
+@pytest.mark.spark
+def test_brute_driver_collects_are_bounded(spark, monkeypatch):
+    """Both brute baselines collect one side to the driver: above
+    DRIVER_COLLECT_MAX_ROWS they refuse and name the scale path; at the
+    bound they still run."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").selectExpr(
+        "vec_id as pid", "transform(embedding, x -> cast(x as double)) as vec"
+    )
+    qs = emb.where("pid % 50 = 0").selectExpr("pid as qid", "vec as qvec")
+    n_emb, n_qs = emb.count(), qs.count()
+    monkeypatch.setattr(similarity, "DRIVER_COLLECT_MAX_ROWS", n_qs - 1)
+    with pytest.raises(ValueError, match="ann_lsh / ann_ivf"):
+        cosine_topk_bruteforce(emb, qs, 3)
+    monkeypatch.setattr(similarity, "DRIVER_COLLECT_MAX_ROWS", n_emb - 1)
+    with pytest.raises(ValueError, match="ann_lsh / ann_ivf"):
+        brute_cosine_pairs_x1e6(emb, 0.2)
+    monkeypatch.setattr(similarity, "DRIVER_COLLECT_MAX_ROWS", n_qs)
+    assert cosine_topk_bruteforce(emb, qs, 3).count() == 3 * n_qs

@@ -13,7 +13,7 @@ from resolve_overlap_and_gap_spark.config import EngineConfig
 from resolve_overlap_and_gap_spark.geom import wkb
 from resolve_overlap_and_gap_spark.operators.overlap_gap import detect_all
 from resolve_overlap_and_gap_spark.operators.resolve import resolve
-from resolve_overlap_and_gap_spark.sources.fixtures import tiling_df
+from tests.fixtures import tiling_df
 
 
 def _wiggly_pair(spark):

@@ -1,5 +1,5 @@
 """union_cells (batched, cell-tagged dissolve) must give every item exactly
-what union_faces gives it alone: same faces in the same order, same
+what union_cells gives it alone: same faces in the same order, same
 shells and holes (vertex order, winding direction), same winding dicts and
 exact areas — also when items overlap or share coordinates."""
 from __future__ import annotations
@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from resolve_overlap_and_gap_spark.geom.arrangement import union_cells, union_faces
+from resolve_overlap_and_gap_spark.geom.arrangement import union_cells
 
 
 def _rand_polys(rng, x0, y0, size, n_polys):
@@ -45,8 +45,9 @@ def _assert_each_alone(items):
     got = union_cells(items)
     assert list(got) == [key for key, _ in items]
     for key, polys in items:
+        alone = union_cells([(key, polys)])[key]
         assert [_face_sig(f) for f in got[key]] == \
-            [_face_sig(f) for f in union_faces(polys)], key
+            [_face_sig(f) for f in alone], key
     return got
 
 

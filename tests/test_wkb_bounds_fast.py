@@ -5,6 +5,8 @@ and one-part/one-ring multipolygons of many sizes take the vectorized
 path; multi-ring/multipart/linestring/point take the fallback."""
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pandas as pd
 
@@ -31,7 +33,7 @@ def _blobs():
         [np.vstack([hole * 5, hole[:1] * 5])],
         [np.vstack([hole * 2, hole[:1] * 2])]]))
     other = [wkb.dump_linestring(rng.normal(size=(5, 2))),
-             wkb.dump_point((1.5, -2.5))]
+             struct.pack("<BI2d", 1, wkb.POINT, 1.5, -2.5)]
     return polygonal, other
 
 
